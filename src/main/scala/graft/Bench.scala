@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness: wall-clock per declared query at the driver's
@@ -19,28 +18,13 @@ object Bench {
     // The shared engine posture (EngineSession) carries every
     // execution-affecting conf — see its scaladoc for the rationale
     // per flag; a runner must never re-enumerate them.
-    val builder = EngineSession.builder(s"local[$cpus]", cpus)
-    // Dev knob: extra confs as ;-separated k=v pairs, for A/B-ing
-    // scheduler/AQE settings without editing code. Driver sets none.
-    sys.env.get("GRAFT_BENCH_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up: JVM/codegen/parquet-footer costs must not be charged to
     // whichever query happens to run first (round-1: +7s on q_agg_stats).
     ops.Tables.names.foreach { n =>
-      try {
-        val df = ops.Tables.t(spark, sfDir, n)
-        // Dev knob: pin base tables in the columnar in-memory cache
-        // during warm-up (A/B: how much of the total is parquet
-        // re-decode vs scheduling). Driver runs without it.
-        if (sys.env.contains("GRAFT_BENCH_CACHE")) df.cache()
-        df.count()
-      }
+      try ops.Tables.t(spark, sfDir, n).count()
       catch { case scala.util.control.NonFatal(_) => () }
     }
     // Exercise the physical-operator paths whose first use pays a
@@ -121,13 +105,7 @@ object Bench {
     // pass 2 still leaves a complete pass-1 result on disk.
     val passes =
       math.max(1, sys.env.getOrElse("GRAFT_BENCH_PASSES", "2").toInt)
-    // GRAFT_BENCH_ONLY=q_a,q_b restricts the sweep (local per-query
-    // A/B iteration; the driver never sets it, so its runs stay full).
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
     val best = scala.collection.mutable.Map.empty[String, Double]
     var attempted = Set.empty[String]
     // errors = attempted but never-yet-succeeded, recomputed at every

@@ -249,7 +249,10 @@ object ExtOps {
             && $"alpha_frac" >= 0.8 && $"sym_ratio" <= 0.1
             && $"n_stop" >= 2, 1L).otherwise(0L)).as("n_gopher_pass"),
           round(avg($"quality"), 4).as("avg_quality"))
-        .join(exactDup, Seq("lang"))
+        // Null-safe: a NULL lang is one group in both aggregates, and a
+        // plain equi-join back would drop its row.
+        .join(exactDup.withColumnRenamed("lang", "xlang"),
+          $"lang" <=> $"xlang")
         .select($"lang", $"n_docs", $"token_mass", $"n_exact_dupes",
           $"n_neardup_dropped", $"n_gopher_pass", $"avg_quality")
         .orderBy($"lang")
@@ -951,21 +954,13 @@ object ExtOps {
         .where($"col" =!= "") // engine-version-proof trailing-empty guard
         .select($"doc_id", $"pos",
           ($"doc_id" * (1L << 20) + $"pos").as("gid"), $"col".as("c"))
-      // cls_3 is computed MAP-SIDE, no relabel shuffle: each char's
-      // code point (ascii() returns it for any unicode char) fits 21
-      // bits (max U+10FFFF; +1 keeps 0 free as the past-doc-end
-      // sentinel), so three shifted-or-ed components pack one
-      // position's 3-char prefix into ONE injective long — ≤ 63 bits,
-      // no hash, exact. Injective is all the census needs; the
-      // binary-doubling version's min-gid labels only ever served as
-      // grouping keys, and its cls_1 round paid a groupBy + join-back
-      // (two n-row shuffles) for them.
       // cls_1 is the character's CODE POINT (ascii() returns it for
       // any unicode char) — an injective long labeling of single-char
       // equality classes computed MAP-SIDE, replacing the min-gid
       // groupBy + join-back round (two n-row shuffles) the binary-
       // doubling version paid for cls_1. Injective is all the census
       // needs; min-gid labels only ever served as grouping keys.
+      // OpsSpec pins ascii() injectivity on multibyte chars.
       val c0 = ch.select($"doc_id", $"pos", $"gid",
         ascii($"c").cast("long").as("cls"))
       // ONE 6-ary relabel round: key each position on the 6-tuple of

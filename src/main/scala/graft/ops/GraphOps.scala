@@ -50,7 +50,11 @@ object GraphOps {
     * by id" cut would systematically keep low ids). One PARTITIONED
     * window keyed on the customer — never global; the per-group heap
     * (WindowGroupLimit) prunes to cap rows map-side before the
-    * shuffle. */
+    * shuffle.
+    *
+    * Precondition: `c` is never NULL — the count join back on `c` is
+    * an equi-join and drops NULL-keyed rows. Both callers key `c` on
+    * `o_custkey`, a foreign key with no NULLs (FIXTURES.md). */
   private[graft] def capNeighbors(e: org.apache.spark.sql.DataFrame,
       cap: Int): org.apache.spark.sql.DataFrame = {
     // Hot-key special-casing (guide §2.5): only groups OVER the cap
@@ -93,8 +97,8 @@ object GraphOps {
     * shuffles: the |E|-sized edge table is laid out on the key ONCE
     * at write time, which is the entire point — per iteration the
     * data moved is O(|V|), not O(|E|). Pinned in PlanShapeSpec (no
-    * BroadcastExchange on the rank join; edges side exchange-free);
-    * crossover measured in tools/PageRankScale. */
+    * BroadcastExchange on the rank join; edges side exchange-free).
+    * Broadcast↔co-partitioned crossover (|V|≈4M): BUILD_NOTES.md. */
   private[graft] def rankStep(edgesW: org.apache.spark.sql.DataFrame,
       r: org.apache.spark.sql.DataFrame, n: Long, broadcastRank: Boolean)
       : org.apache.spark.sql.DataFrame = {
@@ -820,8 +824,8 @@ object GraphOps {
     * this as a SEPARATELY-TIMED step when its sweep enters the
     * q_graph_ family, so the shared build cost shows as its own
     * `_memo_graph` line instead of being mis-attributed to whichever
-    * graph query runs alphabetically first (r10: q_graph_bfs's 4.2 s
-    * bench row was ~3 s of this memo, per tools/BfsScale). */
+    * graph query runs alphabetically first.
+    * Memo share of q_graph_bfs's row (~3 of 4.5 s): BUILD_NOTES.md. */
   private[graft] def warmSharedMemo(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     tradeEdges(s, d).count()
@@ -1104,11 +1108,8 @@ object GraphOps {
     * oracle is unchanged. What changes is the COST: late rounds join
     * |frontier| rows against the edges instead of |reached| — at
     * 100× scale that is the difference between `rounds` full-table
-    * relaxations and `rounds` shrinking ones (tools/SsspScale prints
-    * the per-round frontier vs reached counts — measured at sf0.1:
-    * frontiers 679 / 999 / 14868 / 819 / 9912 / 63 / 438 / 0 against
-    * a reached set that saturates at 15999 by round 3 and would
-    * otherwise re-relax in full for rounds 4-8).
+    * relaxations and `rounds` shrinking ones.
+    * Per-round frontier vs reached counts at sf0.1: BUILD_NOTES.md.
     *
     * FIXED round count with zero driver actions (the q_graph_kcore
     * discipline): relaxation is monotone (distances only decrease,
@@ -1135,8 +1136,8 @@ object GraphOps {
     // SHUFFLE_HASH-hints the relax and frontier joins (the hint
     // survives AQE re-planning) and pairs with src-bucketed edges so
     // the |E| side stays exchange-free — the co-partitioned PageRank
-    // shape. Strategy agreement is pinned in OpsSpec; measured in
-    // tools/SsspScale.
+    // shape. Strategy agreement is pinned in OpsSpec.
+    // Broadcast vs keyed A/B at sf0.1 (tied): BUILD_NOTES.md.
     def side(df: org.apache.spark.sql.DataFrame) =
       if (broadcastDist) broadcast(df) else df.hint("shuffle_hash")
     // State = (node, dist, prev): prev is the node's distance BEFORE
@@ -1167,37 +1168,6 @@ object GraphOps {
         .transform(Tables.ck)
     }
     state.select(col("node"), col("dist"))
-  }
-
-  /** Per-round frontier/reached sizes of [[ssspDist]]'s frontier-delta
-    * relaxation — the measurement behind the scaladoc's shrinking-
-    * frontier claim, driver-side (dev tools/specs only; the declared
-    * query runs zero driver actions). Returns (round, |frontier|,
-    * |reached|) per round. */
-  private[graft] def ssspFrontierSizes(edges: org.apache.spark.sql.DataFrame,
-      seed: org.apache.spark.sql.DataFrame, rounds: Int)
-      : Seq[(Int, Long, Long)] = {
-    var state = seed.select(col("node"), lit(0L).as("dist"),
-        lit(null).cast("long").as("prev"))
-      .transform(Tables.ck)
-    (1 to rounds).map { i =>
-      val frontier = state
-        .where(col("prev").isNull || col("dist") < col("prev"))
-        .select(col("node"), col("dist"))
-      state = edges
-        .join(broadcast(frontier.select(col("node").as("src"), col("dist"))),
-          Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
-          lit(null).cast("long").as("old"))
-        .unionByName(state.select(col("node"), col("dist"),
-          col("dist").as("old")))
-        .groupBy(col("node"))
-        .agg(min(col("dist")).as("dist"), min(col("old")).as("prev"))
-        .transform(Tables.ck)
-      (i,
-        state.where(col("prev").isNull || col("dist") < col("prev")).count(),
-        state.count())
-    }
   }
 
   /** One PPR update round — see the q_graph_ppr comment for the
@@ -1338,8 +1308,8 @@ object GraphOps {
     // verbatim; the strategies agreeing is itself part of the
     // differential. Plan pinned in PlanShapeSpec (no
     // BroadcastExchange on the rank join, edges side exchange-free
-    // off its bucket layout); broadcast↔co-partitioned crossover
-    // measured in tools/PageRankScale.
+    // off its bucket layout).
+    // Broadcast↔co-partitioned crossover (|V|≈4M): BUILD_NOTES.md.
     "q_graph_pagerank_part" -> ((s, d) => {
       import s.implicits._
       val edges = tradeEdgesBkt(s, d)

@@ -49,10 +49,11 @@ object Tables {
     val s = df.sparkSession
     // Dev-only plan-dump aid: a (lazy) checkpoint rewrites the plan to
     // a LogicalRDD scan immediately, so `explain` on anything built
-    // over a ck'd intermediate stops at `Scan ExistingRDD`. The
-    // explain tools set this to see the full operator tree; no
-    // measured or verified runner ever does (it would change the
-    // execution shape the checkpoints exist for).
+    // over a ck'd intermediate stops at `Scan ExistingRDD`.
+    // `tools.Trace --plan` under `-Dspark.graft.explainNoCk=true` sees
+    // the full operator tree; no measured or verified runner ever
+    // sets it (it would change the execution shape the checkpoints
+    // exist for).
     if (s.conf.getOption("spark.graft.explainNoCk").contains("true"))
       return df
     val reliable =

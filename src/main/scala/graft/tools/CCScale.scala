@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale A/B for the two declared connected-component
@@ -55,12 +55,7 @@ object CCScale {
     val blobSize = if (args.length > 2) args(2).toInt else 8
     val reps = if (args.length > 3) args(3).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.TempWarehouse.dir())
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.EngineSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

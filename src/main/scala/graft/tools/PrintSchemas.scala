@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the RAW Spark-inferred schema of every fixture
   * table (pre-conform, so it works even when `Tables.conform` would
   * fail fast on drift). Run after a driver-side fixture regeneration
@@ -11,9 +9,7 @@ import org.apache.spark.sql.SparkSession
 object PrintSchemas {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.EngineSession.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Same legacy conf Tables.t sets for events' historical ns encoding.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -25,4 +25,11 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog.defaultTablePath(
         org.apache.spark.sql.catalyst.TableIdentifier(table))
+
+  /** Blocks until every listener event posted so far has reached every
+    * listener: job-end events arrive asynchronously, so a count read
+    * right after an action returns can miss its last jobs.
+    * `listenerBus` is `private[spark]`, hence the bridge. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -1847,15 +1847,24 @@ class OpsSpec extends GraftSuite {
     //  - doc 2 contains the SAME 30-char block twice WITHIN one doc,
     //    separated by 31 unique chars (gap > 30 ⇒ two separate spans
     //    — the published tool's within-doc repeat semantics);
-    //  - doc 3 is all-unique → no spans.
+    //  - doc 3 is all-unique → no spans;
+    //  - docs 4/5 differ only in é vs è at the middle of 43 chars, so
+    //    every 30-char window covers it: no spans, as long as ascii()
+    //    gives each char its own code point (a first-UTF-8-byte
+    //    ascii() maps both to 195 and would report a 43-char span).
+    val cp = Seq("é", "è", "あ").toDF("c").select(ascii($"c"))
+      .as[Int].collect().toSeq
+    assert(cp === Seq(233, 232, 12354), "ascii() must return code points")
     val A = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMN" // 40 shared chars
     val d0 = "Q" * 7 + A + "R" * 9
     val d1 = "S" * 13 + A + "T" * 5
     val B = A.take(30)
     val d2 = B + "u0v1w2x3y4z5u6v7w8x9y0z1u2v3w4x" + B // 31-char gap
+    val C = "mnopqrstuvwxyz012345あ"
     val docs = Seq(
       (0L, d0), (1L, d1), (2L, d2),
-      (3L, "9876543210fedcba!@#$%^&*()ZYXWVUTSRQPONMLKJIHG"))
+      (3L, "9876543210fedcba!@#$%^&*()ZYXWVUTSRQPONMLKJIHG"),
+      (4L, C + "é" + C.reverse), (5L, C + "è" + C.reverse))
     val dir = java.nio.file.Files.createTempDirectory("graft_substr").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
@@ -1866,7 +1875,7 @@ class OpsSpec extends GraftSuite {
         r.getAs[Number](2).longValue)).sorted.toSeq
     // d0: A occupies 1-based [8, 47]; d1: [14, 53]; d2: B at [1, 30]
     // and again at [62, 91] — two spans (gap 31 > 30 keeps them
-    // apart); d3: nothing.
+    // apart); d3, d4, d5: nothing.
     assert(spans === Seq(
       (0L, 8L, 40L), (1L, 14L, 40L),
       (2L, 1L, 30L), (2L, 62L, 30L)),
@@ -3725,6 +3734,28 @@ class OpsSpec extends GraftSuite {
           s"$d/$lang: exact-dup census must equal the driver recount")
       }
     }
+  }
+
+  test("q_pipe_datacard: a NULL-lang group keeps its card row") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // Every per-lang aggregate in the card keeps NULL as its own
+    // group; the exact-dup census joined back on lang must too.
+    // Docs 0/1 and 3/4 are exact duplicates within their lang group.
+    val dir = java.nio.file.Files.createTempDirectory("graft_nulllang").toString
+    Seq[(Long, String, String)](
+        (0L, "the fast fox", "en"), (1L, "the fast fox", "en"),
+        (2L, "le chat lent slow", null), (3L, "der hund ist gut", null),
+        (4L, "der hund ist gut", null))
+      .toDF("doc_id", "text", "lang")
+      .withColumn("source", lit("s"))
+      .withColumn("n_chars", length($"text").cast("long"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val card = q("q_pipe_datacard", dir).collect()
+      .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(3)))
+      .toMap
+    assert(card === Map(Some("en") -> (2L, 1L), None -> (3L, 1L)),
+      "(n_docs, n_exact_dupes) per lang")
   }
 
   test("q_join_asof_tol: driver recount + tolerance-partition " +
