@@ -45,6 +45,13 @@ import org.apache.spark.sql.SparkSession
   *    with codegen still ON (disabling codegen outright measured the
   *    same 49.5 s locally but loses compiled execution at scale —
   *    rejected);
+  *  - `spark.sql.maxSinglePartitionBytes` = `Long.MaxValue`: Spark
+  *    applies that check only when every input of an operator is
+  *    already one partition, which graft creates only on purpose — the
+  *    size-gated one-partition loops (`GraphOps.gate`). There the check
+  *    reads Catalyst's product estimate of a nested join, which is
+  *    orders of magnitude above the real bytes, and would re-insert the
+  *    shuffle the gate exists to remove;
   *  - a per-JVM temp warehouse (table-writing queries must never
   *    leave `spark-warehouse/` in the repo tree — [[TempWarehouse]]).
   */
@@ -62,5 +69,6 @@ object EngineSession {
         "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.maxSinglePartitionBytes", Long.MaxValue.toString)
       .config("spark.sql.warehouse.dir", TempWarehouse.dir())
 }

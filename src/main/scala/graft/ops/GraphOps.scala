@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import Tables.{Q, t}
 
 /** Graph analytics over relationship edges derived from the fixtures —
@@ -14,9 +15,11 @@ import Tables.{Q, t}
   *
   * Scale notes (100 TB): one iteration = one shuffle keyed on the
   * vertex id, partial-aggregable (rank contributions combine
-  * map-side). A production run adds `localCheckpoint` every few
-  * iterations to cut lineage growth; 5 bounded iterations keep the
-  * declared query's plan finite and the oracle unrollable.
+  * map-side). Every round ends in a lazy [[Tables.ck]], which cuts
+  * the lineage the unrolled loop would otherwise grow; bounded round
+  * counts keep the oracle unrollable. A loop whose inputs fit under
+  * the broadcast threshold runs all its rounds in one partition
+  * instead ([[gate]]).
   */
 object GraphOps {
 
@@ -32,6 +35,66 @@ object GraphOps {
     * for production graphs that settle early — every skipped round is
     * a full |E|-shuffle saved. */
   private val Tol = 1e-6
+
+  /** How one iterative loop runs its rounds, as [[gate]] chose. */
+  private[graft] final case class Gate(onePartition: Boolean) {
+    /** `df` declared one partition on that path. A join, aggregate or
+      * union over one-partition inputs runs in one partition but
+      * reports a partitioning collection (or several partitions), and
+      * a join plans a shuffle for any side that is not exactly
+      * `SinglePartition`; a join output that feeds another join goes
+      * through here. */
+    def one(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      if (onePartition) df.coalesce(1) else df
+
+    /** A join side: the keyed SHUFFLE_HASH branch in one partition
+      * (both sides are already there, so it plans no exchange), else
+      * the loop's distributed strategy `otherwise`. */
+    def side(df: org.apache.spark.sql.DataFrame,
+        otherwise: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+          broadcast(_)): org.apache.spark.sql.DataFrame =
+      if (onePartition) df.hint("shuffle_hash") else otherwise(df)
+
+    /** `a ∪ b` by name, in one partition on that path (a union's
+      * partitions are its children's, added up). */
+    def union(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      one(a.unionByName(b))
+  }
+
+  private[graft] val Distributed = Gate(onePartition = false)
+
+  /** A [[gate]] decision, posted on the listener bus (`tools.Trace
+    * --plan` prints it): the bytes the loop's input checkpoint blocks
+    * hold (-1: an input is not a local checkpoint; above the threshold
+    * it may count only the inputs already written) against the
+    * broadcast threshold. */
+  final case class LoopGate(loop: String, heldBytes: Long, threshold: Long,
+      onePartition: Boolean) extends org.apache.spark.scheduler.SparkListenerEvent
+
+  /** The size gate of an iterative loop. Its rounds cost a few jobs of
+    * a few tasks each when distributed, and per-job cost, not data,
+    * bounds them while the state fits one task. So when the blocks of
+    * the loop's input checkpoints ([[Tables.heldBytes]]) hold no more
+    * than `spark.sql.autoBroadcastJoinThreshold` — the bytes Spark
+    * already ships whole to every task — the loop runs in one
+    * partition: its inputs become one-partition views of the same
+    * blocks ([[Tables.onePartition]]), and with [[Gate.union]],
+    * [[Gate.side]] and [[Tables.ck]] each round plans no exchange and
+    * runs inside the consumer's action. Above it, or when an input is
+    * not a local checkpoint, the loop runs its distributed plan with
+    * `inputs` unchanged. */
+  private[graft] def gate(loop: String, inputs: org.apache.spark.sql.DataFrame*)
+      : (Gate, Seq[org.apache.spark.sql.DataFrame]) = {
+    val s = inputs.head.sparkSession
+    val threshold = Bridge.broadcastThreshold(s)
+    val held = Tables.heldBytes(inputs, threshold)
+    val bytes = held.fold(-1L)(_.values.sum)
+    val one = held.isDefined && bytes <= threshold
+    Bridge.post(s.sparkContext, LoopGate(loop, bytes, threshold, one))
+    if (one) (Gate(onePartition = true), inputs.map(Tables.onePartition(_, held.get)))
+    else (Distributed, inputs)
+  }
 
   /** Per-entity neighbor-list cap for `q_graph_jaccard`'s pair
     * generation. 2^16 is far above any fixture degree (|suppliers| is
@@ -120,10 +183,12 @@ object GraphOps {
     *
     * Returns the final ranks and the number of iterations actually
     * run: at most `maxIters`, fewer once the L1 delta falls below
-    * `tol`. Each iteration ends in a LAZY `localCheckpoint` — the
+    * `tol`. Each iteration ends in a lazy [[Tables.ck]] — the
     * lineage cut an iterative Spark job needs anyway — whose blocks
     * materialize inside the round's delta check, the round's only
-    * explicit action (the ccLabels batching discipline). The check
+    * explicit action (the ccLabels batching discipline). Gated
+    * ([[gate]]): in one partition the rank join takes the keyed
+    * branch. The check
     * itself is the union form: a signed per-node sum over the two
     * |V|-sized checkpointed rank tables, one partial-aggregable
     * keyed aggregate — no join. The delta read is a metadata-scale
@@ -134,7 +199,8 @@ object GraphOps {
                maxIters: Int, tol: Double,
                broadcastRank: Boolean = true)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    var r = init.localCheckpoint()
+    val (g, Seq(edges, init0)) = gate("pagerank", edgesW, init)
+    var r = Tables.ck(init0)
     var it = 0
     var delta = Double.PositiveInfinity
     while (it < maxIters && delta >= tol) {
@@ -145,7 +211,8 @@ object GraphOps {
       // separate materialization job per round ON TOP of the delta
       // job (and of the broadcast build the next round forces
       // anyway) — one whole job per round for nothing.
-      val rNew = Tables.ck(rankStep(edgesW, r, n, broadcastRank))
+      val rNew = Tables.ck(
+        rankStep(edges, r, n, broadcastRank && !g.onePartition))
       val rPrev = r
       r = rNew
       it += 1
@@ -163,8 +230,8 @@ object GraphOps {
       // zero rows is SQL NULL (an empty graph) — treat as converged
       // rather than NPE on the primitive read.
       if (it < maxIters) {
-        val deltaRow = rNew.select(col("node"), col("r").as("v"))
-          .unionByName(rPrev.select(col("node"), (-col("r")).as("v")))
+        val deltaRow = g.union(rNew.select(col("node"), col("r").as("v")),
+            rPrev.select(col("node"), (-col("r")).as("v")))
           .groupBy(col("node")).agg(abs(sum(col("v"))).as("dn"))
           .agg(sum(col("dn"))).head
         delta = if (deltaRow.isNullAt(0)) 0.0 else deltaRow.getDouble(0)
@@ -230,7 +297,7 @@ object GraphOps {
       .select(col("src"), col("src").as("dst"))
       .transform(Tables.ck)
     var lab = edges0.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lab")).localCheckpoint()
+      .select(col("node"), col("node").as("lab")).transform(Tables.ck)
     // One min-label propagation step over the CURRENT edge set
     // (symmetric ⇒ every node occurs on both sides, and the
     // self-loops keep every node in its own aggregate).
@@ -421,47 +488,55 @@ object GraphOps {
     * vote count, and one per-node argmax window (keyed by node, never
     * global; a production run fuses the window into min_by on a
     * (-count, label) key — kept as row_number here so the Spark and
-    * DuckDB round formulas are textually identical). FIXED unroll,
-    * zero driver actions: synchronous LPA may oscillate rather than
-    * converge, so a convergence-scalar loop could spin forever — the
-    * fixed round count is the published mitigation AND what makes the
-    * oracle's unrolled CTE chain exactly reproducible.
+    * DuckDB round formulas are textually identical). FIXED unroll
+    * with no convergence check: synchronous LPA may oscillate rather
+    * than converge, so a convergence-scalar loop could spin forever —
+    * the fixed round count is the published mitigation AND what makes
+    * the oracle's unrolled CTE chain exactly reproducible.
     *
-    * Each round ends in a LAZY localCheckpoint — the MATERIALIZED-CTE
-    * equivalent (and still zero driver actions): every round consumes
-    * the previous label table TWICE (the neighbor-vote join and the
-    * self-vote union), so an unchecked 8-round unroll recomputes
-    * round 1 up to 2^8 times — measured 19.0 s → 1.4 s at sf0.1 from
-    * this one line. The per-round label materialization is the same
-    * trade every distributed LPA/Pregel implementation makes. */
-  private[graft] def lpaLabels(edges: org.apache.spark.sql.DataFrame,
+    * Each round ends in a lazy [[Tables.ck]] — the MATERIALIZED-CTE
+    * equivalent: every round consumes the previous label table TWICE
+    * (the neighbor-vote join and the self-vote union), so an
+    * unchecked 8-round unroll recomputes round 1 up to 2^8 times. The
+    * per-round label materialization is the same trade every
+    * distributed LPA/Pregel implementation makes. Gated ([[gate]]): in
+    * one partition no round runs a job of its own. */
+  private[graft] def lpaLabels(edges0: org.apache.spark.sql.DataFrame,
       rounds: Int): org.apache.spark.sql.DataFrame = {
+    val (g, Seq(edges)) = gate("lpaLabels", edges0)
     var lbl = edges.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .transform(Tables.ck)
-    (1 to rounds).foreach { _ =>
-      val votes = edges
-        .join(lbl.select(col("node").as("src"), col("lbl").as("l")), Seq("src"))
-        .select(col("dst").as("node"), col("l"))
-        .unionByName(lbl.select(col("node"), col("lbl").as("l")))
-        .groupBy(col("node"), col("l")).agg(count(lit(1)).as("c"))
-      // Per-node argmax as min(struct(-c, l)) — struct ordering is
-      // field-by-field, so this IS "order by c desc, l" with the same
-      // deterministic tiebreak the row_number window had (l is
-      // distinct within a node, ties are impossible). The win is the
-      // shuffle: the window moved EVERY vote row through its
-      // exchange; the aggregate's partial phase leaves ≤ 1 row per
-      // (node, partition) before the exchange, ×8 rounds. Fixture-
-      // neutral (measured ±0.1 s — vote tables are |V|-ish here);
-      // the r15 optimization round took it for the 100 TB shuffle
-      // shape. The oracle keeps its textual row_number form; the
-      // differential checks the equality.
-      lbl = votes.groupBy(col("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("l"))).as("m"))
-        .select(col("node"), col("m.l").as("lbl"))
-        .transform(Tables.ck)
-    }
+    (1 to rounds).foreach { _ => lbl = lpaStep(edges, lbl, g).transform(Tables.ck) }
     lbl
+  }
+
+  /** One [[lpaLabels]] round over the label table `lbl = (node, lbl)`,
+    * extracted so GateSpec can pin the round plan the per-round
+    * checkpoint hides. */
+  private[graft] def lpaStep(edges: org.apache.spark.sql.DataFrame,
+      lbl: org.apache.spark.sql.DataFrame, g: Gate)
+      : org.apache.spark.sql.DataFrame = {
+    val votes = g.union(edges
+        .join(g.side(lbl.select(col("node").as("src"), col("lbl").as("l")),
+          identity), Seq("src"))
+        .select(col("dst").as("node"), col("l")),
+      lbl.select(col("node"), col("lbl").as("l")))
+      .groupBy(col("node"), col("l")).agg(count(lit(1)).as("c"))
+    // Per-node argmax as min(struct(-c, l)) — struct ordering is
+    // field-by-field, so this IS "order by c desc, l" with the same
+    // deterministic tiebreak the row_number window had (l is
+    // distinct within a node, ties are impossible). The win is the
+    // shuffle: the window moved EVERY vote row through its
+    // exchange; the aggregate's partial phase leaves ≤ 1 row per
+    // (node, partition) before the exchange, ×8 rounds. Fixture-
+    // neutral (measured ±0.1 s — vote tables are |V|-ish here);
+    // the r15 optimization round took it for the 100 TB shuffle
+    // shape. The oracle keeps its textual row_number form; the
+    // differential checks the equality.
+    votes.groupBy(col("node"))
+      .agg(min(struct((-col("c")).as("nc"), col("l"))).as("m"))
+      .select(col("node"), col("m.l").as("lbl"))
   }
 
   /** The distinct canonical co-purchase edge set (parts sharing an
@@ -849,22 +924,30 @@ object GraphOps {
         .transform(Tables.ck)
     }
 
-  private[graft] def tradeEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.derived(s, d, "trade_edges_sym") {
+  /** The directed (c→s) half of [[tradeEdges]], checkpointed. */
+  private def tradeArcs(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.derived(s, d, "trade_arcs") {
       import s.implicits._
-      // Checkpoint the DIRECTED half only: the symmetrizing union is a
-      // pure map over it (no shuffle), so materializing it too would
-      // double the checkpointed bytes for nothing.
       // Dedup on the LONG key pair ([[tradePairs]]) and build the
       // string node ids AFTER the distinct (guide §2.3, narrower
       // shuffle types): the exchange and both hash-agg phases then
       // work 16-byte long pairs instead of ~12-char strings, and the
       // concat runs once per surviving edge instead of once per join
       // row. Same edge set by construction.
-      val e0 = tradePairs(s, d)
+      tradePairs(s, d)
         .select(concat(lit("c"), $"ck".cast("string")).as("src"),
                 concat(lit("s"), $"sk".cast("string")).as("dst"))
         .transform(Tables.ck)
+    }
+
+  private[graft] def tradeEdges(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.derived(s, d, "trade_edges_sym") {
+      import s.implicits._
+      // Checkpoint the DIRECTED half only ([[tradeArcs]]): the
+      // symmetrizing union is a pure map over it (no shuffle), so
+      // materializing it too would double the checkpointed bytes for
+      // nothing.
+      val e0 = tradeArcs(s, d)
       e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
     }
 
@@ -887,13 +970,22 @@ object GraphOps {
     * rank table) instead of two (deg-join then contrib): each
     * broadcast is a sequential driver materialization round, and the
     * 5-iteration loop's wall time is round-count × round latency far
-    * more than it is data volume. */
-  private def tradeEdgesW(s: org.apache.spark.sql.SparkSession, d: String) =
+    * more than it is data volume. Like [[tradeEdges]] it checkpoints
+    * the directed half ([[tradeArcs]]) only, with both endpoint
+    * degrees, and symmetrizes by a map over it: half the rows held,
+    * which keeps the PageRank and PPR loops' input under [[gate]]'s
+    * threshold wherever the edge list itself is. */
+  private[graft] def tradeEdgesW(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_edges_w") {
       import s.implicits._
-      tradeEdges(s, d).join(broadcast(tradeDeg(s, d)), "src")
-        .select($"src", $"dst", $"d")
+      val deg = tradeDeg(s, d)
+      val w = tradeArcs(s, d)
+        .join(broadcast(deg), "src")
+        .join(broadcast(deg.select($"src".as("dst"), $"d".as("dd"))), "dst")
+        .select($"src", $"dst", $"d", $"dd")
         .transform(Tables.ck)
+      w.select($"src", $"dst", $"d")
+        .unionByName(w.select($"dst".as("src"), $"src".as("dst"), $"dd".as("d")))
     }
 
   /** q_graph_betweenness's radius-4 Brandes-subset core over ANY
@@ -969,6 +1061,39 @@ object GraphOps {
       .groupBy($"node").agg(sum($"dm").as("dm"))
   }
 
+  /** `steps` hash-driven walk steps from EVERY node of the trade
+    * graph (see the q_graph_randomwalk entry): returns the (walker,
+    * node) position table after the last step. Every node has deg ≥ 1
+    * and idx = h60 mod deg + 1 always hits exactly one neighbor, so
+    * each step advances EVERY walker exactly once — walk-count
+    * conservation (|rows| = |V| after every step) is the OpsSpec law.
+    * Gated ([[gate]]): in one partition both joins take the keyed
+    * branch. */
+  private[graft] def randomWalks(s: org.apache.spark.sql.SparkSession,
+      d: String, steps: Int): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    val (g, Seq(edges, deg0)) =
+      gate("randomWalks", tradeEdges(s, d), tradeDeg(s, d))
+    val wN = Window.partitionBy($"src").orderBy($"dst")
+    val nbr = edges
+      .withColumn("idx", row_number().over(wN))
+      .select($"src".as("node"), $"dst", $"idx")
+      .transform(Tables.ck)
+    val deg = deg0.select($"src".as("node"), $"d")
+    var cur = deg.select($"node".as("walker"), $"node")
+    (1 to steps).foreach { k =>
+      cur = g.one(cur.join(g.side(deg), "node"))
+        .withColumn("idx",
+          (Tables.h60(concat($"walker", lit(s":$k"))) % $"d")
+            .cast("int") + 1)
+        .select($"walker", $"node", $"idx")
+        .join(g.side(nbr, identity), Seq("node", "idx"))
+        .select($"walker", $"dst".as("node"))
+        .transform(Tables.ck)
+    }
+    cur
+  }
+
   /** Frontier sizes for hops 1..`hops` of a BFS over `edges` from
     * `seed`. Each hop is ONE keyed join (frontier⋈edges) + one anti
     * join against the visited set — the standard BFS-on-MapReduce
@@ -983,53 +1108,28 @@ object GraphOps {
     * builds the anti-join hash map per partition, and pairing with
     * src-bucketed edges ([[tradeEdgesBkt]]) keeps the |E| side
     * exchange-free exactly as in the co-partitioned PageRank.
-    * Strategy agreement is pinned in OpsSpec. */
-  /** `steps` hash-driven walk steps from EVERY node of the trade
-    * graph (see the q_graph_randomwalk entry): returns the (walker,
-    * node) position table after the last step. Every node has deg ≥ 1
-    * and idx = h60 mod deg + 1 always hits exactly one neighbor, so
-    * each step advances EVERY walker exactly once — walk-count
-    * conservation (|rows| = |V| after every step) is the OpsSpec law. */
-  private[graft] def randomWalks(s: org.apache.spark.sql.SparkSession,
-      d: String, steps: Int): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val wN = Window.partitionBy($"src").orderBy($"dst")
-    val nbr = tradeEdges(s, d)
-      .withColumn("idx", row_number().over(wN))
-      .select($"src".as("node"), $"dst", $"idx")
-      .transform(Tables.ck)
-    val deg = tradeDeg(s, d).select($"src".as("node"), $"d")
-    var cur = deg.select($"node".as("walker"), $"node")
-    (1 to steps).foreach { k =>
-      cur = cur.join(broadcast(deg), "node")
-        .withColumn("idx",
-          (Tables.h60(concat($"walker", lit(s":$k"))) % $"d")
-            .cast("int") + 1)
-        .select($"walker", $"node", $"idx")
-        .join(nbr, Seq("node", "idx"))
-        .select($"walker", $"dst".as("node"))
-        .transform(Tables.ck)
-    }
-    cur
-  }
-
-  private[graft] def bfsFrontiers(edges: org.apache.spark.sql.DataFrame,
+    * Strategy agreement is pinned in OpsSpec. Gated ([[gate]]): in one
+    * partition both set joins take the keyed branch. */
+  private[graft] def bfsFrontiers(edges0: org.apache.spark.sql.DataFrame,
       seed: org.apache.spark.sql.DataFrame, hops: Int,
       broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
+    val (g, Seq(edges, seed0)) = gate("bfsFrontiers", edges0, seed)
     def side(df: org.apache.spark.sql.DataFrame) =
-      if (broadcastSets) broadcast(df) else df.hint("shuffle_hash")
-    var visited = seed
-    var frontier = seed
+      g.side(df, if (broadcastSets) broadcast(_) else _.hint("shuffle_hash"))
+    var visited = seed0
+    var frontier = seed0
     val sizes = (1 to hops).map { hop =>
-      frontier = edges.join(side(frontier), col("src") === col("node"))
-        .select(col("dst").as("node")).distinct()
+      // One partition below the distinct, not above it: the optimizer
+      // pushes a left-anti join down through a coalesce.
+      frontier = g.one(edges.join(side(frontier), col("src") === col("node"))
+          .select(col("dst").as("node"))).distinct()
         .join(side(visited), Seq("node"), "left_anti")
         .transform(Tables.ck)
-      visited = visited.unionByName(frontier)
+      visited = g.union(visited, frontier)
       frontier.agg(count(lit(1)).as("frontier"))
         .select(lit(hop).as("hop"), col("frontier"))
     }
-    sizes.reduce(_ unionByName _).orderBy(col("hop"))
+    sizes.reduce(g.union).orderBy(col("hop"))
   }
 
   /** [[tradeEdgesW]] written ONCE per (session, dir) as a table
@@ -1177,15 +1277,15 @@ object GraphOps {
     * (the per-round `Tables.ck` hides the loop body from the declared
     * query's executed plan — the ShinglesSpec lesson): exactly one
     * BroadcastHashJoin, one keyed exchange, zero sort-merge joins,
-    * zero dropped hints. */
+    * zero dropped hints — distributed. Under a one-partition [[gate]]
+    * it plans no exchange at all (GateSpec). */
   private[graft] def pprStep(edges: org.apache.spark.sql.DataFrame,
-      r: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    edges.join(broadcast(r), col("src") === col("node"))
-      .select(col("dst").as("node"), (col("r") / col("d")).as("sw"),
-        lit(0.0).as("tp"))
-      .unionByName(
-        seed.select(col("node"), lit(0.0).as("sw"), lit(0.15).as("tp")))
+      r: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame,
+      g: Gate = Distributed): org.apache.spark.sql.DataFrame =
+    g.union(edges.join(g.side(r), col("src") === col("node"))
+        .select(col("dst").as("node"), (col("r") / col("d")).as("sw"),
+          lit(0.0).as("tp")),
+      seed.select(col("node"), lit(0.0).as("sw"), lit(0.15).as("tp")))
       .groupBy(col("node"))
       .agg(sum(col("sw")).as("sw"), max(col("tp")).as("tp"))
       .select(col("node"), (lit(0.85) * col("sw") + col("tp")).as("r"))
@@ -1255,13 +1355,13 @@ object GraphOps {
     // rounding on BOTH sides (the micro-nat kernel move).
     "q_graph_ppr" -> ((s, d) => {
       import s.implicits._
-      val edges = tradeEdgesW(s, d)
-      val seed = tradeDeg(s, d).select($"src".as("node"), $"d".as("dg"))
+      val (g, Seq(edges, deg)) = gate("ppr", tradeEdgesW(s, d), tradeDeg(s, d))
+      val seed = deg.select($"src".as("node"), $"d".as("dg"))
         .orderBy($"dg".desc, $"node").limit(1)
         .select($"node").transform(Tables.ck)
       var r = seed.select($"node", lit(1.0).as("r"))
         .transform(Tables.ck)
-      for (_ <- 1 to Iters) r = pprStep(edges, r, seed).transform(Tables.ck)
+      for (_ <- 1 to Iters) r = pprStep(edges, r, seed, g).transform(Tables.ck)
       r.select($"node", (floor($"r" * 1e6 + 0.5) / 1e6).as("ppr"))
         .orderBy($"ppr".desc, $"node")
         .limit(20)
@@ -1483,8 +1583,8 @@ object GraphOps {
     // for hops 1..3 over the symmetrized trade graph — the iterative
     // frontier-expansion kernel (reachability, blast-radius, feature
     // neighborhoods), via [[bfsFrontiers]] in its broadcast regime
-    // (the fixture's frontier and visited sets are |V|-bounded and
-    // tiny). Hop count fixed at 3 so the plan is finite and the
+    // when the gate keeps it distributed (frontier and visited sets
+    // are |V|-bounded). Hop count fixed at 3 so the plan is finite and the
     // oracle unrollable.
     "q_graph_bfs" -> ((s, d) => {
       import s.implicits._
@@ -1503,30 +1603,32 @@ object GraphOps {
     // join against the visited set — never k separate traversals.
     // Harmonic form Σ 1/dist (Boldi–Vigna's axiom-clean variant) is
     // the bounded-radius-safe choice: classic closeness needs every
-    // node reached. Frontier/visited are (k·|V|)-bounded and
-    // broadcast here (the bfsFrontiers regime split applies verbatim
+    // node reached. Frontier/visited are (k·|V|)-bounded: one
+    // partition under the size gate ([[gate]]), else broadcast (the
+    // bfsFrontiers regime split applies verbatim
     // past a few hundred million rows: SHUFFLE_HASH + bucketed
     // edges). Exactness of the 1e-4 floor: dist ∈ {1,2,3}, so the
     // true harmonic sum is a multiple of 1/6 and sum·1e4 + 0.5 never
     // sits closer than 1/6·10⁴ᐨ¹ to a floor boundary.
     "q_graph_closeness" -> ((s, d) => {
       import s.implicits._
-      val edges = tradeEdges(s, d)
-      val seeds = tradeDeg(s, d).orderBy($"d".desc, $"src").limit(4)
+      val (g, Seq(edges, deg)) =
+        gate("closeness", tradeEdges(s, d), tradeDeg(s, d))
+      val seeds = deg.orderBy($"d".desc, $"src").limit(4)
         .select($"src".as("seed"))
       var visited = seeds
         .select($"seed", $"seed".as("node"), lit(0).as("dist"))
       var frontier = visited
       (1 to 3).foreach { hop =>
-        frontier = edges
-          .join(broadcast(frontier.select($"seed", $"node".as("src"))),
-            Seq("src"))
-          .select($"seed", $"dst".as("node")).distinct()
-          .join(broadcast(visited.select($"seed", $"node")),
+        frontier = g.one(edges
+            .join(g.side(frontier.select($"seed", $"node".as("src"))),
+              Seq("src"))
+            .select($"seed", $"dst".as("node"))).distinct()
+          .join(g.side(visited.select($"seed", $"node")),
             Seq("seed", "node"), "left_anti")
           .withColumn("dist", lit(hop))
           .transform(Tables.ck)
-        visited = visited.unionByName(frontier)
+        visited = g.union(visited, frontier)
       }
       visited.where($"dist" >= 1)
         .groupBy($"seed").agg(
@@ -1661,7 +1763,7 @@ object GraphOps {
     // determinism for convergence speed, the wrong trade under a
     // differential). FIXED 8-round unroll as one lazy plan, the
     // q_graph_kcore move: exactly reproducible in the oracle's 8
-    // MATERIALIZED CTE rounds, zero per-round driver actions. Output:
+    // MATERIALIZED CTE rounds, no per-round convergence check. Output:
     // community census (label, size), largest first.
     "q_graph_lpa" -> ((s, d) => {
       import s.implicits._
@@ -1958,16 +2060,17 @@ object GraphOps {
     // references its input twice — unchecked, lineage doubles per
     // round: the bpetrain lesson). The one driver-side value is the
     // 1-row (max, count) aggregate that sizes N and the round count —
-    // metadata-scale, the q_scan_binaryfile convention.
+    // metadata-scale, the q_scan_binaryfile convention. Gated
+    // ([[gate]]) on the checkpointed supplier keys.
     "q_graph_scc" -> ((s, d) => {
       import s.implicits._
-      val sup = t(s, d, "supplier").select($"s_suppkey".cast("long").as("k"))
+      val (g, Seq(sup)) = gate("scc", Tables.ck(
+        t(s, d, "supplier").select($"s_suppkey".cast("long").as("k"))))
       val mc = sup.agg(max($"k"), count(lit(1))).collect()(0)
       val n = mc.getLong(0) + 1
       val rounds = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
-      val succ = Tables.ck(sup.select($"k",
-        (($"k" * $"k" + 1) % n).as("v")))
+      val succ = Tables.ck(sup.select($"k", (($"k" * $"k" + 1) % n).as("v")))
       // Checkpoint every SECOND doubling round (the ccStar batch=2
       // precedent): one unchecked self-join squares the reference
       // count to 4 reads of the last checkpoint — fine; a third would
@@ -1978,9 +2081,9 @@ object GraphOps {
       // Phase 1: jump-double to succ^(2^rounds); image = cycle nodes.
       var jump = succ
       for (i <- 1 to rounds) {
-        jump = ck2(jump.as("a").join(jump.as("b"),
+        jump = ck2(g.one(jump.as("a").join(g.side(jump.as("b"), identity),
             col("a.v") === col("b.k"))
-          .select(col("a.k").as("k"), col("b.v").as("v")), i, rounds)
+          .select(col("a.k").as("k"), col("b.v").as("v"))), i, rounds)
       }
       val cyc = Tables.ck(jump.select($"v".as("k")).distinct())
       // Phase 2: min-label doubling confined to the cycle set (cycle
@@ -1992,16 +2095,16 @@ object GraphOps {
       val nCyc = math.max(2L, cyc.count())
       val rounds2 = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(nCyc - 1))
-      var lab = Tables.ck(succ.join(cyc, "k")
+      var lab = Tables.ck(succ.join(g.side(cyc, identity), "k")
         .select($"k", $"v".as("jmp"), $"k".as("lab")))
       for (i <- 1 to rounds2) {
-        lab = ck2(lab.as("a").join(lab.as("b"),
+        lab = ck2(g.one(lab.as("a").join(g.side(lab.as("b"), identity),
             col("a.jmp") === col("b.k"))
           .select(col("a.k").as("k"), col("b.jmp").as("jmp"),
-            least(col("a.lab"), col("b.lab")).as("lab")), i, rounds2)
+            least(col("a.lab"), col("b.lab")).as("lab"))), i, rounds2)
       }
       // Phase 3: tails are singleton SCCs labeled by themselves.
-      val scc = sup.join(lab.select($"k", $"lab"), Seq("k"), "left")
+      val scc = sup.join(g.side(lab.select($"k", $"lab"), identity), Seq("k"), "left")
         .select($"k", coalesce($"lab", $"k").as("scc_id"))
       scc.groupBy($"scc_id").agg(count(lit(1)).as("n_nodes"))
         .groupBy($"n_nodes".as("scc_size"))

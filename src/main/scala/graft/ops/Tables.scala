@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Fixture-table readers (SURVEY §1.2; schemas measured in FIXTURES.md).
   *
@@ -34,18 +35,37 @@ object Tables {
     s"cast(conv(substring(md5($x), 1, 15), 16, 10) as bigint)"
 
   /** LAZY plan materialization point for the iterative operators
-    * (LPA, ccStar, BPE, BFS, PageRank): by default a lazy
-    * `localCheckpoint` — zero driver actions, blocks on executors, no
-    * lineage. On a real cluster an executor loss mid-query forces a
-    * rerun of the whole job (acceptable for these bounded-round jobs
-    * and standard GraphFrames practice); a deployment that wants
+    * (LPA, ccStar, BPE, BFS, PageRank): a `localCheckpoint` — blocks on
+    * executors, no lineage, written inside the first action that reads
+    * them. It runs no job of its own only when its plan has no
+    * exchange: under AQE a plan with shuffles runs every shuffle stage
+    * when it is checkpointed, and only the final stage is left to the
+    * consumer.
+    *
+    * A plan that already runs in ONE partition with no exchange (the
+    * one-partition loops of [[graft.ops.GraphOps]], a limit seed) is
+    * checkpointed here from its RDD, declaring `SinglePartition`, so
+    * the next round plans no exchange either, and recording as its
+    * size the largest size among its checkpointed inputs (each carries
+    * its measured or bounded bytes). That bound holds for the |V|-sized
+    * state of these loops, where Catalyst's product-of-children
+    * estimate compounds every round into exabytes and plans both sides
+    * of every join as shuffles. This path skips `Dataset`'s action
+    * wrapper, which would run no job here. Any other plan takes the
+    * `Dataset` checkpoint unchanged.
+    *
+    * On a real cluster an executor loss mid-query forces a rerun of
+    * the whole job (acceptable for these bounded-round jobs and
+    * standard GraphFrames practice); a deployment that wants
     * fault-tolerant intermediates sets `spark.graft.reliableCheckpoint
     * =true` AND a `sparkContext.setCheckpointDir` — then every
-    * iteration round lands in the reliable store instead (lazy too, so
-    * the zero-driver-action contract holds either way). Results are
-    * identical by construction — CkSpec pins lpaLabels under both
-    * modes. */
+    * checkpoint lands in the reliable store instead, lazily too.
+    * Results are identical by construction — CkSpec pins it. */
   def ck(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val s = df.sparkSession
     // Dev-only plan-dump aid: a (lazy) checkpoint rewrites the plan to
     // a LogicalRDD scan immediately, so `explain` on anything built
@@ -59,8 +79,91 @@ object Tables {
     val reliable =
       s.conf.getOption("spark.graft.reliableCheckpoint").contains("true") &&
         s.sparkContext.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(eager = false)
+    val qe = df.queryExecution
+    // Under AQE the physical plan with its exchanges in place.
+    val plan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    if (isSinglePartition(plan.outputPartitioning) &&
+        !plan.exists(_.isInstanceOf[Exchange])) {
+      val rdd = qe.toRdd.map(_.copy())
+      assert(rdd.getNumPartitions == 1,
+        s"a SinglePartition plan produced ${rdd.getNumPartitions} partitions")
+      if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
+      val opt = qe.optimizedPlan
+      val leaves = opt.collectLeaves().collect { case l: LogicalRDD => l.stats.sizeInBytes }
+      val size = (opt.stats.sizeInBytes +: leaves.maxOption.toSeq).min
+      Bridge.ofRows(s, Bridge.rddRelation(s, qe.analyzed.output, rdd,
+        SinglePartition, plan.outputOrdering, size))
+    }
+    else if (reliable) df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
+  }
+
+  private def isSinglePartition(
+      p: org.apache.spark.sql.catalyst.plans.physical.Partitioning): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.{PartitioningCollection, SinglePartition}
+    p match {
+      case SinglePartition => true
+      case PartitioningCollection(ps) => ps.exists(isSinglePartition)
+      case _ => false
+    }
+  }
+
+  /** The bytes held by the local-checkpoint blocks that the leaves of
+    * `dfs` read, by RDD id, each block set counted once — from
+    * `SparkContext.getRDDStorageInfo`, after the listener bus that
+    * feeds it has drained. A checkpoint no action has written yet is
+    * written first, by one job over its RDD (the work its first reader
+    * would do), unless the written ones already hold more than `limit`:
+    * then the map leaves the unwritten ones out, and its sum is a lower
+    * bound that still exceeds `limit`. None when any leaf is not a local
+    * checkpoint (a file scan, an in-memory relation, a reliable
+    * checkpoint): there are no blocks to measure. */
+  private[graft] def heldBytes(dfs: Seq[DataFrame], limit: Long)
+      : Option[Map[Int, Long]] = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    val leaves = dfs.flatMap(_.queryExecution.analyzed.collectLeaves()).map {
+      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => Some(l.rdd)
+      case _ => None
+    }
+    if (leaves.isEmpty || leaves.contains(None)) return None
+    val rdds = leaves.flatten.map(r => r.id -> r).toMap
+    val sc = dfs.head.sparkSession.sparkContext
+    def written(): Map[Int, Long] = {
+      Bridge.drainListeners(sc)
+      sc.getRDDStorageInfo
+        .filter(i => rdds.get(i.id).exists(_.getNumPartitions <= i.numCachedPartitions))
+        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    }
+    val before = written()
+    val unwritten = rdds.values.filterNot(r => before.contains(r.id))
+    if (unwritten.isEmpty || before.values.sum > limit) Some(before)
+    else {
+      unwritten.foreach(_.count())
+      Some(written())
+    }
+  }
+
+  /** `df` over the same blocks, run in one partition: every checkpoint
+    * leaf becomes a zero-copy `coalesce(1)` view that declares
+    * `SinglePartition` and carries its measured bytes from `held`
+    * ([[heldBytes]]), and every union is coalesced back to one
+    * partition. No block is written. */
+  private[graft] def onePartition(df: DataFrame, held: Map[Int, Long]): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Union}
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.LogicalRDD
+    val s = df.sparkSession
+    Bridge.ofRows(s, df.queryExecution.analyzed.transformUp {
+      case l: LogicalRDD =>
+        val one = l.rdd.getNumPartitions == 1
+        Bridge.rddRelation(s, l.output, if (one) l.rdd else l.rdd.coalesce(1),
+          SinglePartition, if (one) l.outputOrdering else Nil, held(l.rdd.id))
+      case u: Union => Repartition(1, shuffle = false, u)
+    })
   }
 
   /** Base DataFrames are cached per (session, dir, table): a DataFrame

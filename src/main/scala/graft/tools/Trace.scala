@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.graftbridge.Bridge
 import graft.{EngineSession, SparkEntry}
-import graft.ops.Tables
+import graft.ops.{GraphOps, Tables}
 
 /** Per-query trace under the engine posture Bench times: warms the
   * tables once (as Bench does), then per rep of each named query
@@ -11,14 +11,19 @@ import graft.ops.Tables
   * physical planning (`queryExecution.executedPlan`) and the timed
   * `.count()`, plus the jobs/stages/tasks it ran, the summed job time
   * and the driver gap (wall minus that sum: planning, broadcast waits,
-  * scheduling). Every rep starts from `Tables.resetDerived`, so every
-  * rep does the same work, shared memo builds included.
+  * scheduling), and the RDD blocks (checkpoint and persisted
+  * partitions) it wrote with their bytes. Every rep starts from
+  * `Tables.resetDerived`, so every rep does the same work, shared memo
+  * builds included.
   *
-  * `--plan` prints each query's formatted plan and its join/exchange
-  * operator counts; `reps` = 0 prints plans only. Confs are A/B'd
-  * through `-Dspark.*` system properties, which `SparkConf` loads —
-  * `-Dspark.graft.explainNoCk=true` prints through the memos' lazy
-  * checkpoint boundaries (see `Tables.ck`).
+  * `--plan` prints each query's formatted plan, its join/exchange
+  * operator counts, and the path each size-gated loop took
+  * (`GraphOps.gate`: one partition or distributed, with the bytes its
+  * input checkpoints hold against the broadcast threshold); `reps` = 0
+  * prints plans only. Confs are A/B'd through `-Dspark.*` system
+  * properties, which `SparkConf` loads — `-Dspark.graft.explainNoCk=true`
+  * prints through the memos' lazy checkpoint boundaries (see
+  * `Tables.ck`).
   *
   * usage: runMain graft.tools.Trace <sfDir> <q1,q2,...> [reps] [--plan]
   */
@@ -41,6 +46,9 @@ object Trace {
     val started = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobMs = new java.util.concurrent.atomic.AtomicLong()
     val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val blocks = new java.util.concurrent.atomic.AtomicInteger()
+    val blockBytes = new java.util.concurrent.atomic.AtomicLong()
+    val gates = new java.util.concurrent.ConcurrentLinkedQueue[GraphOps.LoopGate]()
     sc.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         started.put(j.jobId, j.time)
@@ -51,15 +59,33 @@ object Trace {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
       }
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
+        val i = b.blockUpdatedInfo
+        if (i.blockId.isRDD && i.storageLevel.isValid) {
+          blocks.incrementAndGet(); blockBytes.addAndGet(i.memSize + i.diskSize)
+        }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case g: GraphOps.LoopGate => gates.add(g)
+        case _ =>
+      }
     })
 
     names.foreach { q =>
       val fn = SparkEntry.queries(q)
       if (plan) {
         Tables.resetDerived(spark)
+        Bridge.drainListeners(sc)
+        gates.clear()
         val df = fn(spark, sfDir)
         println(s"=== $q ===")
         df.explain("formatted")
+        Bridge.drainListeners(sc)
+        gates.forEach { g =>
+          println(s"GATE $q ${g.loop}: " +
+            (if (g.onePartition) "one-partition" else "distributed") +
+            s", held ${g.heldBytes} B vs threshold ${g.threshold} B")
+        }
         val p = df.queryExecution.executedPlan.toString
         def c(op: String) = op.r.findAllIn(p).length
         println(s"PLAN $q bhj=${c("BroadcastHashJoin")} " +
@@ -70,7 +96,8 @@ object Trace {
       (1 to reps).foreach { i =>
         Tables.resetDerived(spark)
         Bridge.drainListeners(sc)
-        Seq(jobs, stages, tasks).foreach(_.set(0)); jobMs.set(0)
+        Seq(jobs, stages, tasks, blocks).foreach(_.set(0))
+        jobMs.set(0); blockBytes.set(0)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -84,7 +111,7 @@ object Trace {
           f"plan ${(t2 - t1) / 1e9}%.3f s, exec ${(t3 - t2) / 1e9}%.3f s; " +
           f"${jobs.get} jobs (sum $sumJobs%.3f s), ${stages.get} stages, " +
           f"${tasks.get} tasks, gap ${(t3 - t0) / 1e9 - sumJobs}%.3f s; " +
-          f"$n rows")
+          f"${blocks.get} blocks (${blockBytes.get / 1e6}%.3f MB); $n rows")
       }
     }
     spark.stop()

@@ -1,7 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one internal hand-shake a third-party operator library needs:
   * turning a custom [[LogicalPlan]] back into a user-facing
@@ -32,4 +38,25 @@ object Bridge {
     * `listenerBus` is `private[spark]`, hence the bridge. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** A scan of `rdd` that declares its partitioning and its size in
+    * bytes: how a checkpoint states its real layout and size instead of
+    * the estimate of the plan that produced it. `LogicalRDD`'s
+    * statistics argument takes the session's internal class. */
+  def rddRelation(spark: SparkSession, output: Seq[Attribute],
+      rdd: RDD[InternalRow], partitioning: Partitioning,
+      ordering: Seq[SortOrder], sizeInBytes: BigInt): LogicalPlan =
+    LogicalRDD(output, rdd, partitioning, ordering, isStreaming = false)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(Statistics(sizeInBytes)), None)
+
+  /** This session's `spark.sql.autoBroadcastJoinThreshold` in bytes
+    * (negative: broadcast disabled). `sessionState` is `private[sql]`. */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Posts `event` to every listener. `listenerBus` is `private[spark]`. */
+  def post(sc: org.apache.spark.SparkContext, event: SparkListenerEvent): Unit =
+    sc.listenerBus.post(event)
 }

@@ -26,6 +26,15 @@ class CkSpec extends GraftSuite {
       val lpaReliable = SparkEntry.queries("q_graph_lpa")(s, sf0001)
         .collect().map(_.toString).sorted
       assert(lpaReliable.nonEmpty && (lpaReliable.toSeq === lpaDefault.toSeq))
+      // pagerank seeds its loop through Tables.ck, so the seed lands
+      // in the reliable store too.
+      val prDefault = q("q_graph_pagerank", sf0001).collect().map(_.toString)
+      val held = spark.sparkContext.getPersistentRDDs.keySet
+      val prReliable = SparkEntry.queries("q_graph_pagerank")(s, sf0001)
+        .collect().map(_.toString)
+      assert(prReliable.nonEmpty && (prReliable.toSeq === prDefault.toSeq))
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
+        "a reliable-mode pagerank run must leave no local checkpoint")
       val bpeDefault = q("q_text_bpetrain", sf0001).collect().map(_.toString)
       val bpeReliable = SparkEntry.queries("q_text_bpetrain")(s, sf0001)
         .collect().map(_.toString)

@@ -471,6 +471,58 @@ class PropertySpec extends GraftSuite {
     }
   }
 
+  test("gated loops law: one-partition LPA, BFS and PageRank equal their distributed plans on random graphs") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions._
+    // Random symmetric graphs, held as written local checkpoints (the
+    // memo shape the gate measures), through each loop in this session
+    // (one partition) and in a session that forces the distributed
+    // plan: labels, frontier sizes and ranks must be identical.
+    resetMemos()
+    (0 until 3).foreach { k =>
+      val rng = new scala.util.Random(7727L * (k + 1))
+      val nodes = (0 until 14).map(i => f"g$i%02d")
+      val undirected = (for {
+        i <- nodes.indices; j <- (i + 1) until nodes.size
+        if rng.nextDouble() < 0.2
+      } yield (nodes(i), nodes(j))).distinct
+      val sym = undirected ++ undirected.map(_.swap)
+      def run(ss: SparkSession) = {
+        import ss.implicits._
+        val e0 = ops.Tables.ck(sym.toDF("src", "dst"))
+        e0.count()
+        val edges = e0.select($"src", $"dst")
+        val lpa = ops.GraphOps.lpaLabels(edges, 4)
+          .collect().map(_.toString).sorted.toSeq
+        val seed = ops.Tables.ck(Seq(sym.head._1).toDF("node"))
+        val bfs = ops.GraphOps.bfsFrontiers(edges, seed, 3, broadcastSets = true)
+          .collect().map(_.toString).toSeq
+        val deg = ops.Tables.ck(edges.groupBy($"src").agg(count(lit(1)).as("d")))
+        val n = deg.count()
+        val edgesW = ops.Tables.ck(edges.join(deg, "src"))
+        val (pr, iters) = ops.GraphOps.pagerank(edgesW,
+          deg.select($"src".as("node"), (lit(1.0) / n).as("r")), n, 5, 1e-6)
+        val ranks = pr.collect().map(r => (r.getString(0), r.getDouble(1)))
+          .sortBy(_._1).toSeq
+        (lpa, bfs, ranks, iters)
+      }
+      if (sym.nonEmpty) {
+        val (one, gOne) = loopGates(run(spark))
+        val (many, gMany) = loopGates(run(distributedLoops))
+        assert(gOne.size == 3 && gOne.forall(_.onePartition), s"case $k: $gOne")
+        assert(gMany.size == 3 && gMany.forall(!_.onePartition), s"case $k: $gMany")
+        assert(one._1 === many._1, s"case $k: LPA labels")
+        assert(one._2 === many._2, s"case $k: BFS frontiers")
+        assert(one._4 === many._4, s"case $k: PageRank rounds")
+        assert(one._3.map(_._1) === many._3.map(_._1), s"case $k: ranked nodes")
+        one._3.zip(many._3).foreach { case ((v, a), (w, b)) =>
+          assert(v == w && math.abs(a - b) < 1e-12, s"case $k: rank of $v")
+        }
+      }
+    }
+    resetMemos()
+  }
+
   test("ssspDist law: equals Dijkstra on random weighted graphs at the fixpoint") {
     val s = spark
     import s.implicits._

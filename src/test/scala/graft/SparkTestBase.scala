@@ -123,4 +123,37 @@ abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def q(name: String, dir: String): DataFrame =
     SparkEntry.queries(name)(spark, dir)
+
+  /** A child session whose size-gated loops (`GraphOps.gate`) always
+    * take their distributed plan: broadcast is disabled, so no input
+    * fits under the threshold. Its memos are local checkpoints too, so
+    * a test that uses it starts and ends with [[resetMemos]]. */
+  lazy val distributedLoops: SparkSession = ops.Tables.childSession(
+    spark, "distributed-loops")("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /** Forgets the memos of both sessions: `resetDerived` drops every
+    * block of the context, including the other session's. */
+  def resetMemos(): Unit = {
+    ops.Tables.resetDerived(distributedLoops)
+    ops.Tables.resetDerived(spark)
+  }
+
+  /** `body`'s result and the loop gate decisions it posted. */
+  def loopGates[T](body: => T): (T, Seq[ops.GraphOps.LoopGate]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[ops.GraphOps.LoopGate]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case g: ops.GraphOps.LoopGate => seen.add(g)
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+      (r, seen.toArray(Array.empty[ops.GraphOps.LoopGate]).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
 }
