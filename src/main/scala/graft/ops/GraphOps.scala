@@ -17,9 +17,11 @@ import Tables.{Q, t}
   * vertex id, partial-aggregable (rank contributions combine
   * map-side). Every round ends in a lazy [[Tables.ck]], which cuts
   * the lineage the unrolled loop would otherwise grow; bounded round
-  * counts keep the oracle unrollable. A loop whose inputs fit under
-  * the broadcast threshold runs all its rounds in one partition
-  * instead ([[gate]]).
+  * counts keep the oracle unrollable. A loop, memo or motif row whose
+  * parquet-scan and checkpoint inputs fit under the broadcast threshold
+  * runs every plan it builds in one partition instead ([[gate]]): one
+  * rewrite of the whole built plan, applied before each checkpoint and
+  * to the row, over the same distributed code.
   */
 object GraphOps {
 
@@ -36,65 +38,52 @@ object GraphOps {
     * a full |E|-shuffle saved. */
   private val Tol = 1e-6
 
-  /** How one iterative loop runs its rounds, as [[gate]] chose. */
-  private[graft] final case class Gate(onePartition: Boolean) {
-    /** `df` declared one partition on that path. A join, aggregate or
-      * union over one-partition inputs runs in one partition but
-      * reports a partitioning collection (or several partitions), and
-      * a join plans a shuffle for any side that is not exactly
-      * `SinglePartition`; a join output that feeds another join goes
-      * through here. */
-    def one(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (onePartition) df.coalesce(1) else df
-
-    /** A join side: the keyed SHUFFLE_HASH branch in one partition
-      * (both sides are already there, so it plans no exchange), else
-      * the loop's distributed strategy `otherwise`. */
-    def side(df: org.apache.spark.sql.DataFrame,
-        otherwise: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          broadcast(_)): org.apache.spark.sql.DataFrame =
-      if (onePartition) df.hint("shuffle_hash") else otherwise(df)
-
-    /** `a ∪ b` by name, in one partition on that path (a union's
-      * partitions are its children's, added up). */
-    def union(a: org.apache.spark.sql.DataFrame,
-        b: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      one(a.unionByName(b))
+  /** How a gated plan runs, as [[gate]] chose: `g(df)` is `df` in one
+    * partition over the same inputs ([[Tables.onePartition]]), or `df`
+    * unchanged on the distributed path. Apply it to each whole plan a
+    * gated site builds, before its [[Tables.ck]] or its row. */
+  private[graft] final case class Gate(held: Option[Map[Int, Long]]) {
+    def onePartition: Boolean = held.isDefined
+    def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      held.fold(df)(Tables.onePartition(df, _))
   }
-
-  private[graft] val Distributed = Gate(onePartition = false)
 
   /** A [[gate]] decision, posted on the listener bus (`tools.Trace
-    * --plan` prints it): the bytes the loop's input checkpoint blocks
-    * hold (-1: an input is not a local checkpoint; above the threshold
-    * it may count only the inputs already written) against the
-    * broadcast threshold. */
-  final case class LoopGate(loop: String, heldBytes: Long, threshold: Long,
-      onePartition: Boolean) extends org.apache.spark.scheduler.SparkListenerEvent
+    * --plan` prints it): the file bytes of the site's parquet-scan
+    * inputs and the bytes its input checkpoint blocks hold (-1: an input
+    * is neither; above the threshold it may count only the inputs
+    * already written) against the broadcast threshold. */
+  final case class LoopGate(site: String, scanBytes: Long, heldBytes: Long,
+      threshold: Long, onePartition: Boolean)
+      extends org.apache.spark.scheduler.SparkListenerEvent
 
-  /** The size gate of an iterative loop. Its rounds cost a few jobs of
-    * a few tasks each when distributed, and per-job cost, not data,
-    * bounds them while the state fits one task. So when the blocks of
-    * the loop's input checkpoints ([[Tables.heldBytes]]) hold no more
-    * than `spark.sql.autoBroadcastJoinThreshold` — the bytes Spark
-    * already ships whole to every task — the loop runs in one
-    * partition: its inputs become one-partition views of the same
-    * blocks ([[Tables.onePartition]]), and with [[Gate.union]],
-    * [[Gate.side]] and [[Tables.ck]] each round plans no exchange and
-    * runs inside the consumer's action. Above it, or when an input is
-    * not a local checkpoint, the loop runs its distributed plan with
-    * `inputs` unchanged. */
-  private[graft] def gate(loop: String, inputs: org.apache.spark.sql.DataFrame*)
-      : (Gate, Seq[org.apache.spark.sql.DataFrame]) = {
+  /** The size gate of a graph-family plan. Iterative rounds and motif
+    * joins cost a few jobs of a few tasks each when distributed, and
+    * per-job cost, not data, bounds them while the data fits one task.
+    * So when the leaves of `inputs` — parquet scans by their file bytes
+    * ([[Tables.scanBytes]]), local checkpoints by the bytes their
+    * blocks hold ([[Tables.heldBytes]]) — add up to no more than
+    * `spark.sql.autoBroadcastJoinThreshold`, the bytes Spark itself
+    * would ship whole to every task, the site's plans run in one
+    * partition: each plans no exchange and runs inside its consumer's
+    * action, and a checkpoint of one takes [[Tables.ck]]'s RDD path
+    * with no job. Above it, or when a leaf is neither (an in-memory
+    * relation, a reliable checkpoint), the distributed plans run
+    * unchanged. */
+  private[graft] def gate(site: String, inputs: org.apache.spark.sql.DataFrame*): Gate = {
     val s = inputs.head.sparkSession
     val threshold = Bridge.broadcastThreshold(s)
-    val held = Tables.heldBytes(inputs, threshold)
+    val scan = Tables.scanBytes(inputs)
+    val held = Tables.heldBytes(inputs, threshold - scan)
     val bytes = held.fold(-1L)(_.values.sum)
-    val one = held.isDefined && bytes <= threshold
-    Bridge.post(s.sparkContext, LoopGate(loop, bytes, threshold, one))
-    if (one) (Gate(onePartition = true), inputs.map(Tables.onePartition(_, held.get)))
-    else (Distributed, inputs)
+    val one = held.isDefined && scan + bytes <= threshold
+    Bridge.post(s.sparkContext, LoopGate(site, scan, bytes, threshold, one))
+    Gate(held.filter(_ => one))
   }
+
+  /** `df` as [[gate]] decides on its own leaves. */
+  private def gated(site: String, df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = gate(site, df)(df)
 
   /** Per-entity neighbor-list cap for `q_graph_jaccard`'s pair
     * generation. 2^16 is far above any fixture degree (|suppliers| is
@@ -187,8 +176,7 @@ object GraphOps {
     * lineage cut an iterative Spark job needs anyway — whose blocks
     * materialize inside the round's delta check, the round's only
     * explicit action (the ccLabels batching discipline). Gated
-    * ([[gate]]): in one partition the rank join takes the keyed
-    * branch. The check
+    * ([[gate]]) on `edgesW` and `init`. The check
     * itself is the union form: a signed per-node sum over the two
     * |V|-sized checkpointed rank tables, one partial-aggregable
     * keyed aggregate — no join. The delta read is a metadata-scale
@@ -199,8 +187,8 @@ object GraphOps {
                maxIters: Int, tol: Double,
                broadcastRank: Boolean = true)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    val (g, Seq(edges, init0)) = gate("pagerank", edgesW, init)
-    var r = Tables.ck(init0)
+    val g = gate("pagerank", edgesW, init)
+    var r = Tables.ck(g(init))
     var it = 0
     var delta = Double.PositiveInfinity
     while (it < maxIters && delta >= tol) {
@@ -211,8 +199,7 @@ object GraphOps {
       // separate materialization job per round ON TOP of the delta
       // job (and of the broadcast build the next round forces
       // anyway) — one whole job per round for nothing.
-      val rNew = Tables.ck(
-        rankStep(edges, r, n, broadcastRank && !g.onePartition))
+      val rNew = Tables.ck(g(rankStep(edgesW, r, n, broadcastRank)))
       val rPrev = r
       r = rNew
       it += 1
@@ -230,10 +217,10 @@ object GraphOps {
       // zero rows is SQL NULL (an empty graph) — treat as converged
       // rather than NPE on the primitive read.
       if (it < maxIters) {
-        val deltaRow = g.union(rNew.select(col("node"), col("r").as("v")),
-            rPrev.select(col("node"), (-col("r")).as("v")))
+        val deltaRow = g(rNew.select(col("node"), col("r").as("v"))
+            .unionByName(rPrev.select(col("node"), (-col("r")).as("v")))
           .groupBy(col("node")).agg(abs(sum(col("v"))).as("dn"))
-          .agg(sum(col("dn"))).head
+          .agg(sum(col("dn")))).head
         delta = if (deltaRow.isNullAt(0)) 0.0 else deltaRow.getDouble(0)
       }
     }
@@ -501,13 +488,12 @@ object GraphOps {
     * per-round label materialization is the same trade every
     * distributed LPA/Pregel implementation makes. Gated ([[gate]]): in
     * one partition no round runs a job of its own. */
-  private[graft] def lpaLabels(edges0: org.apache.spark.sql.DataFrame,
+  private[graft] def lpaLabels(edges: org.apache.spark.sql.DataFrame,
       rounds: Int): org.apache.spark.sql.DataFrame = {
-    val (g, Seq(edges)) = gate("lpaLabels", edges0)
-    var lbl = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .transform(Tables.ck)
-    (1 to rounds).foreach { _ => lbl = lpaStep(edges, lbl, g).transform(Tables.ck) }
+    val g = gate("lpaLabels", edges)
+    var lbl = Tables.ck(g(edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))))
+    (1 to rounds).foreach { _ => lbl = Tables.ck(g(lpaStep(edges, lbl))) }
     lbl
   }
 
@@ -515,13 +501,11 @@ object GraphOps {
     * extracted so GateSpec can pin the round plan the per-round
     * checkpoint hides. */
   private[graft] def lpaStep(edges: org.apache.spark.sql.DataFrame,
-      lbl: org.apache.spark.sql.DataFrame, g: Gate)
-      : org.apache.spark.sql.DataFrame = {
-    val votes = g.union(edges
-        .join(g.side(lbl.select(col("node").as("src"), col("lbl").as("l")),
-          identity), Seq("src"))
-        .select(col("dst").as("node"), col("l")),
-      lbl.select(col("node"), col("lbl").as("l")))
+      lbl: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val votes = edges
+      .join(lbl.select(col("node").as("src"), col("lbl").as("l")), Seq("src"))
+      .select(col("dst").as("node"), col("l"))
+      .unionByName(lbl.select(col("node"), col("lbl").as("l")))
       .groupBy(col("node"), col("l")).agg(count(lit(1)).as("c"))
     // Per-node argmax as min(struct(-c, l)) — struct ordering is
     // field-by-field, so this IS "order by c desc, l" with the same
@@ -552,12 +536,11 @@ object GraphOps {
       import s.implicits._
       val li = t(s, d, "lineitem").filter($"l_quantity" >= 45)
         .select($"l_orderkey", $"l_partkey")
-      li.as("a").join(li.as("b"),
+      Tables.ck(gated("copurchaseEdges", li.as("a").join(li.as("b"),
           $"a.l_orderkey" === $"b.l_orderkey" &&
             $"a.l_partkey" < $"b.l_partkey")
         .select($"a.l_partkey".as("p1"), $"b.l_partkey".as("p2"))
-        .distinct()
-        .transform(Tables.ck)
+        .distinct()))
     }
 
   /** `rounds` triangle-support peel iterations toward the 4-TRUSS of
@@ -610,14 +593,13 @@ object GraphOps {
       // exchange + hash-agg phases. The string ids themselves cannot
       // change (CC labels are lexicographic string minima pinned by
       // the oracles).
-      t(s, d, "orders").where($"o_totalprice" > 450000)
+      Tables.ck(gated("ccEdges", t(s, d, "orders").where($"o_totalprice" > 450000)
         .join(t(s, d, "lineitem"),
           $"o_orderkey" === $"l_orderkey" && $"l_quantity" >= 47)
         .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"))
         .distinct()
         .select(concat(lit("c"), $"ck".cast("string")).as("src"),
-                concat(lit("s"), $"sk".cast("string")).as("dst"))
-        .transform(Tables.ck)
+                concat(lit("s"), $"sk".cast("string")).as("dst"))))
     }
 
   /** The CONVERGED component labels of the [[ccEdges]] fixture graph
@@ -883,27 +865,16 @@ object GraphOps {
     edges
   }
 
-  /** The symmetrized customer—supplier trade graph (distinct
-    * (custkey, suppkey) pairs that share an order; node ids namespaced
-    * 'c…'/'s…' so the key spaces can't collide), materialized ONCE per
-    * (session, dir) and shared by pagerank / bfs / degreedist. Before
-    * this was shared, each of the three queries rebuilt the same
-    * orders⋈lineitem distinct behind its own localCheckpoint — 3
-    * builds and 3 never-freed persisted block sets in a multi-query
-    * JVM. This is the checkpoint a production iterative job does
-    * anyway to cut lineage growth; every iteration (and the
-    * degree/count branches) re-reads it, and without it the unrolled
-    * plan recomputes the join per reference — measured 11 s → ~1 s
-    * at sf0.1. */
   /** Force-build the family-shared edge/degree memos. Bench calls
     * this as a SEPARATELY-TIMED step when its sweep enters the
     * q_graph_ family, so the shared build cost shows as its own
     * `_memo_graph` line instead of being mis-attributed to whichever
-    * graph query runs alphabetically first.
-    * Memo share of q_graph_bfs's row (~3 of 4.5 s): BUILD_NOTES.md. */
+    * graph query runs alphabetically first. [[tradeArcs]] holds the
+    * blocks of [[tradeEdges]]; counting it, not the symmetrizing union,
+    * writes them without a union's exchange. */
   private[graft] def warmSharedMemo(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    tradeEdges(s, d).count()
+    tradeArcs(s, d).count()
     tradeDeg(s, d).count()
   }
 
@@ -917,11 +888,10 @@ object GraphOps {
   private[graft] def tradePairs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_pairs") {
       import s.implicits._
-      t(s, d, "orders")
+      Tables.ck(gated("tradePairs", t(s, d, "orders")
         .join(t(s, d, "lineitem"), $"o_orderkey" === $"l_orderkey")
         .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"))
-        .distinct()
-        .transform(Tables.ck)
+        .distinct()))
     }
 
   /** The directed (c→s) half of [[tradeEdges]], checkpointed. */
@@ -940,6 +910,12 @@ object GraphOps {
         .transform(Tables.ck)
     }
 
+  /** The symmetrized customer—supplier trade graph: distinct
+    * (custkey, suppkey) pairs that share an order, node ids namespaced
+    * 'c…'/'s…' so the key spaces cannot collide. One memo per (session,
+    * dir), shared by every trade-graph row: each iteration and each
+    * degree or count branch re-reads its checkpointed half instead of
+    * recomputing the orders⋈lineitem join per reference. */
   private[graft] def tradeEdges(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_edges_sym") {
       import s.implicits._
@@ -960,8 +936,8 @@ object GraphOps {
   private[graft] def tradeDeg(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_deg") {
       import s.implicits._
-      tradeEdges(s, d).groupBy($"src").agg(count(lit(1)).as("d"))
-        .transform(Tables.ck)
+      Tables.ck(gated("tradeDeg",
+        tradeEdges(s, d).groupBy($"src").agg(count(lit(1)).as("d"))))
     }
 
   /** [[tradeEdges]] with the source's degree folded onto each edge —
@@ -979,11 +955,10 @@ object GraphOps {
     Tables.derived(s, d, "trade_edges_w") {
       import s.implicits._
       val deg = tradeDeg(s, d)
-      val w = tradeArcs(s, d)
+      val w = Tables.ck(gated("tradeEdgesW", tradeArcs(s, d)
         .join(broadcast(deg), "src")
         .join(broadcast(deg.select($"src".as("dst"), $"d".as("dd"))), "dst")
-        .select($"src", $"dst", $"d", $"dd")
-        .transform(Tables.ck)
+        .select($"src", $"dst", $"d", $"dd")))
       w.select($"src", $"dst", $"d")
         .unionByName(w.select($"dst".as("src"), $"src".as("dst"), $"dd".as("d")))
     }
@@ -1067,29 +1042,25 @@ object GraphOps {
     * and idx = h60 mod deg + 1 always hits exactly one neighbor, so
     * each step advances EVERY walker exactly once — walk-count
     * conservation (|rows| = |V| after every step) is the OpsSpec law.
-    * Gated ([[gate]]): in one partition both joins take the keyed
-    * branch. */
+    * Gated ([[gate]]) on the trade-graph memos. */
   private[graft] def randomWalks(s: org.apache.spark.sql.SparkSession,
       d: String, steps: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val (g, Seq(edges, deg0)) =
-      gate("randomWalks", tradeEdges(s, d), tradeDeg(s, d))
+    val g = gate("randomWalks", tradeEdges(s, d), tradeDeg(s, d))
     val wN = Window.partitionBy($"src").orderBy($"dst")
-    val nbr = edges
+    val nbr = Tables.ck(g(tradeEdges(s, d)
       .withColumn("idx", row_number().over(wN))
-      .select($"src".as("node"), $"dst", $"idx")
-      .transform(Tables.ck)
-    val deg = deg0.select($"src".as("node"), $"d")
+      .select($"src".as("node"), $"dst", $"idx")))
+    val deg = tradeDeg(s, d).select($"src".as("node"), $"d")
     var cur = deg.select($"node".as("walker"), $"node")
     (1 to steps).foreach { k =>
-      cur = g.one(cur.join(g.side(deg), "node"))
+      cur = Tables.ck(g(cur.join(broadcast(deg), "node")
         .withColumn("idx",
           (Tables.h60(concat($"walker", lit(s":$k"))) % $"d")
             .cast("int") + 1)
         .select($"walker", $"node", $"idx")
-        .join(g.side(nbr, identity), Seq("node", "idx"))
-        .select($"walker", $"dst".as("node"))
-        .transform(Tables.ck)
+        .join(nbr, Seq("node", "idx"))
+        .select($"walker", $"dst".as("node"))))
     }
     cur
   }
@@ -1108,28 +1079,34 @@ object GraphOps {
     * builds the anti-join hash map per partition, and pairing with
     * src-bucketed edges ([[tradeEdgesBkt]]) keeps the |E| side
     * exchange-free exactly as in the co-partitioned PageRank.
-    * Strategy agreement is pinned in OpsSpec. Gated ([[gate]]): in one
-    * partition both set joins take the keyed branch. */
-  private[graft] def bfsFrontiers(edges0: org.apache.spark.sql.DataFrame,
+    * Strategy agreement is pinned in OpsSpec. Gated ([[gate]]) on
+    * `edges` and `seed`. */
+  private[graft] def bfsFrontiers(edges: org.apache.spark.sql.DataFrame,
       seed: org.apache.spark.sql.DataFrame, hops: Int,
       broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
-    val (g, Seq(edges, seed0)) = gate("bfsFrontiers", edges0, seed)
-    def side(df: org.apache.spark.sql.DataFrame) =
-      g.side(df, if (broadcastSets) broadcast(_) else _.hint("shuffle_hash"))
-    var visited = seed0
-    var frontier = seed0
+    val g = gate("bfsFrontiers", edges, seed)
+    var visited = seed
+    var frontier = seed
     val sizes = (1 to hops).map { hop =>
-      // One partition below the distinct, not above it: the optimizer
-      // pushes a left-anti join down through a coalesce.
-      frontier = g.one(edges.join(side(frontier), col("src") === col("node"))
-          .select(col("dst").as("node"))).distinct()
-        .join(side(visited), Seq("node"), "left_anti")
-        .transform(Tables.ck)
-      visited = g.union(visited, frontier)
+      frontier = Tables.ck(g(bfsHop(edges, frontier, visited, broadcastSets)))
+      visited = visited.unionByName(frontier)
       frontier.agg(count(lit(1)).as("frontier"))
         .select(lit(hop).as("hop"), col("frontier"))
     }
-    sizes.reduce(g.union).orderBy(col("hop"))
+    g(sizes.reduce(_ unionByName _).orderBy(col("hop")))
+  }
+
+  /** One [[bfsFrontiers]] hop: the nodes one edge out of `frontier`
+    * that are not in `visited` — extracted so GateSpec can pin the
+    * round plan the per-round checkpoint hides. */
+  private[graft] def bfsHop(edges: org.apache.spark.sql.DataFrame,
+      frontier: org.apache.spark.sql.DataFrame, visited: org.apache.spark.sql.DataFrame,
+      broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
+    def side(df: org.apache.spark.sql.DataFrame) =
+      if (broadcastSets) broadcast(df) else df.hint("shuffle_hash")
+    edges.join(side(frontier), col("src") === col("node"))
+      .select(col("dst").as("node")).distinct()
+      .join(side(visited), Seq("node"), "left_anti")
   }
 
   /** [[tradeEdgesW]] written ONCE per (session, dir) as a table
@@ -1280,12 +1257,12 @@ object GraphOps {
     * zero dropped hints — distributed. Under a one-partition [[gate]]
     * it plans no exchange at all (GateSpec). */
   private[graft] def pprStep(edges: org.apache.spark.sql.DataFrame,
-      r: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame,
-      g: Gate = Distributed): org.apache.spark.sql.DataFrame =
-    g.union(edges.join(g.side(r), col("src") === col("node"))
-        .select(col("dst").as("node"), (col("r") / col("d")).as("sw"),
-          lit(0.0).as("tp")),
-      seed.select(col("node"), lit(0.0).as("sw"), lit(0.15).as("tp")))
+      r: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    edges.join(broadcast(r), col("src") === col("node"))
+      .select(col("dst").as("node"), (col("r") / col("d")).as("sw"),
+        lit(0.0).as("tp"))
+      .unionByName(seed.select(col("node"), lit(0.0).as("sw"), lit(0.15).as("tp")))
       .groupBy(col("node"))
       .agg(sum(col("sw")).as("sw"), max(col("tp")).as("tp"))
       .select(col("node"), (lit(0.85) * col("sw") + col("tp")).as("r"))
@@ -1355,13 +1332,14 @@ object GraphOps {
     // rounding on BOTH sides (the micro-nat kernel move).
     "q_graph_ppr" -> ((s, d) => {
       import s.implicits._
-      val (g, Seq(edges, deg)) = gate("ppr", tradeEdgesW(s, d), tradeDeg(s, d))
-      val seed = deg.select($"src".as("node"), $"d".as("dg"))
+      val edges = tradeEdgesW(s, d)
+      val g = gate("ppr", edges, tradeDeg(s, d))
+      val seed = tradeDeg(s, d).select($"src".as("node"), $"d".as("dg"))
         .orderBy($"dg".desc, $"node").limit(1)
         .select($"node").transform(Tables.ck)
       var r = seed.select($"node", lit(1.0).as("r"))
         .transform(Tables.ck)
-      for (_ <- 1 to Iters) r = pprStep(edges, r, seed, g).transform(Tables.ck)
+      for (_ <- 1 to Iters) r = Tables.ck(g(pprStep(edges, r, seed)))
       r.select($"node", (floor($"r" * 1e6 + 0.5) / 1e6).as("ppr"))
         .orderBy($"ppr".desc, $"node")
         .limit(20)
@@ -1473,6 +1451,7 @@ object GraphOps {
     "q_graph_triangles" -> ((s, d) => {
       import s.implicits._
       val e = copurchaseEdges(s, d)
+      val g = gate("q_graph_triangles", e)
       val deg = e.select($"p1".as("n")).unionByName(e.select($"p2".as("n")))
         .groupBy($"n").agg(count(lit(1)).as("dg"))
       // Orient toward the higher-(degree, id) endpoint; carry the
@@ -1480,24 +1459,23 @@ object GraphOps {
       // same way the closing edge is directed. Degree tables are
       // |V|-sized — broadcast.
       val fwd = $"d1" < $"d2" || ($"d1" === $"d2" && $"p1" < $"p2")
-      val dir = e
+      val dir = Tables.ck(g(e
         .join(broadcast(deg.select($"n".as("p1"), $"dg".as("d1"))), "p1")
         .join(broadcast(deg.select($"n".as("p2"), $"dg".as("d2"))), "p2")
         .select(
           when(fwd, $"p1").otherwise($"p2").as("src"),
           when(fwd, $"p2").otherwise($"p1").as("dst"),
-          when(fwd, $"d2").otherwise($"d1").as("ddg"))
-        .transform(Tables.ck)
+          when(fwd, $"d2").otherwise($"d1").as("ddg"))))
       val tri = dir.as("e1").join(dir.as("e2"),
           $"e1.src" === $"e2.src" &&
             ($"e1.ddg" < $"e2.ddg" ||
               ($"e1.ddg" === $"e2.ddg" && $"e1.dst" < $"e2.dst")))
         .select($"e1.src".as("ta"), $"e1.dst".as("tb"), $"e2.dst".as("tc"))
         .join(dir.as("e3"), $"tb" === $"e3.src" && $"tc" === $"e3.dst")
-      tri.select(explode(array($"ta", $"tb", $"tc")).as("partkey"))
+      g(tri.select(explode(array($"ta", $"tb", $"tc")).as("partkey"))
         .groupBy($"partkey").agg(count(lit(1)).as("n_tri"))
         .orderBy($"n_tri".desc, $"partkey")
-        .limit(10)
+        .limit(10))
     }),
 
     // Common-neighbor link prediction: Jaccard similarity of supplier
@@ -1521,20 +1499,21 @@ object GraphOps {
       // Checkpoint AFTER the cap: the capped list is what deg and
       // both self-join sides read (3 references), so this is the
       // table worth materializing once.
-      val e = capNeighbors(e0, JaccardCap).transform(Tables.ck)
+      val g = gate("q_graph_jaccard", e0)
+      val e = Tables.ck(g(capNeighbors(e0, JaccardCap)))
       val deg = e.groupBy($"sup").agg(count(lit(1)).as("dg"))
       val pairs = e.as("a").join(e.as("b"),
           $"a.c" === $"b.c" && $"a.sup" < $"b.sup")
         .groupBy($"a.sup".as("s1"), $"b.sup".as("s2"))
         .agg(count(lit(1)).as("common"))
-      pairs
+      g(pairs
         .join(broadcast(deg.select($"sup".as("s1"), $"dg".as("d1"))), "s1")
         .join(broadcast(deg.select($"sup".as("s2"), $"dg".as("d2"))), "s2")
         .select($"s1", $"s2", $"common",
           (floor($"common" * 1.0 / ($"d1" + $"d2" - $"common") * 1e4 + 0.5)
             / 1e4).as("jaccard"))
         .orderBy($"jaccard".desc, $"s1", $"s2")
-        .limit(10)
+        .limit(10))
     }),
 
     // BUTTERFLY COUNTING (Sanei-Mehri et al., KDD'18; Wang et al.) —
@@ -1564,19 +1543,20 @@ object GraphOps {
       // _memo_graph).
       val e0 = tradePairs(s, d)
         .select($"ck".as("c"), $"sk".as("sup"))
-      val e = capNeighbors(e0, JaccardCap).transform(Tables.ck)
+      val g = gate("q_graph_butterfly", e0)
+      val e = Tables.ck(g(capNeighbors(e0, JaccardCap)))
       val bf = e.as("a").join(e.as("b"),
           $"a.c" === $"b.c" && $"a.sup" < $"b.sup")
         .groupBy($"a.sup".as("s1"), $"b.sup".as("s2"))
         .agg(count(lit(1)).as("m"))
         .where($"m" >= 2)
         .select($"s1", $"s2", expr("m * (m - 1) DIV 2").as("bf"))
-      bf.select(explode(array($"s1", $"s2")).as("sup"), $"bf")
+      g(bf.select(explode(array($"s1", $"s2")).as("sup"), $"bf")
         .groupBy($"sup").agg(
           count(lit(1)).as("n_pairs"),
           sum($"bf").as("n_butterflies"))
         .orderBy($"n_butterflies".desc, $"sup")
-        .limit(10)
+        .limit(10))
     }),
 
     // Bounded-hop BFS from the highest-degree node: frontier sizes
@@ -1612,30 +1592,28 @@ object GraphOps {
     // sits closer than 1/6·10⁴ᐨ¹ to a floor boundary.
     "q_graph_closeness" -> ((s, d) => {
       import s.implicits._
-      val (g, Seq(edges, deg)) =
-        gate("closeness", tradeEdges(s, d), tradeDeg(s, d))
-      val seeds = deg.orderBy($"d".desc, $"src").limit(4)
+      val g = gate("closeness", tradeEdges(s, d), tradeDeg(s, d))
+      val seeds = tradeDeg(s, d).orderBy($"d".desc, $"src").limit(4)
         .select($"src".as("seed"))
       var visited = seeds
         .select($"seed", $"seed".as("node"), lit(0).as("dist"))
       var frontier = visited
       (1 to 3).foreach { hop =>
-        frontier = g.one(edges
-            .join(g.side(frontier.select($"seed", $"node".as("src"))),
+        frontier = Tables.ck(g(tradeEdges(s, d)
+            .join(broadcast(frontier.select($"seed", $"node".as("src"))),
               Seq("src"))
-            .select($"seed", $"dst".as("node"))).distinct()
-          .join(g.side(visited.select($"seed", $"node")),
+            .select($"seed", $"dst".as("node")).distinct()
+          .join(broadcast(visited.select($"seed", $"node")),
             Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(hop))
-          .transform(Tables.ck)
-        visited = g.union(visited, frontier)
+          .withColumn("dist", lit(hop))))
+        visited = visited.unionByName(frontier)
       }
-      visited.where($"dist" >= 1)
+      g(visited.where($"dist" >= 1)
         .groupBy($"seed").agg(
           count(lit(1)).as("n_reached"),
           (floor(sum(lit(1.0) / $"dist") * 1e4 + 0.5) / 1e4)
             .as("harmonic"))
-        .orderBy($"seed")
+        .orderBy($"seed"))
     }),
 
     // APPROXIMATE BETWEENNESS CENTRALITY — Brandes' exact dependency
@@ -1957,7 +1935,7 @@ object GraphOps {
         .join(broadcast(deg.select($"src", $"d".as("dx"))), "src")
         .join(broadcast(deg.select($"src".as("dst"), $"d".as("dy"))),
           "dst")
-      j.agg(count(lit(1)).as("n"),
+      gated("q_graph_assortativity", j.agg(count(lit(1)).as("n"),
           sum($"dx".cast("decimal(38,0)")).as("sx"),
           sum($"dy".cast("decimal(38,0)")).as("sy"),
           sum($"dx".cast("decimal(19,0)")
@@ -1974,7 +1952,7 @@ object GraphOps {
                   - $"sx".cast("double") * $"sx".cast("double"))
                 * ($"n".cast("double") * $"syy".cast("double")
                   - $"sy".cast("double") * $"sy".cast("double"))))
-            * 1e4 + 0.5) / 1e4).as("assortativity"))
+            * 1e4 + 0.5) / 1e4).as("assortativity")))
     }),
 
     // 2-CORE of the sparse trade graph by ITERATIVE PEELING — the
@@ -2061,16 +2039,17 @@ object GraphOps {
     // round: the bpetrain lesson). The one driver-side value is the
     // 1-row (max, count) aggregate that sizes N and the round count —
     // metadata-scale, the q_scan_binaryfile convention. Gated
-    // ([[gate]]) on the checkpointed supplier keys.
+    // ([[gate]]) on the supplier scan.
     "q_graph_scc" -> ((s, d) => {
       import s.implicits._
-      val (g, Seq(sup)) = gate("scc", Tables.ck(
-        t(s, d, "supplier").select($"s_suppkey".cast("long").as("k"))))
+      val keys = t(s, d, "supplier").select($"s_suppkey".cast("long").as("k"))
+      val g = gate("scc", keys)
+      val sup = Tables.ck(g(keys))
       val mc = sup.agg(max($"k"), count(lit(1))).collect()(0)
       val n = mc.getLong(0) + 1
       val rounds = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
-      val succ = Tables.ck(sup.select($"k", (($"k" * $"k" + 1) % n).as("v")))
+      val succ = Tables.ck(g(sup.select($"k", (($"k" * $"k" + 1) % n).as("v"))))
       // Checkpoint every SECOND doubling round (the ccStar batch=2
       // precedent): one unchecked self-join squares the reference
       // count to 4 reads of the last checkpoint — fine; a third would
@@ -2081,11 +2060,10 @@ object GraphOps {
       // Phase 1: jump-double to succ^(2^rounds); image = cycle nodes.
       var jump = succ
       for (i <- 1 to rounds) {
-        jump = ck2(g.one(jump.as("a").join(g.side(jump.as("b"), identity),
-            col("a.v") === col("b.k"))
+        jump = ck2(g(jump.as("a").join(jump.as("b"), col("a.v") === col("b.k"))
           .select(col("a.k").as("k"), col("b.v").as("v"))), i, rounds)
       }
-      val cyc = Tables.ck(jump.select($"v".as("k")).distinct())
+      val cyc = Tables.ck(g(jump.select($"v".as("k")).distinct()))
       // Phase 2: min-label doubling confined to the cycle set (cycle
       // successors stay in the set, so the restriction is closed).
       // Round count re-sized to the CYCLE population, not N — the
@@ -2095,21 +2073,20 @@ object GraphOps {
       val nCyc = math.max(2L, cyc.count())
       val rounds2 = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(nCyc - 1))
-      var lab = Tables.ck(succ.join(g.side(cyc, identity), "k")
-        .select($"k", $"v".as("jmp"), $"k".as("lab")))
+      var lab = Tables.ck(g(succ.join(cyc, "k")
+        .select($"k", $"v".as("jmp"), $"k".as("lab"))))
       for (i <- 1 to rounds2) {
-        lab = ck2(g.one(lab.as("a").join(g.side(lab.as("b"), identity),
-            col("a.jmp") === col("b.k"))
+        lab = ck2(g(lab.as("a").join(lab.as("b"), col("a.jmp") === col("b.k"))
           .select(col("a.k").as("k"), col("b.jmp").as("jmp"),
             least(col("a.lab"), col("b.lab")).as("lab"))), i, rounds2)
       }
       // Phase 3: tails are singleton SCCs labeled by themselves.
-      val scc = sup.join(g.side(lab.select($"k", $"lab"), identity), Seq("k"), "left")
+      val scc = sup.join(lab.select($"k", $"lab"), Seq("k"), "left")
         .select($"k", coalesce($"lab", $"k").as("scc_id"))
-      scc.groupBy($"scc_id").agg(count(lit(1)).as("n_nodes"))
+      g(scc.groupBy($"scc_id").agg(count(lit(1)).as("n_nodes"))
         .groupBy($"n_nodes".as("scc_size"))
         .agg(count(lit(1)).as("n_sccs"), min($"scc_id").as("min_scc_id"))
-        .orderBy($"scc_size")
+        .orderBy($"scc_size"))
     }),
   )
 

@@ -17,12 +17,13 @@ import graft.ops.{GraphOps, Tables}
   * builds included.
   *
   * `--plan` prints each query's formatted plan, its join/exchange
-  * operator counts, and the path each size-gated loop took
-  * (`GraphOps.gate`: one partition or distributed, with the bytes its
-  * input checkpoints hold against the broadcast threshold); `reps` = 0
-  * prints plans only. Confs are A/B'd through `-Dspark.*` system
-  * properties, which `SparkConf` loads — `-Dspark.graft.explainNoCk=true`
-  * prints through the memos' lazy checkpoint boundaries (see
+  * operator counts, and the path each size-gated site took
+  * (`GraphOps.gate`: one partition or distributed, with the file bytes
+  * of its parquet-scan inputs and the bytes its input checkpoints hold,
+  * against the broadcast threshold); `reps` = 0 prints plans only.
+  * Confs are A/B'd through `-Dspark.*` system properties, which
+  * `SparkConf` loads — `-Dspark.graft.explainNoCk=true` prints through
+  * the memos' lazy checkpoint boundaries (see
   * `Tables.ck`).
   *
   * usage: runMain graft.tools.Trace <sfDir> <q1,q2,...> [reps] [--plan]
@@ -82,9 +83,10 @@ object Trace {
         df.explain("formatted")
         Bridge.drainListeners(sc)
         gates.forEach { g =>
-          println(s"GATE $q ${g.loop}: " +
+          println(s"GATE $q ${g.site}: " +
             (if (g.onePartition) "one-partition" else "distributed") +
-            s", held ${g.heldBytes} B vs threshold ${g.threshold} B")
+            s", scan ${g.scanBytes} B + held ${g.heldBytes} B" +
+            s" vs threshold ${g.threshold} B")
         }
         val p = df.queryExecution.executedPlan.toString
         def c(op: String) = op.r.findAllIn(p).length

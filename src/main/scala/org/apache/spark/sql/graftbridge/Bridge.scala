@@ -21,6 +21,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** [[ofRows]] for a rewrite of an analyzed plan that adds only
+    * resolved nodes: marked analyzed, the plan skips the analyzer,
+    * which would otherwise run all its rules over it again. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
   /** Where the session catalog would place managed table `table` —
     * needed to clear a STALE location left by a prior JVM sharing the
     * warehouse dir (the catalog is in-memory per session, the files

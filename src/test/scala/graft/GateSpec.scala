@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import ops.{GraphOps, Tables}
 import SparkTestBase.sf0001
 
-/** The size-gated iterative graph loops (`GraphOps.gate`) and the
-  * one-partition checkpoint they rest on (`Tables.ck`): under the
-  * broadcast threshold a loop's rounds plan no exchange and run no job
-  * of their own, the checkpoints keep their real size, and the rows are
-  * the distributed plan's rows. */
+/** The size-gated graph plans (`GraphOps.gate`: the iterative loops,
+  * the shared memos and the motif rows) and the one-partition
+  * checkpoint they rest on (`Tables.ck`): under the broadcast threshold
+  * a gated plan plans no exchange and runs no job of its own, the
+  * checkpoints keep their real size, and the rows are the distributed
+  * plan's rows. */
 class GateSpec extends GraftSuite {
   private val sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
 
@@ -27,6 +28,26 @@ class GateSpec extends GraftSuite {
     e0.count()
     e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
   }
+
+  /** The jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  private val motifRows = Seq("q_graph_jaccard", "q_graph_triangles",
+    "q_graph_butterfly", "q_graph_assortativity")
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -53,63 +74,90 @@ class GateSpec extends GraftSuite {
     resetMemos()
     val s = spark
     import s.implicits._
-    val (g, Seq(edges)) = GraphOps.gate("lpaLabels", lpaGraph(s))
+    val edges = lpaGraph(s)
+    val g = GraphOps.gate("lpaLabels", edges)
     assert(g.onePartition)
-    val lbl = Tables.ck(edges.select($"src".as("node")).distinct()
-      .withColumn("lbl", $"node"))
-    val lpa = ranPlan(GraphOps.lpaStep(edges, lbl, g))
+    val lbl = Tables.ck(g(edges.select($"src".as("node")).distinct()
+      .withColumn("lbl", $"node")))
+    val lpa = ranPlan(g(GraphOps.lpaStep(edges, lbl)))
     assert(!lpa.contains("Exchange"), s"LPA round:\n$lpa")
 
-    val (g2, Seq(edgesW, deg)) = GraphOps.gate("pagerank",
-      GraphOps.tradeEdgesW(s, sf0001), GraphOps.tradeDeg(s, sf0001))
+    val edgesW = GraphOps.tradeEdgesW(s, sf0001)
+    val deg = GraphOps.tradeDeg(s, sf0001)
+    val g2 = GraphOps.gate("pagerank", edgesW, deg)
     assert(g2.onePartition)
-    val r = Tables.ck(deg.select($"src".as("node"), lit(0.01).as("r")))
-    val pr = ranPlan(GraphOps.rankStep(edgesW, r, 100L, broadcastRank = false))
+    val r = Tables.ck(g2(deg.select($"src".as("node"), lit(0.01).as("r"))))
+    val pr = ranPlan(g2(GraphOps.rankStep(edgesW, r, 100L, broadcastRank = true)))
     assert(!pr.contains("Exchange"), s"PageRank round:\n$pr")
     assert(pr.contains("ShuffledHashJoin"), pr)
 
-    val seed = Tables.ck(deg.orderBy($"d".desc, $"src").limit(1)
-      .select($"src".as("node")))
-    val r0 = Tables.ck(seed.select($"node", lit(1.0).as("r")))
-    val ppr = ranPlan(GraphOps.pprStep(edgesW, r0, seed, g2))
+    val seed = Tables.ck(g2(deg.orderBy($"d".desc, $"src").limit(1)
+      .select($"src".as("node"))))
+    val r0 = Tables.ck(g2(seed.select($"node", lit(1.0).as("r"))))
+    val ppr = ranPlan(g2(GraphOps.pprStep(edgesW, r0, seed)))
     assert(!ppr.contains("Exchange"), s"PPR round:\n$ppr")
     resetMemos()
   }
 
   test("q_graph_lpa and q_graph_scc run at most 5 jobs each at sf0.01") {
     Tables.names.foreach(n => Tables.t(spark, sf001, n).count())
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      for (name <- Seq("q_graph_lpa", "q_graph_scc")) {
-        resetMemos()
-        org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
-        jobs.set(0)
-        q(name, sf001).count()
-        org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
-        assert(jobs.get <= 5, s"$name ran ${jobs.get} jobs")
-      }
-    } finally {
-      sc.removeSparkListener(l)
+    for (name <- Seq("q_graph_lpa", "q_graph_scc")) {
       resetMemos()
+      val jobs = jobsOf(q(name, sf001).count())
+      assert(jobs <= 5, s"$name ran $jobs jobs")
     }
+    resetMemos()
+  }
+
+  test("with the shared memo warm, the memo step and each motif row run at most 2 jobs at sf0.01") {
+    Tables.names.foreach(n => Tables.t(spark, sf001, n).count())
+    resetMemos()
+    val memo = jobsOf(GraphOps.warmSharedMemo(spark, sf001))
+    assert(memo <= 2, s"warmSharedMemo ran $memo jobs")
+    for (name <- motifRows) {
+      val jobs = jobsOf(q(name, sf001).count())
+      assert(jobs <= 2, s"$name ran $jobs jobs")
+    }
+    resetMemos()
+  }
+
+  test("the motif rows plan no Exchange and no BroadcastExchange at sf0.01") {
+    resetMemos()
+    for (name <- motifRows) {
+      val p = ranPlan(q(name, sf001))
+      assert(!p.contains("Exchange"), s"$name:\n$p")
+    }
+    resetMemos()
+  }
+
+  test("a BFS round over one-partition memos built from parquet plans no Exchange") {
+    resetMemos()
+    val s = spark
+    import s.implicits._
+    val edges = GraphOps.tradeEdges(s, sf001)
+    val deg = GraphOps.tradeDeg(s, sf001)
+    val g = GraphOps.gate("bfsFrontiers", edges, deg)
+    assert(g.onePartition)
+    val seed = Tables.ck(g(deg.orderBy($"d".desc, $"src").limit(1)
+      .select($"src".as("node"))))
+    val hop1 = Tables.ck(g(GraphOps.bfsHop(edges, seed, seed, broadcastSets = true)))
+    val hop2 = ranPlan(g(GraphOps.bfsHop(edges, hop1, seed.unionByName(hop1),
+      broadcastSets = true)))
+    assert(!hop2.contains("Exchange"), s"BFS hop 2:\n$hop2")
+    resetMemos()
   }
 
   test("every gated loop returns the distributed plan's rows on the fixture") {
     resetMemos()
-    for (name <- Seq("q_graph_lpa", "q_graph_scc", "q_graph_pagerank",
-        "q_graph_ppr", "q_graph_bfs", "q_graph_closeness", "q_graph_randomwalk")) {
-      val (one, gOne) = loopGates(rows(q(name, sf0001)))
+    for (dir <- Seq(sf0001, sf001); name <- Seq("q_graph_lpa", "q_graph_scc",
+        "q_graph_pagerank", "q_graph_ppr", "q_graph_bfs", "q_graph_closeness",
+        "q_graph_randomwalk") ++ motifRows) {
+      val (one, gOne) = loopGates(rows(q(name, dir)))
       val (many, gMany) = loopGates(
-        rows(SparkEntry.queries(name)(distributedLoops, sf0001)))
-      assert(gOne.nonEmpty && gOne.forall(_.onePartition), s"$name: $gOne")
-      assert(gMany.nonEmpty && gMany.forall(!_.onePartition), s"$name: $gMany")
-      assert(one.nonEmpty && one === many, name)
+        rows(SparkEntry.queries(name)(distributedLoops, dir)))
+      assert(gOne.nonEmpty && gOne.forall(_.onePartition), s"$dir $name: $gOne")
+      assert(gMany.nonEmpty && gMany.forall(!_.onePartition), s"$dir $name: $gMany")
+      assert(one.nonEmpty && one === many, s"$dir $name")
     }
     resetMemos()
   }

@@ -2237,18 +2237,27 @@ class OpsSpec extends GraftSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).map { case (c, v) => c -> v.map(_._2).toSet }
     val full = lists(e)
-    // cap=1: every list shrinks to one supplier → pairing yields none.
-    val one = lists(ops.GraphOps.capNeighbors(e, 1))
-    assert(one.values.forall(_.size == 1) && one.keySet === full.keySet)
-    // cap=2: the hub is cut to exactly 2, small lists untouched.
-    val two = lists(ops.GraphOps.capNeighbors(e, 2))
-    assert(two(10L).size === 2 && two(10L).subsetOf(full(10L)))
-    assert(two(20L) === full(20L) && two(30L) === full(30L))
-    // cap above the max degree is the identity — the default regime
-    // the declared query runs in at fixture scale.
-    assert(lists(ops.GraphOps.capNeighbors(e, 100)) === full)
-    // Hash-order selection is content-keyed: rerun agrees exactly.
-    assert(lists(ops.GraphOps.capNeighbors(e, 2)) === two)
+    // Both paths: the distributed plan, and one partition under the gate.
+    val e1 = ops.Tables.ck(e.coalesce(1))
+    val g = ops.GraphOps.gate("capNeighbors", e1)
+    assert(g.onePartition)
+    for ((in, path) <- Seq[(org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        e -> identity, e1 -> (df => g(df)))) {
+      def capped(cap: Int) = lists(path(ops.GraphOps.capNeighbors(in, cap)))
+      // cap=1: every list shrinks to one supplier → pairing yields none.
+      val one = capped(1)
+      assert(one.values.forall(_.size == 1) && one.keySet === full.keySet)
+      // cap=2: the hub is cut to exactly 2, small lists untouched.
+      val two = capped(2)
+      assert(two(10L).size === 2 && two(10L).subsetOf(full(10L)))
+      assert(two(20L) === full(20L) && two(30L) === full(30L))
+      // cap above the max degree is the identity — the default regime
+      // the declared query runs in at fixture scale.
+      assert(capped(100) === full)
+      // Hash-order selection is content-keyed: rerun agrees exactly.
+      assert(capped(2) === two)
+    }
   }
 
   test("bfsFrontiers keyed (shuffle_hash) strategy agrees with broadcast, and plans no broadcast") {

@@ -298,7 +298,12 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   test("q_graph_jaccard: pair generation keyed on the shared customer, degree joins broadcast") {
-    val p = plan("q_graph_jaccard")
+    // The distributed plan: under the size gate the fixture row runs in
+    // one partition with keyed joins instead (GateSpec pins that plan).
+    resetMemos()
+    val p = SparkEntry.queries("q_graph_jaccard")(distributedLoops, sf0001)
+      .queryExecution.executedPlan.toString
+    resetMemos()
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     assert(p.contains("BroadcastHashJoin"),
       s"the |S|-sized degree tables must broadcast:\n$p")
