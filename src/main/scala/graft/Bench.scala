@@ -7,9 +7,9 @@ import java.nio.file.{Files, Paths}
   * `bench.json` file in the cwd so the driver can parse the result
   * even when sbt decorates stdout with [info] prefixes.
   *
-  * Failures are NOT folded into timings (round-1 flaw): a failing
-  * query records -1.0 and its name lands in `errors`; the `total`
-  * covers successful queries only.
+  * Failures are not folded into timings: a failing query records -1.0
+  * and its name lands in `errors`; the `total` covers successful
+  * queries only.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,110 +21,35 @@ object Bench {
     val spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Warm-up: JVM/codegen/parquet-footer costs must not be charged to
-    // whichever query happens to run first (round-1: +7s on q_agg_stats).
-    ops.Tables.names.foreach { n =>
-      try ops.Tables.t(spark, sfDir, n).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    // Exercise the physical-operator paths whose first use pays a
-    // one-time JIT/codegen-infrastructure cost that would otherwise be
-    // charged to whichever query hits them first: the typed-Aggregator
-    // ObjectHashAggregate path (q_text_heavy paid ~2s for it — it runs
-    // alphabetically before q_udaf_typed) and the window path. Tiny
-    // synthetic input: the cost being moved is compilation, not data.
-    // Guarded like the table warm-up: a warm-up failure must cost its
-    // speedup, never the whole bench run (the failing path will then
-    // surface as that query's own error entry, not a missing bench.json).
-    try {
-      import org.apache.spark.sql.functions.{udaf => mkUdaf, _}
-      import org.apache.spark.sql.expressions.Window
-      val mg = mkUdaf(new functions.MisraGries(8))
-      val tiny = spark.range(2000)
-        .select((col("id") % 50).cast("string").as("w"), col("id"))
-      tiny.agg(mg(col("w"))).count()
-      tiny.select(row_number().over(
-        Window.partitionBy(col("w")).orderBy(col("id"))).as("rn")).count()
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // JIT-warm the kernel statics that generated code dispatches to
-    // (CharBigrams/Shingles): C2 compilation of their loops is a
-    // one-time JVM cost — measured 3.3s -> 0.9s on q_text_charlm's
-    // first run — and belongs to warm-up, not to whichever query
-    // first touches a kernel.
-    try {
-      import org.apache.spark.unsafe.types.UTF8String
-      import org.apache.spark.sql.catalyst.util.ArrayData
-      val txt = UTF8String.fromString("the quick brown fox jumps over the lazy dog")
-      val words = ArrayData.toArrayData(
-        Array("a", "b", "c", "d", "e").map(UTF8String.fromString))
-      val hashes = ArrayData.toArrayData(Array.tabulate(16)(_.toLong * 7919))
-      var i = 0
-      while (i < 20000) {
-        functions.CharBigrams.bigramCounts(txt)
-        val sh = functions.Shingles.shingles(words, 3)
-        functions.Shingles.sortedIntersectCount(sh, sh)
-        functions.Shingles.minhashSig(hashes, 16)
-        i += 1
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // The three native merge operators run outside WholeStageCodegen
-    // and pay one-time costs no other query shares (strategy lowering
-    // through the session extension, EnsureRequirements over a custom
-    // node, the merge execs' output-projection codegen). Run the real
-    // queries once against the smallest sibling fixture so those
-    // costs land here, not in the single measured run — same policy
-    // as the window/UDAF/kernel warm-ups above. sf0.001 caches its
-    // own table plans, so the timed sfDir's reads are untouched.
-    try {
-      val tiny = new java.io.File(sfDir).getParentFile.toPath
-        .resolve("sf0.001").toString
-      if (new java.io.File(tiny).isDirectory && tiny != sfDir) {
-        Seq("q_win_session_native", "q_join_asof_native",
-          "q_join_range_native")
-          .foreach(q => SparkEntry.queries(q)(spark, tiny).count())
-        ops.Tables.resetDerived(spark)
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // q_join_bucket measures the CO-LOCATED JOIN; the bucketed tables
-    // are write-time setup amortized across every later join (the
-    // operator's whole point). Create them for the bench dir here so
-    // the measured run exercises the join, not the one-time layout
-    // build — the query's own tableExists check then reuses them.
-    try SparkEntry.queries("q_join_bucket")(spark, sfDir).count()
-    catch { case scala.util.control.NonFatal(_) => () }
+    // The one untimed warm-up, mirrored by perfbench's Agent.
+    Runner.warmTables(spark, sfDir)
 
-    // Measurement protocol: PASSES full sweeps over the suite; each
-    // query reports its MINIMUM across passes. Round 6 measured a 29%
-    // total swing on byte-identical code with the one-run protocol
-    // (BENCH_r05 101 s vs BENCH_r06 130 s; a map-only 100k-row
-    // get_json_object query recorded 3.97 s) — scheduler/GC jitter at
-    // local[32] with 176 back-to-back queries, which min-of-passes
-    // absorbs: the minimum is the standard steady-state estimator and
-    // never better than a time the plan actually achieved. bench.json
-    // is (re)written after EVERY pass, so a wall-clock cap that kills
-    // pass 2 still leaves a complete pass-1 result on disk.
+    // PASSES full sweeps (Runner.sweep); each row reports its MINIMUM
+    // across passes. One-run totals swing by tens of percent on
+    // identical code (scheduler and GC jitter of back-to-back rows);
+    // the minimum is never better than a time the plan achieved, and
+    // pass 1 carries every first-use cost (JIT, codegen, layout builds).
+    // bench.json is rewritten after every pass, so a wall-clock kill of
+    // a later pass still leaves a complete result on disk.
     val passes =
       math.max(1, sys.env.getOrElse("GRAFT_BENCH_PASSES", "2").toInt)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.queries.keys.toSeq.sorted
     val best = scala.collection.mutable.Map.empty[String, Double]
-    var attempted = Set.empty[String]
-    // errors = attempted but never-yet-succeeded, recomputed at every
-    // snapshot: a pass-1 failure must show in the pass-1 bench.json
-    // (the kill-safe artifact), not only after the final pass.
-    def failed: Set[String] = attempted.filterNot(best.contains)
-    // Streaming CHILD-SESSION rows (RocksDB / transformWithState
-    // providers) carry provider-startup variance the min-of-passes
-    // protocol under-samples — their history oscillates on unchanged
-    // code (r12: q_stream_rocksdb 1.36 → 2.12 s). Exactly these rows
-    // get ONE extra timed run after the sweep, and the set is
-    // declared in the artifact (extra_pass_rows, see render).
+    def record(took: Map[String, Double]): Unit = took.foreach { case (k, v) =>
+      best(k) = math.min(best.getOrElse(k, Double.MaxValue), v)
+    }
+    // errors: declared rows that have not yet succeeded, recomputed at
+    // every snapshot so a pass-1 failure shows in the pass-1 bench.json.
+    def failed: Set[String] = ordered.filterNot(best.contains).toSet
+    // The streaming child-session rows (RocksDB / transformWithState
+    // providers) carry a provider-startup variance min-of-passes
+    // under-samples, so exactly these rows get one extra timed sweep,
+    // declared in the artifact as extra_pass_rows.
     val streamExtra = Seq("q_stream_rocksdb", "q_stream_tws",
       "q_stream_tws_list", "q_stream_sink")
-    // Completed full sweeps so far — declared in the artifact as
-    // n_windows (r14 verdict What's-wrong #3: minima are monotone
-    // non-increasing in sample count, so cross-round ratios must
-    // carry their sampling depth; a close-time merge of several
-    // window files SUMS the counts). BenchDiff prints both sides'.
+    // Completed full sweeps, declared as n_windows: minima only fall as
+    // samples grow, so comparisons must carry their sampling depth (a
+    // merge of several bench files sums the counts).
     var sweepsDone = 0
     def render(results: Seq[(String, Double)], errors: Set[String])
         (fmt: Double => String): String = {
@@ -133,13 +58,6 @@ object Bench {
         errors.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      // Sampling-protocol annotation: the streaming child-session rows
-      // get one extra timed run (min-of-(passes+1), see streamExtra
-      // below), so their minima are drawn from a deeper sample than
-      // every other row's min-of-passes. Declaring the affected set in
-      // the artifact keeps cross-round comparisons honest — a
-      // BenchDiff consumer can see which rows mix protocols instead of
-      // inferring it from this file's prose.
       val extraJson = streamExtra.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       // the total is what the acceptance gate reads — keep it at full
@@ -147,88 +65,24 @@ object Bench {
       val tot = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
       s"""{"metric":"total","value":$tot,"unit":"sec","queries":$qs,"errors":$errJson,"extra_pass_rows":$extraJson,"n_windows":$sweepsDone,"sf":"$sfDir"}"""
     }
-    // "_"-prefixed entries are separately-timed SHARED-MEMO builds,
-    // not declared queries — they appear in the detail map (and count
-    // toward the total, conserving cost) so family costs stop being
-    // mis-attributed to whichever member runs alphabetically first.
+    // "_"-prefixed entries are separately timed shared-memo builds
+    // (Runner.MemoStep), not declared rows: they count toward the total,
+    // so a family's shared cost is not charged to its first row.
     def snapshot: Seq[(String, Double)] =
-      ordered.map { case (name, _) => name -> best.getOrElse(name, -1.0) } ++
+      ordered.map(name => name -> best.getOrElse(name, -1.0)) ++
         best.toSeq.filter(_._1.startsWith("_")).sortBy(_._1)
-    for (_ <- 1 to passes) {
-      ordered.zipWithIndex.foreach { case ((name, fn), i) =>
-        // Entering the graph family: build its shared edge/degree
-        // memo as its own timed line (r10 verdict task 6 — bfs's row
-        // was ~3 s memo + ~1.2 s of actual BFS).
-        val prev = if (i == 0) "" else ordered(i - 1)._1
-        if (name.startsWith("q_graph_") && !prev.startsWith("q_graph_")) {
-          val m0 = System.nanoTime()
-          try ops.GraphOps.warmSharedMemo(spark, sfDir)
-          catch { case scala.util.control.NonFatal(_) => () }
-          val mEl = (System.nanoTime() - m0) / 1e9
-          best("_memo_graph") =
-            math.min(best.getOrElse("_memo_graph", Double.MaxValue), mEl)
-        }
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        attempted += name
-        if (ok) best(name) =
-          math.min(best.getOrElse(name, Double.MaxValue), elapsed)
-        // Between queries (untimed — harness hygiene, not query work):
-        // drop the derived-plan memos and their checkpoint blocks, so a
-        // full-surface JVM doesn't carry every graph/text query's persisted
-        // blocks as GC ballast into every later query's measurement.
-        // Exception: alphabetically-consecutive runs WITHIN a family
-        // that shares Tables.derived intermediates keep the memo alive
-        // — q_graph_* share the checkpointed trade graph / cc edges /
-        // star labels, q_text_* share the memoized charlm score table
-        // (q_text_charlm and q_text_lmbucket would otherwise each pay
-        // the tokenize+score pass). Resetting mid-family would force
-        // each member to rebuild; the family's few bounded block sets
-        // drop at its end instead.
-        // q_pipe_ joined in round 12: the classifier-eval rows (auc/
-        // calibration/ndcg) share the memoized classify-scored table.
-        // q_sim_ joined in round 13: q_sim_cluster and q_sim_nndescent
-        // share the memoized cell-kNN pass (SimOps.cellKnn); q_dedup_
-        // too: q_dedup_substr_cut and q_dedup_substr_exact share the
-        // memoized span-detection pass (ExtOps.substrExactSpans).
-        val next = if (i + 1 < ordered.size) ordered(i + 1)._1 else ""
-        val sharedFamilies =
-          Seq("q_graph_", "q_text_", "q_pipe_", "q_sim_", "q_dedup_")
-        val sameFamily = sharedFamilies.exists(f =>
-          name.startsWith(f) && next.startsWith(f))
-        if (!sameFamily) ops.Tables.resetDerived(spark)
-      }
-      sweepsDone += 1
-      // Full precision to the plain file after each pass; the stdout
-      // line below stays COMPACT: the driver keeps only the last
-      // ~2000 chars of stdout (BENCH_r02's "tail" is exactly 2000
-      // chars, truncated mid-line → "parsed": null), so the line must
-      // fit in that window with sbt's "[success]" trailer.
-      Files.writeString(Paths.get("bench.json"),
-        render(snapshot, failed)(_.toString) + "\n")
-    }
-    // The declared-above streamExtra rows' one extra timed run: their
-    // reported minimum is min-of-(passes+1) while every other row
-    // stays untouched.
-    ordered.filter(o => streamExtra.contains(o._1))
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(_) => false }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        if (ok) best(name) =
-          math.min(best.getOrElse(name, Double.MaxValue), elapsed)
-        ops.Tables.resetDerived(spark)
-      }
-    Files.writeString(Paths.get("bench.json"),
+    def write(): Unit = Files.writeString(Paths.get("bench.json"),
       render(snapshot, failed)(_.toString) + "\n")
+    for (_ <- 1 to passes) {
+      record(Runner.sweep(spark, sfDir, ordered, "bench")((_, df) => df.count()))
+      sweepsDone += 1
+      // Full precision to the plain file; the stdout line below stays
+      // compact: a caller that keeps only the last ~2000 chars of stdout
+      // must still find the whole line there, with sbt's trailer.
+      write()
+    }
+    record(Runner.sweep(spark, sfDir, streamExtra, "bench")((_, df) => df.count()))
+    write()
     val results = snapshot
     val errJson =
       failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")

@@ -1,30 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [queryName ...] — trailing names restrict
-    // the dump to those queries (local iteration; driver passes none).
+    // Trailing names restrict the dump to those rows (local iteration;
+    // a full check passes none).
+    val only = args.drop(2).toSeq
+    Runner.requireArgs(args.length >= 2, only,
+      "runMain graft.Verify <sfDir> <outDir> [query ...]")
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shared engine posture (EngineSession — one definition for every
     // runner, so no entry point can drop an execution-affecting flag).
     val spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Same between-query hygiene as Bench: see Tables.resetDerived.
-      ops.Tables.resetDerived(spark)
+    // Bench's sweep, so the oracle checks the memo sharing Bench times.
+    Runner.sweep(spark, sfDir,
+      if (only.isEmpty) SparkEntry.queries.keys.toSeq else only, "verify") {
+      (name, df) => df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

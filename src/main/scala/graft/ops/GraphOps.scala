@@ -607,8 +607,8 @@ object GraphOps {
     * (q_graph_cc's census and q_graph_cc_star's size distribution) are
     * projections of ONE labeling, so a multi-query harness runs the
     * iterative loop — and its per-round convergence checks — exactly
-    * once (Bench's q_graph_* family window keeps the memo alive across
-    * the pair). The checkpoint is what the second consumer reads;
+    * once (a `Runner.sweep` keeps a memo alive until the q_graph_
+    * family ends). The checkpoint is what the second consumer reads;
     * without it, each reference would replay the whole converged loop
     * lineage. */
   private def ccStarLabels(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -865,13 +865,13 @@ object GraphOps {
     edges
   }
 
-  /** Force-build the family-shared edge/degree memos. Bench calls
-    * this as a SEPARATELY-TIMED step when its sweep enters the
-    * q_graph_ family, so the shared build cost shows as its own
-    * `_memo_graph` line instead of being mis-attributed to whichever
-    * graph query runs alphabetically first. [[tradeArcs]] holds the
-    * blocks of [[tradeEdges]]; counting it, not the symmetrizing union,
-    * writes them without a union's exchange. */
+  /** Force-build the family-shared edge/degree memos. `Runner.sweep`
+    * runs this as a step of its own (`Runner.MemoStep`) before the
+    * first q_graph_ row, so Bench times the shared build as its own
+    * `_memo_graph` line instead of charging it to whichever graph row
+    * runs first. [[tradeArcs]] holds the blocks of [[tradeEdges]];
+    * counting it, not the symmetrizing union, writes them without a
+    * union's exchange. */
   private[graft] def warmSharedMemo(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     tradeArcs(s, d).count()
@@ -1715,9 +1715,9 @@ object GraphOps {
     // and at training-data scale the shape that decides whether
     // near-dup clusters are a long tail of pairs or a few giant
     // blobs. Consumes the SAME memoized [[ccStarLabels]] as
-    // q_graph_cc: one iterative loop serves both rows (Bench's
-    // q_graph_* family window keeps the memo alive), and the oracle
-    // re-derives the distribution independently from the exact
+    // q_graph_cc: one iterative loop serves both rows (a Runner sweep
+    // keeps the memo alive until the q_graph_ family ends), and the
+    // oracle re-derives the distribution independently from the exact
     // recursive closure, so the sharing itself is differentially
     // checked.
     "q_graph_cc_star" -> ((s, d) => {

@@ -230,10 +230,12 @@ object Tables {
     * graph) per (session, dir, key) in the same weak-keyed cache as the
     * base tables. Queries that share an expensive intermediate — the
     * three graph queries all rebuild the same orders⋈lineitem distinct
-    * edge list — register it here so a multi-query run (Bench, Verify,
-    * DeterminismSpec) builds and persists it ONCE instead of leaving
-    * one never-freed checkpoint block per query. Keys are prefixed so
-    * they can't collide with base-table names. */
+    * edge list — register it here so a multi-query run (a
+    * `Runner.sweep`, DeterminismSpec) builds and persists it ONCE
+    * instead of leaving one never-freed checkpoint block per query.
+    * A memo lives until [[resetDerived]], which also drops every
+    * persisted block of the SparkContext. Keys are prefixed so they
+    * can't collide with base-table names. */
   def derived(spark: SparkSession, sfDir: String, key: String)
              (build: => DataFrame): DataFrame = {
     // NOT computeIfAbsent: derived builds recurse into this cache
@@ -256,20 +258,31 @@ object Tables {
     }
   }
 
-  /** Multi-query-harness hygiene (Bench, Verify): forget this
-    * session's derived-plan memos and drop every persisted block.
-    * The derived plans are localCheckpointed — once their blocks are
-    * unpersisted the truncated lineage cannot recompute them, so the
-    * memo entries MUST go with the blocks. Queries themselves never
-    * call this (the `(SparkSession, String) => DataFrame` contract has
-    * no after-action hook); harnesses call it BETWEEN queries so a
-    * full-surface JVM doesn't accumulate one never-freed checkpoint
-    * block set per graph/text query — pure GC pressure by the time
-    * the next query runs. */
+  /** Multi-query-harness hygiene (`Runner.sweep`, at each family
+    * boundary): forget this session's derived-plan memos and drop
+    * every persisted block of the SparkContext — the blocks of every
+    * session on it, not only this one's. The derived plans are
+    * localCheckpointed — once their blocks are unpersisted the
+    * truncated lineage cannot recompute them, so the memo entries MUST
+    * go with the blocks; another session sharing the context must
+    * forget its memos too before it reads them again. Queries
+    * themselves never call this (the `(SparkSession, String) =>
+    * DataFrame` contract has no after-action hook); a harness calls it
+    * between queries so a full-surface JVM doesn't accumulate one
+    * never-freed checkpoint block set per graph/text query — pure GC
+    * pressure by the time the next query runs. */
   def resetDerived(spark: SparkSession): Unit = {
     perSessionMap(spark).keySet.removeIf(_._2.startsWith("derived:"))
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
+  }
+
+  /** The keys of this session's live derived-plan memos. */
+  private[graft] def derivedKeys(spark: SparkSession): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    perSessionMap(spark).keySet.asScala.collect {
+      case (_, k) if k.startsWith("derived:") => k.stripPrefix("derived:")
+    }.toSet
   }
 
   private def perSessionMap(spark: SparkSession)

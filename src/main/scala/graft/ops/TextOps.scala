@@ -1380,9 +1380,9 @@ object TextOps {
     * (Tables.derived): four declared rows consume it (classify + the
     * three q_pipe_ evaluation rows), and the scored table is tiny
     * (one row per doc) while the tokenize+hash scan behind it is the
-    * whole cost — the q_text_charlm memo trade. Bench keeps q_pipe_
-    * family memos alive between consecutive rows for exactly this
-    * table. */
+    * whole cost — the q_text_charlm memo trade. A `Runner.sweep`
+    * keeps it alive across the three q_pipe_ rows; q_text_classify,
+    * in another family, builds its own. */
   private[graft] def classifyScored(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     Tables.derived(s, d, "classify_scored") {
@@ -1781,9 +1781,10 @@ object TextOps {
     * + materialized per (session, dir): q_dedup_minhash emits it
     * ordered, and q_dedup_minhash_cluster feeds the SAME pair set into
     * connected components — one LSH+verify pass serves both rows when
-    * they run back to back (Bench's q_dedup_ family window keeps the
-    * memo alive), and the two differentials check the shared pass from
-    * two independent oracles (pair-exact and closure-exact). */
+    * they run in one family (a `Runner.sweep` keeps the memo alive
+    * until the q_dedup_ family ends), and the two differentials check
+    * the shared pass from two independent oracles (pair-exact and
+    * closure-exact). */
   private[graft] def minhashPairsDf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     Tables.derived(s, d, "minhash_pairs") {
@@ -1939,10 +1940,10 @@ object TextOps {
   /** The loop's two deliverables under the shared derived-plan memo
     * (the lmScores move): q_text_bpetrain wants the merge table,
     * q_text_bpeapply the final symbol table — ONE training pass feeds
-    * both when they run back-to-back (Bench keeps the q_text_* family
-    * memo alive), instead of each re-materializing 12 rounds of
-    * checkpoints. Whichever deliverable is asked first seeds the
-    * other's memo from the same loop. */
+    * both when they run in one sweep (a `Runner.sweep` keeps the
+    * q_text_ family's memos alive), instead of each re-materializing
+    * 12 rounds of checkpoints. Whichever deliverable is asked first
+    * seeds the other's memo from the same loop. */
   private def bpeMergesDf(s: org.apache.spark.sql.SparkSession,
       d: String, rounds: Int): org.apache.spark.sql.DataFrame =
     Tables.derived(s, d, s"bpe_merges_$rounds") {

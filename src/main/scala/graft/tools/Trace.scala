@@ -2,17 +2,17 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.{EngineSession, SparkEntry}
+import graft.{EngineSession, Runner, SparkEntry}
 import graft.ops.{GraphOps, Tables}
 
 /** Per-query trace under the engine posture Bench times: warms the
-  * tables once (as Bench does), then per rep of each named query
-  * prints one line splitting its wall time into DataFrame build,
-  * physical planning (`queryExecution.executedPlan`) and the timed
-  * `.count()`, plus the jobs/stages/tasks it ran, the summed job time
-  * and the driver gap (wall minus that sum: planning, broadcast waits,
-  * scheduling), and the RDD blocks (checkpoint and persisted
-  * partitions) it wrote with their bytes. Every rep starts from
+  * tables once (`Runner.warmTables`, as Bench does), then per rep of
+  * each named query prints one line splitting its wall time into
+  * DataFrame build, physical planning (`queryExecution.executedPlan`)
+  * and the timed `.count()`, plus the jobs/stages/tasks it ran, the
+  * summed job time and the driver gap (wall minus that sum: planning,
+  * broadcast waits, scheduling), and the RDD blocks (checkpoint and
+  * persisted partitions) it wrote with their bytes. Every rep starts from
   * `Tables.resetDerived`, so every rep does the same work, shared memo
   * builds included.
   *
@@ -32,17 +32,18 @@ object Trace {
   def main(args: Array[String]): Unit = {
     val plan = args.contains("--plan")
     val pos = args.filterNot(_ == "--plan")
+    val names =
+      pos.lift(1).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    Runner.requireArgs(names.nonEmpty && pos.length <= 3 &&
+        pos.drop(2).forall(_.matches("\\d+")), names,
+      "runMain graft.tools.Trace <sfDir> <q1,q2,...> [reps] [--plan]")
     val sfDir = pos(0)
-    val names = pos(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (pos.length > 2) pos(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
     val sc = spark.sparkContext
     sc.setLogLevel("ERROR")
-    Tables.names.foreach { n =>
-      try Tables.t(spark, sfDir, n).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    Runner.warmTables(spark, sfDir)
 
     val started = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobMs = new java.util.concurrent.atomic.AtomicLong()
