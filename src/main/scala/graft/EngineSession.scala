@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   *    just multiplies task-scheduling overhead);
   *  - UTC session timezone (the fixtures' TIMESTAMP_NTZ columns must
   *    mean the same instant in both engines);
-  *  - `graft.GraftExtensions` (the native operator strategies);
+  *  - `graft.GraftExtensions` (the native operator strategies and
+  *    the small-plan rule);
   *  - parquet aggregate pushdown (unfiltered count/min/max answered
   *    from footers — Spark only rewrites when exact);
   *  - `autoBucketedScan.enabled=false` (bucketed tables are read AS
@@ -47,11 +48,12 @@ import org.apache.spark.sql.SparkSession
   *    rejected);
   *  - `spark.sql.maxSinglePartitionBytes` = `Long.MaxValue`: Spark
   *    applies that check only when every input of an operator is
-  *    already one partition, which graft creates only on purpose — the
-  *    size-gated one-partition loops (`GraphOps.gate`). There the check
-  *    reads Catalyst's product estimate of a nested join, which is
-  *    orders of magnitude above the real bytes, and would re-insert the
-  *    shuffle the gate exists to remove;
+  *    already one partition, which graft creates only on purpose — a
+  *    plan `plans.SmallPlanRule` runs in one partition because its
+  *    leaves fit under the broadcast threshold. There the check reads
+  *    Catalyst's product estimate of a nested join, which is orders of
+  *    magnitude above the real bytes, and would re-insert the shuffle
+  *    the rule exists to remove;
   *  - a per-JVM temp warehouse (table-writing queries must never
   *    leave `spark-warehouse/` in the repo tree — [[TempWarehouse]]).
   */

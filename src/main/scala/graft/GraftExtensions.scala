@@ -20,6 +20,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // result). Disable per-session via spark.sql.optimizer.excludedRules
     // = "graft.plans.DotKernelRule".
     ext.injectOptimizerRule(_ => graft.plans.DotKernelRule)
+    // Pre-CBO rule: a small, deterministic plan runs in one partition
+    // with no exchange (plans/SmallPlanRule.scala). Disable per-session
+    // the same way, with "graft.plans.SmallPlanRule".
+    ext.injectPreCBORule(_ => graft.plans.SmallPlanRule)
     // Planner strategies: lower the custom logical nodes to their
     // streaming physical operators (plans/Sessionize.scala — one-pass
     // sessionization; plans/AsofJoin.scala — sort-merge as-of join).

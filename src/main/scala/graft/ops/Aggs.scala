@@ -166,11 +166,10 @@ object Aggs {
     }),
 
     // Deliberately enters via spark.sql — exercises the SQL
-    // parse→analyze path (SURVEY §3.2 EP1 note). Reads parquet inline
-    // rather than via a temp view so the query mutates no session state
-    // and is safe under concurrent execution.
+    // parse→analyze path (SURVEY §3.2 EP1 note). Its parquet reads
+    // resolve to the session's cached tables (`Tables.sql`).
     "q_agg_gsets" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_mktsegment, n_name, count(*) AS n
         FROM parquet.`$d/customer.parquet` c
           JOIN parquet.`$d/nation.parquet` n ON c_nationkey = n_nationkey

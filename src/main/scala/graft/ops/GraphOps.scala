@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import Tables.{Q, t}
 
 /** Graph analytics over relationship edges derived from the fixtures —
@@ -17,11 +16,11 @@ import Tables.{Q, t}
   * vertex id, partial-aggregable (rank contributions combine
   * map-side). Every round ends in a lazy [[Tables.ck]], which cuts
   * the lineage the unrolled loop would otherwise grow; bounded round
-  * counts keep the oracle unrollable. A loop, memo or motif row whose
-  * parquet-scan and checkpoint inputs fit under the broadcast threshold
-  * runs every plan it builds in one partition instead ([[gate]]): one
-  * rewrite of the whole built plan, applied before each checkpoint and
-  * to the row, over the same distributed code.
+  * counts keep the oracle unrollable. The code is the distributed
+  * form only: a plan whose inputs fit under the broadcast threshold
+  * runs in one partition with no exchange by the session's
+  * [[graft.plans.SmallPlanRule]], and its checkpoint then records a
+  * bounded size, so the next round's plan fits too.
   */
 object GraphOps {
 
@@ -37,53 +36,6 @@ object GraphOps {
     * for production graphs that settle early — every skipped round is
     * a full |E|-shuffle saved. */
   private val Tol = 1e-6
-
-  /** How a gated plan runs, as [[gate]] chose: `g(df)` is `df` in one
-    * partition over the same inputs ([[Tables.onePartition]]), or `df`
-    * unchanged on the distributed path. Apply it to each whole plan a
-    * gated site builds, before its [[Tables.ck]] or its row. */
-  private[graft] final case class Gate(held: Option[Map[Int, Long]]) {
-    def onePartition: Boolean = held.isDefined
-    def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      held.fold(df)(Tables.onePartition(df, _))
-  }
-
-  /** A [[gate]] decision, posted on the listener bus (`tools.Trace
-    * --plan` prints it): the file bytes of the site's parquet-scan
-    * inputs and the bytes its input checkpoint blocks hold (-1: an input
-    * is neither; above the threshold it may count only the inputs
-    * already written) against the broadcast threshold. */
-  final case class LoopGate(site: String, scanBytes: Long, heldBytes: Long,
-      threshold: Long, onePartition: Boolean)
-      extends org.apache.spark.scheduler.SparkListenerEvent
-
-  /** The size gate of a graph-family plan. Iterative rounds and motif
-    * joins cost a few jobs of a few tasks each when distributed, and
-    * per-job cost, not data, bounds them while the data fits one task.
-    * So when the leaves of `inputs` — parquet scans by their file bytes
-    * ([[Tables.scanBytes]]), local checkpoints by the bytes their
-    * blocks hold ([[Tables.heldBytes]]) — add up to no more than
-    * `spark.sql.autoBroadcastJoinThreshold`, the bytes Spark itself
-    * would ship whole to every task, the site's plans run in one
-    * partition: each plans no exchange and runs inside its consumer's
-    * action, and a checkpoint of one takes [[Tables.ck]]'s RDD path
-    * with no job. Above it, or when a leaf is neither (an in-memory
-    * relation, a reliable checkpoint), the distributed plans run
-    * unchanged. */
-  private[graft] def gate(site: String, inputs: org.apache.spark.sql.DataFrame*): Gate = {
-    val s = inputs.head.sparkSession
-    val threshold = Bridge.broadcastThreshold(s)
-    val scan = Tables.scanBytes(inputs)
-    val held = Tables.heldBytes(inputs, threshold - scan)
-    val bytes = held.fold(-1L)(_.values.sum)
-    val one = held.isDefined && scan + bytes <= threshold
-    Bridge.post(s.sparkContext, LoopGate(site, scan, bytes, threshold, one))
-    Gate(held.filter(_ => one))
-  }
-
-  /** `df` as [[gate]] decides on its own leaves. */
-  private def gated(site: String, df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = gate(site, df)(df)
 
   /** Per-entity neighbor-list cap for `q_graph_jaccard`'s pair
     * generation. 2^16 is far above any fixture degree (|suppliers| is
@@ -175,8 +127,7 @@ object GraphOps {
     * `tol`. Each iteration ends in a lazy [[Tables.ck]] — the
     * lineage cut an iterative Spark job needs anyway — whose blocks
     * materialize inside the round's delta check, the round's only
-    * explicit action (the ccLabels batching discipline). Gated
-    * ([[gate]]) on `edgesW` and `init`. The check
+    * explicit action (the ccLabels batching discipline). The check
     * itself is the union form: a signed per-node sum over the two
     * |V|-sized checkpointed rank tables, one partial-aggregable
     * keyed aggregate — no join. The delta read is a metadata-scale
@@ -187,40 +138,26 @@ object GraphOps {
                maxIters: Int, tol: Double,
                broadcastRank: Boolean = true)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    val g = gate("pagerank", edgesW, init)
-    var r = Tables.ck(g(init))
+    var r = Tables.ck(init)
     var it = 0
     var delta = Double.PositiveInfinity
     while (it < maxIters && delta >= tol) {
-      // LAZY checkpoint (the ccLabels discipline): the round's delta
-      // check is its ONLY explicit action — the new rank table's
-      // blocks materialize inside it, and the next round's broadcast
-      // build reads them back. The former eager localCheckpoint ran a
-      // separate materialization job per round ON TOP of the delta
-      // job (and of the broadcast build the next round forces
-      // anyway) — one whole job per round for nothing.
-      val rNew = Tables.ck(g(rankStep(edgesW, r, n, broadcastRank)))
+      // Lazy checkpoint: its blocks materialize inside the round's
+      // delta check, the round's only explicit action.
+      val rNew = Tables.ck(rankStep(edgesW, r, n, broadcastRank))
       val rPrev = r
       r = rNew
       it += 1
-      // The delta gates CONTINUING — after the capped final round it
-      // is never read, so don't pay its job (the final table then
-      // materializes inside the caller's own action). UNION form, not
-      // a join (the PPR teleport move applied to the check): each
-      // side contributes a signed rank per node, so Σ|r − r0| is one
-      // partial-aggregable keyed sum + abs — where the former
-      // full-outer join (which Spark can never broadcast — the PPR
-      // hint-drop class) sort-merged two |V| tables per round. An
-      // asymmetric node (degree-0 caller graph) appears on one side
-      // only and is charged its full |r|, exactly as the old
-      // coalesce-to-0 did (conservative: keeps iterating). sum over
-      // zero rows is SQL NULL (an empty graph) — treat as converged
-      // rather than NPE on the primitive read.
+      // The delta only decides whether to continue, so the capped
+      // final round skips it. Union form: each side contributes a
+      // signed rank per node, so Σ|r − r0| is one keyed sum + abs, no
+      // join; a node on one side only is charged its full |r|. A sum
+      // over zero rows is NULL (an empty graph): converged.
       if (it < maxIters) {
-        val deltaRow = g(rNew.select(col("node"), col("r").as("v"))
+        val deltaRow = rNew.select(col("node"), col("r").as("v"))
             .unionByName(rPrev.select(col("node"), (-col("r")).as("v")))
           .groupBy(col("node")).agg(abs(sum(col("v"))).as("dn"))
-          .agg(sum(col("dn")))).head
+          .agg(sum(col("dn"))).head
         delta = if (deltaRow.isNullAt(0)) 0.0 else deltaRow.getDouble(0)
       }
     }
@@ -232,15 +169,10 @@ object GraphOps {
     * round every node takes the min of its own and its neighbors'
     * labels (one keyed join + one partial-aggregable min, the
     * PageRank iteration shape; the |V|-sized label table broadcasts
-    * like the rank table). ADJUDICATED (round 9): this variant never
-    * grows a co-partitioned mode — when the label table outgrows the
-    * broadcast regime, the right move is not a SHUFFLE_HASH swap here
-    * (mechanically possible, as q_graph_pagerank_part proves on the
-    * identical join shape) but [[ccStar]], which at that scale also
-    * wins on ROUND COUNT (log |V| vs diameter) and is the declared
-    * engine; plain propagation's remaining role is the law-tested
-    * baseline (OpsSpec: agreement with ccStar, doubling, and a
-    * driver-side union-find). The loop stops when
+    * like the rank table). It has no co-partitioned mode: past the
+    * broadcast regime [[ccStar]] also wins on round count (log |V| vs
+    * diameter); this variant is the law-tested baseline (OpsSpec:
+    * agreement with ccStar, doubling, a union-find). The loop stops when
     * a round changes NOTHING: a fixpoint of the update IS the exact
     * component labeling, so correctness never depends on the round
     * count. The per-round changed count is a metadata-scale driver
@@ -259,14 +191,9 @@ object GraphOps {
     * (paths, trees, grids — where plain propagation is hopeless) the
     * composition stays near-linear and doubling wins outright; on
     * dense bounded components the composition degenerates toward
-    * Σ sᵢ³ intermediate tuples and measured SLOWER than plain
-    * propagation on the fixture graph (12.8 s vs 5.3 s at sf0.1 on
-    * a diameter-29 variant) — which is why the declared query runs
-    * PLAIN. The general-case scheme that gets log rounds WITHOUT the
-    * composition blowup is large-star/small-star — implemented and
-    * declared as [[ccStar]] / q_graph_cc_star, measured in
-    * tools/CCScale. Both variants' agreement and their step counts
-    * are pinned in OpsSpec.
+    * Σ sᵢ³ intermediate tuples, so the declared query runs plain;
+    * [[ccStar]] gets log rounds without that blowup. Both variants'
+    * agreement and step counts are pinned in OpsSpec.
     *
     * Returns (labels `(node, lab)`, propagation steps run — batch
     * granularity of 2, so the count overshoots the fixpoint by up to
@@ -310,9 +237,8 @@ object GraphOps {
     // across a batch ⟹ no change in any step of it. Batching HARDER
     // does not pay: each step's BROADCAST of the previous label table
     // forces a driver materialization round regardless of the action
-    // schedule, so batch=4 saves only the tiny count-join jobs while
-    // adding lineage/planning depth — measured ~6.0 s vs batch=2's
-    // ~5.0 s on the sf0.1 fixture graph.
+    // schedule, so a larger batch saves only the tiny count-join jobs
+    // while adding lineage and planning depth (BUILD_NOTES.md).
     val batch = 2
     while (changed > 0 && steps < maxRounds) {
       // Every intermediate table is ALSO lazily checkpointed: step(l)
@@ -396,16 +322,10 @@ object GraphOps {
       // output is already partitioned for it — no |V| broadcast.
       val m = sym.groupBy(col("u"))
         .agg(min(least(col("v"), col("u"))).as("m"))
-      // NO distinct on this phase's output (r15 optimization round):
-      // the v > u filter keeps exactly one row per input edge, so the
-      // row count is |E| with or without dedup — the following
-      // smallStar's min is duplicate-insensitive and its own canon()
-      // dedups the round's output, so the only thing a distinct here
-      // buys is collapsing edges the rewrite made identical, at the
-      // price of one extra |E|-row exchange + hash dedup per round.
-      // Scale-safe: the un-deduped flow is never larger than the
-      // phase input. (canon-with-distinct here measured +0.6 s on the
-      // isolated q_dedup_minhash_cluster row — 2.12 -> 1.53 s, sf0.1.)
+      // No distinct on this phase's output: the v > u filter keeps one
+      // row per input edge, smallStar's min is duplicate-insensitive
+      // and its canon() dedups the round, so a distinct here would
+      // only add an |E|-row exchange per round.
       sym.join(m, "u").where(col("v") > col("u"))
         .select(least(col("v"), col("m")).as("u"),
                 greatest(col("v"), col("m")).as("v"))
@@ -432,11 +352,7 @@ object GraphOps {
     // round strictly decreases the Kiveris et al. potential unless the
     // edge set is already the star-forest fixpoint, so a 2-cycle
     // (f(f(e)) = e with f(e) ≠ e) is impossible — batch-equality ⟹
-    // fixpoint. Measured at sf0.1: q_graph_cc 5.19 s → see BUILD_NOTES
-    // round 10. batch=3 re-measured in round 12 (min-of-3): 4.84 s vs
-    // batch=2's 4.56 s — the extra post-fixpoint star rounds cost more
-    // than the skipped count action saves, same verdict as ccLabels'
-    // batch=4 probe. 2 stays.
+    // fixpoint. A batch of 3 measured slower (BUILD_NOTES.md).
     val batch = 2
     while (changed > 0 && rounds < maxRounds) {
       var next = edges
@@ -486,14 +402,13 @@ object GraphOps {
     * (the neighbor-vote join and the self-vote union), so an
     * unchecked 8-round unroll recomputes round 1 up to 2^8 times. The
     * per-round label materialization is the same trade every
-    * distributed LPA/Pregel implementation makes. Gated ([[gate]]): in
-    * one partition no round runs a job of its own. */
+    * distributed LPA/Pregel implementation makes. Under the small-plan
+    * rule no round runs a job of its own. */
   private[graft] def lpaLabels(edges: org.apache.spark.sql.DataFrame,
       rounds: Int): org.apache.spark.sql.DataFrame = {
-    val g = gate("lpaLabels", edges)
-    var lbl = Tables.ck(g(edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))))
-    (1 to rounds).foreach { _ => lbl = Tables.ck(g(lpaStep(edges, lbl))) }
+    var lbl = Tables.ck(edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
+    (1 to rounds).foreach { _ => lbl = Tables.ck(lpaStep(edges, lbl)) }
     lbl
   }
 
@@ -510,14 +425,10 @@ object GraphOps {
     // Per-node argmax as min(struct(-c, l)) — struct ordering is
     // field-by-field, so this IS "order by c desc, l" with the same
     // deterministic tiebreak the row_number window had (l is
-    // distinct within a node, ties are impossible). The win is the
-    // shuffle: the window moved EVERY vote row through its
-    // exchange; the aggregate's partial phase leaves ≤ 1 row per
-    // (node, partition) before the exchange, ×8 rounds. Fixture-
-    // neutral (measured ±0.1 s — vote tables are |V|-ish here);
-    // the r15 optimization round took it for the 100 TB shuffle
-    // shape. The oracle keeps its textual row_number form; the
-    // differential checks the equality.
+    // distinct within a node, ties are impossible), and its partial
+    // phase leaves ≤ 1 row per (node, partition) before the exchange,
+    // where a window moves every vote row. The oracle keeps its
+    // row_number form; the differential checks the equality.
     votes.groupBy(col("node"))
       .agg(min(struct((-col("c")).as("nc"), col("l"))).as("m"))
       .select(col("node"), col("m.l").as("lbl"))
@@ -536,11 +447,11 @@ object GraphOps {
       import s.implicits._
       val li = t(s, d, "lineitem").filter($"l_quantity" >= 45)
         .select($"l_orderkey", $"l_partkey")
-      Tables.ck(gated("copurchaseEdges", li.as("a").join(li.as("b"),
+      Tables.ck(li.as("a").join(li.as("b"),
           $"a.l_orderkey" === $"b.l_orderkey" &&
             $"a.l_partkey" < $"b.l_partkey")
         .select($"a.l_partkey".as("p1"), $"b.l_partkey".as("p2"))
-        .distinct()))
+        .distinct())
     }
 
   /** `rounds` triangle-support peel iterations toward the 4-TRUSS of
@@ -588,18 +499,16 @@ object GraphOps {
   private def ccEdges(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "cc_edges") {
       import s.implicits._
-      // Dedup on the LONG key pair, concat AFTER (the r15 tradeEdges
-      // move, applied here in r16): identical edge set, narrower
-      // exchange + hash-agg phases. The string ids themselves cannot
-      // change (CC labels are lexicographic string minima pinned by
-      // the oracles).
-      Tables.ck(gated("ccEdges", t(s, d, "orders").where($"o_totalprice" > 450000)
+      // Dedup on the long key pair, concat after: the same edge set
+      // over a narrower exchange. The string ids cannot change (CC
+      // labels are string minima the oracles pin).
+      Tables.ck(t(s, d, "orders").where($"o_totalprice" > 450000)
         .join(t(s, d, "lineitem"),
           $"o_orderkey" === $"l_orderkey" && $"l_quantity" >= 47)
         .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"))
         .distinct()
         .select(concat(lit("c"), $"ck".cast("string")).as("src"),
-                concat(lit("s"), $"sk".cast("string")).as("dst"))))
+                concat(lit("s"), $"sk".cast("string")).as("dst")))
     }
 
   /** The CONVERGED component labels of the [[ccEdges]] fixture graph
@@ -888,10 +797,10 @@ object GraphOps {
   private[graft] def tradePairs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_pairs") {
       import s.implicits._
-      Tables.ck(gated("tradePairs", t(s, d, "orders")
+      Tables.ck(t(s, d, "orders")
         .join(t(s, d, "lineitem"), $"o_orderkey" === $"l_orderkey")
         .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"))
-        .distinct()))
+        .distinct())
     }
 
   /** The directed (c→s) half of [[tradeEdges]], checkpointed. */
@@ -936,8 +845,7 @@ object GraphOps {
   private[graft] def tradeDeg(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_deg") {
       import s.implicits._
-      Tables.ck(gated("tradeDeg",
-        tradeEdges(s, d).groupBy($"src").agg(count(lit(1)).as("d"))))
+      Tables.ck(tradeEdges(s, d).groupBy($"src").agg(count(lit(1)).as("d")))
     }
 
   /** [[tradeEdges]] with the source's degree folded onto each edge —
@@ -949,16 +857,16 @@ object GraphOps {
     * more than it is data volume. Like [[tradeEdges]] it checkpoints
     * the directed half ([[tradeArcs]]) only, with both endpoint
     * degrees, and symmetrizes by a map over it: half the rows held,
-    * which keeps the PageRank and PPR loops' input under [[gate]]'s
-    * threshold wherever the edge list itself is. */
+    * which keeps the PageRank and PPR loops' input under the
+    * small-plan bound wherever the edge list itself is. */
   private[graft] def tradeEdgesW(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.derived(s, d, "trade_edges_w") {
       import s.implicits._
       val deg = tradeDeg(s, d)
-      val w = Tables.ck(gated("tradeEdgesW", tradeArcs(s, d)
+      val w = Tables.ck(tradeArcs(s, d)
         .join(broadcast(deg), "src")
         .join(broadcast(deg.select($"src".as("dst"), $"d".as("dd"))), "dst")
-        .select($"src", $"dst", $"d", $"dd")))
+        .select($"src", $"dst", $"d", $"dd"))
       w.select($"src", $"dst", $"d")
         .unionByName(w.select($"dst".as("src"), $"src".as("dst"), $"dd".as("d")))
     }
@@ -996,9 +904,9 @@ object GraphOps {
       // Hop 1's DAG slice has exactly ONE consumer (its own σ
       // aggregate): the backward sweeps read dags(1..3) only — δ is
       // accumulated INTO the pivots' neighbors, never out of the
-      // pivots themselves. Checkpointing a single-consumer table is
-      // pure cost (persist |E·k| rows nothing re-reads), so hop 1
-      // stays a plain lazy plan (r16 optimization round).
+      // pivots themselves. Checkpointing a single-consumer table
+      // persists |E·k| rows nothing re-reads, so hop 1 stays a plain
+      // lazy plan.
       val dag0 = edges
         .join(broadcast(frontier
           .select($"seed", $"node".as("src"), $"sig")), Seq("src"))
@@ -1041,26 +949,24 @@ object GraphOps {
     * node) position table after the last step. Every node has deg ≥ 1
     * and idx = h60 mod deg + 1 always hits exactly one neighbor, so
     * each step advances EVERY walker exactly once — walk-count
-    * conservation (|rows| = |V| after every step) is the OpsSpec law.
-    * Gated ([[gate]]) on the trade-graph memos. */
+    * conservation (|rows| = |V| after every step) is the OpsSpec law. */
   private[graft] def randomWalks(s: org.apache.spark.sql.SparkSession,
       d: String, steps: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val g = gate("randomWalks", tradeEdges(s, d), tradeDeg(s, d))
     val wN = Window.partitionBy($"src").orderBy($"dst")
-    val nbr = Tables.ck(g(tradeEdges(s, d)
+    val nbr = Tables.ck(tradeEdges(s, d)
       .withColumn("idx", row_number().over(wN))
-      .select($"src".as("node"), $"dst", $"idx")))
+      .select($"src".as("node"), $"dst", $"idx"))
     val deg = tradeDeg(s, d).select($"src".as("node"), $"d")
     var cur = deg.select($"node".as("walker"), $"node")
     (1 to steps).foreach { k =>
-      cur = Tables.ck(g(cur.join(broadcast(deg), "node")
+      cur = Tables.ck(cur.join(broadcast(deg), "node")
         .withColumn("idx",
           (Tables.h60(concat($"walker", lit(s":$k"))) % $"d")
             .cast("int") + 1)
         .select($"walker", $"node", $"idx")
         .join(nbr, Seq("node", "idx"))
-        .select($"walker", $"dst".as("node"))))
+        .select($"walker", $"dst".as("node")))
     }
     cur
   }
@@ -1079,21 +985,19 @@ object GraphOps {
     * builds the anti-join hash map per partition, and pairing with
     * src-bucketed edges ([[tradeEdgesBkt]]) keeps the |E| side
     * exchange-free exactly as in the co-partitioned PageRank.
-    * Strategy agreement is pinned in OpsSpec. Gated ([[gate]]) on
-    * `edges` and `seed`. */
+    * Strategy agreement is pinned in OpsSpec. */
   private[graft] def bfsFrontiers(edges: org.apache.spark.sql.DataFrame,
       seed: org.apache.spark.sql.DataFrame, hops: Int,
       broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
-    val g = gate("bfsFrontiers", edges, seed)
     var visited = seed
     var frontier = seed
     val sizes = (1 to hops).map { hop =>
-      frontier = Tables.ck(g(bfsHop(edges, frontier, visited, broadcastSets)))
+      frontier = Tables.ck(bfsHop(edges, frontier, visited, broadcastSets))
       visited = visited.unionByName(frontier)
       frontier.agg(count(lit(1)).as("frontier"))
         .select(lit(hop).as("hop"), col("frontier"))
     }
-    g(sizes.reduce(_ unionByName _).orderBy(col("hop")))
+    sizes.reduce(_ unionByName _).orderBy(col("hop"))
   }
 
   /** One [[bfsFrontiers]] hop: the nodes one edge out of `frontier`
@@ -1143,13 +1047,10 @@ object GraphOps {
       d: String): org.apache.spark.sql.DataFrame =
     Tables.derived(s, d, "trade_edges_wgt") {
       import s.implicits._
-      // Aggregate on the LONG key pair and build the string node ids
-      // AFTER the min (the r15 tradeEdges move, applied here in r16):
-      // the exchange and both hash-agg phases move 16-byte long pairs
-      // instead of ~12-char strings, and the concat runs once per
-      // surviving edge. Grouping by (custkey, suppkey) ≡ grouping by
-      // their string images (injective), so the edge set and weights
-      // are identical by construction.
+      // Aggregate on the long key pair and build the string node ids
+      // after the min: the exchange moves 16-byte pairs, and grouping
+      // by (custkey, suppkey) ≡ grouping by their injective string
+      // images, so edges and weights are identical.
       val e0 = t(s, d, "orders")
         .join(t(s, d, "lineitem"), $"o_orderkey" === $"l_orderkey")
         .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"),
@@ -1223,9 +1124,8 @@ object GraphOps {
     // contribute their old distance to a null-skipping min, relaxed
     // rows contribute null — so the frontier (prev null or strictly
     // improved) is a FILTER on the checkpointed state, not a second
-    // join. The round keeps the r13/r14 shape's exact cost (one
-    // relax join + one keyed agg) while the relax join's input
-    // shrinks from |reached| to |frontier|.
+    // join: one relax join + one keyed agg per round, over the
+    // frontier instead of every reached node.
     var state = seed.select(col("node"), lit(0L).as("dist"),
         lit(null).cast("long").as("prev"))
       .transform(Tables.ck)
@@ -1254,8 +1154,8 @@ object GraphOps {
     * (the per-round `Tables.ck` hides the loop body from the declared
     * query's executed plan — the ShinglesSpec lesson): exactly one
     * BroadcastHashJoin, one keyed exchange, zero sort-merge joins,
-    * zero dropped hints — distributed. Under a one-partition [[gate]]
-    * it plans no exchange at all (GateSpec). */
+    * zero dropped hints — distributed. Under the small-plan rule it
+    * plans no exchange at all (GateSpec). */
   private[graft] def pprStep(edges: org.apache.spark.sql.DataFrame,
       r: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -1315,11 +1215,10 @@ object GraphOps {
     // against the seed would be WRONG here at the plan level: Spark
     // cannot broadcast either side of a full outer join, silently
     // drops the hint (HintErrorLogger), and plans a per-round
-    // shuffle join of the rank table against one row — the r14
-    // verdict defect. The union shape needs zero joins for the
-    // teleport: one broadcast relax join + one partial-aggregable
-    // keyed aggregate per round, pinned in PlanShapeSpec (no
-    // sort-merge join, no dropped hint anywhere in the loop). Round 1
+    // shuffle join of the rank table against one row. The union
+    // shape needs zero joins for the teleport: one broadcast relax
+    // join + one keyed aggregate per round, pinned in PlanShapeSpec
+    // (no sort-merge join, no dropped hint in the loop). Round 1
     // — where the seed has no in-mass — still emits its restart row
     // because the union row exists regardless. Total mass is exactly
     // 1 every round (0.15 + 0.85·1, no dangling nodes) — the OpsSpec
@@ -1333,13 +1232,12 @@ object GraphOps {
     "q_graph_ppr" -> ((s, d) => {
       import s.implicits._
       val edges = tradeEdgesW(s, d)
-      val g = gate("ppr", edges, tradeDeg(s, d))
       val seed = tradeDeg(s, d).select($"src".as("node"), $"d".as("dg"))
         .orderBy($"dg".desc, $"node").limit(1)
         .select($"node").transform(Tables.ck)
       var r = seed.select($"node", lit(1.0).as("r"))
         .transform(Tables.ck)
-      for (_ <- 1 to Iters) r = Tables.ck(g(pprStep(edges, r, seed)))
+      for (_ <- 1 to Iters) r = Tables.ck(pprStep(edges, r, seed))
       r.select($"node", (floor($"r" * 1e6 + 0.5) / 1e6).as("ppr"))
         .orderBy($"ppr".desc, $"node")
         .limit(20)
@@ -1451,7 +1349,6 @@ object GraphOps {
     "q_graph_triangles" -> ((s, d) => {
       import s.implicits._
       val e = copurchaseEdges(s, d)
-      val g = gate("q_graph_triangles", e)
       val deg = e.select($"p1".as("n")).unionByName(e.select($"p2".as("n")))
         .groupBy($"n").agg(count(lit(1)).as("dg"))
       // Orient toward the higher-(degree, id) endpoint; carry the
@@ -1459,23 +1356,23 @@ object GraphOps {
       // same way the closing edge is directed. Degree tables are
       // |V|-sized — broadcast.
       val fwd = $"d1" < $"d2" || ($"d1" === $"d2" && $"p1" < $"p2")
-      val dir = Tables.ck(g(e
+      val dir = Tables.ck(e
         .join(broadcast(deg.select($"n".as("p1"), $"dg".as("d1"))), "p1")
         .join(broadcast(deg.select($"n".as("p2"), $"dg".as("d2"))), "p2")
         .select(
           when(fwd, $"p1").otherwise($"p2").as("src"),
           when(fwd, $"p2").otherwise($"p1").as("dst"),
-          when(fwd, $"d2").otherwise($"d1").as("ddg"))))
+          when(fwd, $"d2").otherwise($"d1").as("ddg")))
       val tri = dir.as("e1").join(dir.as("e2"),
           $"e1.src" === $"e2.src" &&
             ($"e1.ddg" < $"e2.ddg" ||
               ($"e1.ddg" === $"e2.ddg" && $"e1.dst" < $"e2.dst")))
         .select($"e1.src".as("ta"), $"e1.dst".as("tb"), $"e2.dst".as("tc"))
         .join(dir.as("e3"), $"tb" === $"e3.src" && $"tc" === $"e3.dst")
-      g(tri.select(explode(array($"ta", $"tb", $"tc")).as("partkey"))
+      tri.select(explode(array($"ta", $"tb", $"tc")).as("partkey"))
         .groupBy($"partkey").agg(count(lit(1)).as("n_tri"))
         .orderBy($"n_tri".desc, $"partkey")
-        .limit(10))
+        .limit(10)
     }),
 
     // Common-neighbor link prediction: Jaccard similarity of supplier
@@ -1499,21 +1396,20 @@ object GraphOps {
       // Checkpoint AFTER the cap: the capped list is what deg and
       // both self-join sides read (3 references), so this is the
       // table worth materializing once.
-      val g = gate("q_graph_jaccard", e0)
-      val e = Tables.ck(g(capNeighbors(e0, JaccardCap)))
+      val e = Tables.ck(capNeighbors(e0, JaccardCap))
       val deg = e.groupBy($"sup").agg(count(lit(1)).as("dg"))
       val pairs = e.as("a").join(e.as("b"),
           $"a.c" === $"b.c" && $"a.sup" < $"b.sup")
         .groupBy($"a.sup".as("s1"), $"b.sup".as("s2"))
         .agg(count(lit(1)).as("common"))
-      g(pairs
+      pairs
         .join(broadcast(deg.select($"sup".as("s1"), $"dg".as("d1"))), "s1")
         .join(broadcast(deg.select($"sup".as("s2"), $"dg".as("d2"))), "s2")
         .select($"s1", $"s2", $"common",
           (floor($"common" * 1.0 / ($"d1" + $"d2" - $"common") * 1e4 + 0.5)
             / 1e4).as("jaccard"))
         .orderBy($"jaccard".desc, $"s1", $"s2")
-        .limit(10))
+        .limit(10)
     }),
 
     // BUTTERFLY COUNTING (Sanei-Mehri et al., KDD'18; Wang et al.) —
@@ -1535,35 +1431,30 @@ object GraphOps {
     // (customer, then supplier pair, then supplier); nothing global.
     "q_graph_butterfly" -> ((s, d) => {
       import s.implicits._
-      // The uncapped wedge input IS the shared [[tradePairs]] memo
-      // (r16: this row used to re-run the identical orders⋈lineitem
-      // scan + long-pair distinct behind its own plan — one corpus
-      // pass and one |join-rows| exchange for free in any multi-query
-      // run, and the family sweep already pays the memo in
-      // _memo_graph).
+      // The uncapped wedge input is the shared [[tradePairs]] memo,
+      // which the family sweep builds in _memo_graph.
       val e0 = tradePairs(s, d)
         .select($"ck".as("c"), $"sk".as("sup"))
-      val g = gate("q_graph_butterfly", e0)
-      val e = Tables.ck(g(capNeighbors(e0, JaccardCap)))
+      val e = Tables.ck(capNeighbors(e0, JaccardCap))
       val bf = e.as("a").join(e.as("b"),
           $"a.c" === $"b.c" && $"a.sup" < $"b.sup")
         .groupBy($"a.sup".as("s1"), $"b.sup".as("s2"))
         .agg(count(lit(1)).as("m"))
         .where($"m" >= 2)
         .select($"s1", $"s2", expr("m * (m - 1) DIV 2").as("bf"))
-      g(bf.select(explode(array($"s1", $"s2")).as("sup"), $"bf")
+      bf.select(explode(array($"s1", $"s2")).as("sup"), $"bf")
         .groupBy($"sup").agg(
           count(lit(1)).as("n_pairs"),
           sum($"bf").as("n_butterflies"))
         .orderBy($"n_butterflies".desc, $"sup")
-        .limit(10))
+        .limit(10)
     }),
 
     // Bounded-hop BFS from the highest-degree node: frontier sizes
     // for hops 1..3 over the symmetrized trade graph — the iterative
     // frontier-expansion kernel (reachability, blast-radius, feature
     // neighborhoods), via [[bfsFrontiers]] in its broadcast regime
-    // when the gate keeps it distributed (frontier and visited sets
+    // when the plan is distributed (frontier and visited sets
     // are |V|-bounded). Hop count fixed at 3 so the plan is finite and the
     // oracle unrollable.
     "q_graph_bfs" -> ((s, d) => {
@@ -1584,7 +1475,7 @@ object GraphOps {
     // Harmonic form Σ 1/dist (Boldi–Vigna's axiom-clean variant) is
     // the bounded-radius-safe choice: classic closeness needs every
     // node reached. Frontier/visited are (k·|V|)-bounded: one
-    // partition under the size gate ([[gate]]), else broadcast (the
+    // partition under the small-plan rule, else broadcast (the
     // bfsFrontiers regime split applies verbatim
     // past a few hundred million rows: SHUFFLE_HASH + bucketed
     // edges). Exactness of the 1e-4 floor: dist ∈ {1,2,3}, so the
@@ -1592,28 +1483,27 @@ object GraphOps {
     // sits closer than 1/6·10⁴ᐨ¹ to a floor boundary.
     "q_graph_closeness" -> ((s, d) => {
       import s.implicits._
-      val g = gate("closeness", tradeEdges(s, d), tradeDeg(s, d))
       val seeds = tradeDeg(s, d).orderBy($"d".desc, $"src").limit(4)
         .select($"src".as("seed"))
       var visited = seeds
         .select($"seed", $"seed".as("node"), lit(0).as("dist"))
       var frontier = visited
       (1 to 3).foreach { hop =>
-        frontier = Tables.ck(g(tradeEdges(s, d)
+        frontier = Tables.ck(tradeEdges(s, d)
             .join(broadcast(frontier.select($"seed", $"node".as("src"))),
               Seq("src"))
             .select($"seed", $"dst".as("node")).distinct()
           .join(broadcast(visited.select($"seed", $"node")),
             Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(hop))))
+          .withColumn("dist", lit(hop)))
         visited = visited.unionByName(frontier)
       }
-      g(visited.where($"dist" >= 1)
+      visited.where($"dist" >= 1)
         .groupBy($"seed").agg(
           count(lit(1)).as("n_reached"),
           (floor(sum(lit(1.0) / $"dist") * 1e4 + 0.5) / 1e4)
             .as("harmonic"))
-        .orderBy($"seed"))
+        .orderBy($"seed")
     }),
 
     // APPROXIMATE BETWEENNESS CENTRALITY — Brandes' exact dependency
@@ -1935,7 +1825,7 @@ object GraphOps {
         .join(broadcast(deg.select($"src", $"d".as("dx"))), "src")
         .join(broadcast(deg.select($"src".as("dst"), $"d".as("dy"))),
           "dst")
-      gated("q_graph_assortativity", j.agg(count(lit(1)).as("n"),
+      j.agg(count(lit(1)).as("n"),
           sum($"dx".cast("decimal(38,0)")).as("sx"),
           sum($"dy".cast("decimal(38,0)")).as("sy"),
           sum($"dx".cast("decimal(19,0)")
@@ -1952,7 +1842,7 @@ object GraphOps {
                   - $"sx".cast("double") * $"sx".cast("double"))
                 * ($"n".cast("double") * $"syy".cast("double")
                   - $"sy".cast("double") * $"sy".cast("double"))))
-            * 1e4 + 0.5) / 1e4).as("assortativity")))
+            * 1e4 + 0.5) / 1e4).as("assortativity"))
     }),
 
     // 2-CORE of the sparse trade graph by ITERATIVE PEELING — the
@@ -2038,18 +1928,16 @@ object GraphOps {
     // references its input twice — unchecked, lineage doubles per
     // round: the bpetrain lesson). The one driver-side value is the
     // 1-row (max, count) aggregate that sizes N and the round count —
-    // metadata-scale, the q_scan_binaryfile convention. Gated
-    // ([[gate]]) on the supplier scan.
+    // metadata-scale, the q_scan_binaryfile convention.
     "q_graph_scc" -> ((s, d) => {
       import s.implicits._
       val keys = t(s, d, "supplier").select($"s_suppkey".cast("long").as("k"))
-      val g = gate("scc", keys)
-      val sup = Tables.ck(g(keys))
+      val sup = Tables.ck(keys)
       val mc = sup.agg(max($"k"), count(lit(1))).collect()(0)
       val n = mc.getLong(0) + 1
       val rounds = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
-      val succ = Tables.ck(g(sup.select($"k", (($"k" * $"k" + 1) % n).as("v"))))
+      val succ = Tables.ck(sup.select($"k", (($"k" * $"k" + 1) % n).as("v")))
       // Checkpoint every SECOND doubling round (the ccStar batch=2
       // precedent): one unchecked self-join squares the reference
       // count to 4 reads of the last checkpoint — fine; a third would
@@ -2060,10 +1948,10 @@ object GraphOps {
       // Phase 1: jump-double to succ^(2^rounds); image = cycle nodes.
       var jump = succ
       for (i <- 1 to rounds) {
-        jump = ck2(g(jump.as("a").join(jump.as("b"), col("a.v") === col("b.k"))
-          .select(col("a.k").as("k"), col("b.v").as("v"))), i, rounds)
+        jump = ck2(jump.as("a").join(jump.as("b"), col("a.v") === col("b.k"))
+          .select(col("a.k").as("k"), col("b.v").as("v")), i, rounds)
       }
-      val cyc = Tables.ck(g(jump.select($"v".as("k")).distinct()))
+      val cyc = Tables.ck(jump.select($"v".as("k")).distinct())
       // Phase 2: min-label doubling confined to the cycle set (cycle
       // successors stay in the set, so the restriction is closed).
       // Round count re-sized to the CYCLE population, not N — the
@@ -2073,20 +1961,20 @@ object GraphOps {
       val nCyc = math.max(2L, cyc.count())
       val rounds2 = math.max(1,
         64 - java.lang.Long.numberOfLeadingZeros(nCyc - 1))
-      var lab = Tables.ck(g(succ.join(cyc, "k")
-        .select($"k", $"v".as("jmp"), $"k".as("lab"))))
+      var lab = Tables.ck(succ.join(cyc, "k")
+        .select($"k", $"v".as("jmp"), $"k".as("lab")))
       for (i <- 1 to rounds2) {
-        lab = ck2(g(lab.as("a").join(lab.as("b"), col("a.jmp") === col("b.k"))
+        lab = ck2(lab.as("a").join(lab.as("b"), col("a.jmp") === col("b.k"))
           .select(col("a.k").as("k"), col("b.jmp").as("jmp"),
-            least(col("a.lab"), col("b.lab")).as("lab"))), i, rounds2)
+            least(col("a.lab"), col("b.lab")).as("lab")), i, rounds2)
       }
       // Phase 3: tails are singleton SCCs labeled by themselves.
       val scc = sup.join(lab.select($"k", $"lab"), Seq("k"), "left")
         .select($"k", coalesce($"lab", $"k").as("scc_id"))
-      g(scc.groupBy($"scc_id").agg(count(lit(1)).as("n_nodes"))
+      scc.groupBy($"scc_id").agg(count(lit(1)).as("n_nodes"))
         .groupBy($"n_nodes".as("scc_size"))
         .agg(count(lit(1)).as("n_sccs"), min($"scc_id").as("min_scc_id"))
-        .orderBy($"scc_size"))
+        .orderBy($"scc_size")
     }),
   )
 

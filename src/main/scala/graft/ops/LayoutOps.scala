@@ -260,11 +260,14 @@ object LayoutOps {
     // the oracle is the plain join (reorder must not change results).
     // Tables are the ensureTable-memoized managed copies; ANALYZE
     // rides the same once-per-JVM memo (stats live in the shared
-    // catalog, so every later session sees them).
+    // catalog, so every later session sees them). The child session
+    // also excludes the small-plan rule, whose join hints would
+    // pre-empt the reorder at fixture scale.
     "q_sql_cbo" -> ((s0, d) => {
       val s = Tables.childSession(s0, "cbo")(
         "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.cbo.joinReorder.enabled" -> "true")
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.optimizer.excludedRules" -> "graft.plans.SmallPlanRule")
       cboSetup(s, d)
       s.sql(cboSql(cboTag(d)))
     }),

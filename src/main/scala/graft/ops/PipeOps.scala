@@ -262,7 +262,7 @@ object PipeOps {
     // it interpolates; quantities are integral so midpoints are exact
     // halves). Same single keyed aggregate shape as q_agg_quantile.
     "q_agg_percentile_disc" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT l_returnflag,
                percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)
                  AS med_disc,

@@ -419,7 +419,7 @@ object Scans {
     // floor-cent form before the gate so both engines compare the
     // same doubles.
     "q_sql_pipe" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         FROM parquet.`$d/lineitem.parquet`
         |> WHERE l_quantity >= 30
         |> AGGREGATE count(*) AS n_items,

@@ -31,7 +31,7 @@ object SubOps {
     // Uncorrelated IN: orders from BUILDING-segment customers.
     // Subquery side is a filtered dim → broadcast semi join.
     "q_sub_in" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT o_orderpriority, count(*) AS n_orders
         FROM parquet.`$d/orders.parquet`
         WHERE o_custkey IN (SELECT c_custkey FROM parquet.`$d/customer.parquet`
@@ -44,7 +44,7 @@ object SubOps {
     // Correlated EXISTS: customers with at least one urgent order,
     // counted per segment. Decorrelates to a semi join on custkey.
     "q_sub_exists" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_mktsegment, count(*) AS n_customers
         FROM parquet.`$d/customer.parquet` c
         WHERE EXISTS (SELECT 1 FROM parquet.`$d/orders.parquet` o
@@ -58,7 +58,7 @@ object SubOps {
     // NOT IN over a non-null key: customers with no urgent order →
     // anti join on custkey.
     "q_sub_notin" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_mktsegment, count(*) AS n_quiet
         FROM parquet.`$d/customer.parquet`
         WHERE c_custkey NOT IN (SELECT o_custkey FROM parquet.`$d/orders.parquet`
@@ -73,7 +73,7 @@ object SubOps {
     // with NO orders must surface as n_orders = 0 — the decorrelated
     // outer-join aggregate must coalesce the empty group to 0.
     "q_sub_scalar" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_custkey, n_orders FROM (
           SELECT c_custkey,
                  (SELECT count(*) FROM parquet.`$d/orders.parquet` o
@@ -91,7 +91,7 @@ object SubOps {
     // pattern. The scalar side is one row and broadcasts; the anti
     // join keys on custkey.
     "q_sub_avgfilter" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_mktsegment, count(*) AS n_cust,
                ROUND(SUM(c_acctbal), 2) AS total_bal
         FROM parquet.`$d/customer.parquet` c
@@ -116,7 +116,7 @@ object SubOps {
     // never a per-row rescan. The outer fact⋈orders join shares the
     // same key, so the exchanges line up.
     "q_sub_decorr" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT s_name, count(*) AS n_waiting
         FROM parquet.`$d/supplier.parquet`,
              parquet.`$d/lineitem.parquet` l1,
@@ -148,7 +148,7 @@ object SubOps {
     // min so cross-engine ties resolve identically; rounded-value
     // ties legitimately emit multiple suppliers.
     "q_sub_mincost" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         WITH cost AS (
           SELECT l_partkey AS pk, l_suppkey AS suppkey,
                  FLOOR(min(l_extendedprice / l_quantity) * 1e4 + 0.5) / 1e4
@@ -178,7 +178,7 @@ object SubOps {
     // partkey, exchanges line up; part is a broadcast dim. avg_yearly
     // = small-order revenue / 7 (Q17's annualization), floor-cent.
     "q_sub_scalaragg" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT p.p_brand, count(*) AS n_small,
                FLOOR(SUM(l.l_extendedprice) / 7.0 * 1e2 + 0.5) / 1e2
                  AS avg_yearly
@@ -202,7 +202,7 @@ object SubOps {
     // LATERAL natively, so the differential crosses two independent
     // decorrelation implementations.
     "q_join_lateral" -> ((s, d) => {
-      s.sql(s"""
+      Tables.sql(s, d, s"""
         SELECT c_custkey, o_orderkey, o_totalprice
         FROM parquet.`$d/customer.parquet`,
         LATERAL (SELECT o_orderkey, o_totalprice

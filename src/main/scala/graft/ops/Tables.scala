@@ -43,18 +43,16 @@ object Tables {
     * consumer.
     *
     * A plan that already runs in ONE partition with no exchange (a
-    * plan [[onePartition]] rewrote, a limit seed) is checkpointed here
-    * from its RDD, declaring `SinglePartition`, so the next round plans
-    * no exchange either, and recording as its size the largest size
-    * among its scan and checkpoint leaves (file bytes, and the measured
-    * or bounded bytes each checkpoint carries). That bound holds for the
-    * |V|- and |E|-sized tables of the graph family, where Catalyst's
-    * product-of-children estimate compounds past `Long.MaxValue` (a
-    * join over a join of two scans already can), and Spark then plans
-    * both sides of the next join as shuffles even over one-partition
-    * inputs. This path skips `Dataset`'s action wrapper, which would run
-    * no job here. Any other plan takes the `Dataset` checkpoint
-    * unchanged.
+    * small plan [[graft.plans.SmallPlanRule]] rewrote, a limit seed) is
+    * checkpointed here from its RDD, declaring `SinglePartition`, and
+    * recording as its size the largest size among its scan and
+    * checkpoint leaves. That keeps the rule's invariant across rounds:
+    * a loop whose inputs fit under the bound keeps fitting, where
+    * Catalyst's product-of-children estimate of a join over a join
+    * compounds past `Long.MaxValue`. The bound holds for the |V|- and
+    * |E|-sized tables of the graph family. This path skips `Dataset`'s
+    * action wrapper, which would run no job here. Any other plan takes
+    * the `Dataset` checkpoint unchanged.
     *
     * On a real cluster an executor loss mid-query forces a rerun of
     * the whole job (acceptable for these bounded-round jobs and
@@ -114,104 +112,6 @@ object Tables {
       case PartitioningCollection(ps) => ps.exists(isSinglePartition)
       case _ => false
     }
-  }
-
-  /** The file bytes of the parquet scans among the leaves of `dfs`,
-    * each file set counted once: `HadoopFsRelation.sizeInBytes`, the
-    * number Spark compares with `spark.sql.autoBroadcastJoinThreshold`
-    * before it broadcasts a scan. */
-  private[graft] def scanBytes(dfs: Seq[DataFrame]): Long =
-    dfs.flatMap(_.queryExecution.analyzed.collectLeaves()).collect {
-      case FileScan(h) => h.location.rootPaths.toSet -> h.sizeInBytes
-    }.toMap.values.sum
-
-  private object FileScan {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def unapply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Option[HadoopFsRelation] = p match {
-      case l: LogicalRelation => Some(l.relation).collect { case h: HadoopFsRelation => h }
-      case _ => None
-    }
-  }
-
-  /** The bytes held by the local-checkpoint blocks that the leaves of
-    * `dfs` read, by RDD id, each block set counted once — from
-    * `SparkContext.getRDDStorageInfo`, after the listener bus that
-    * feeds it has drained. A checkpoint no action has written yet is
-    * written first, by one job over its RDD (the work its first reader
-    * would do), unless the written ones already hold more than `limit`:
-    * then the map leaves the unwritten ones out, and its sum is a lower
-    * bound that still exceeds `limit`. Parquet-scan leaves hold no
-    * blocks ([[scanBytes]] measures them). None when any other leaf is
-    * not a local checkpoint (an in-memory relation, a reliable
-    * checkpoint): there is nothing to measure. */
-  private[graft] def heldBytes(dfs: Seq[DataFrame], limit: Long)
-      : Option[Map[Int, Long]] = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.storage.StorageLevel
-    val leaves = dfs.flatMap(_.queryExecution.analyzed.collectLeaves()).flatMap {
-      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => Seq(Some(l.rdd))
-      case FileScan(_) => Nil
-      case _ => Seq(None)
-    }
-    if (leaves.contains(None)) return None
-    val rdds = leaves.flatten.map(r => r.id -> r).toMap
-    if (rdds.isEmpty) return Some(Map.empty)
-    val sc = dfs.head.sparkSession.sparkContext
-    def written(): Map[Int, Long] = {
-      Bridge.drainListeners(sc)
-      sc.getRDDStorageInfo
-        .filter(i => rdds.get(i.id).exists(_.getNumPartitions <= i.numCachedPartitions))
-        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    }
-    val before = written()
-    val unwritten = rdds.values.filterNot(r => before.contains(r.id))
-    if (unwritten.isEmpty || before.values.sum > limit) Some(before)
-    else {
-      unwritten.foreach(_.count())
-      Some(written())
-    }
-  }
-
-  /** `df` rewritten to run in ONE partition over the same inputs, with
-    * no exchange: every checkpoint leaf becomes a zero-copy
-    * `coalesce(1)` view that declares `SinglePartition` and carries its
-    * measured bytes from `held` ([[heldBytes]]; a leaf `held` does not
-    * know keeps its own size), and every parquet scan and every union is
-    * coalesced. A join plans a shuffle for any side that is not exactly
-    * `SinglePartition`, and a join reports a partitioning collection, so
-    * a join output that reaches another join is coalesced too — right
-    * above the join that produced it: the optimizer pushes a left-anti
-    * join below a coalesce that is its direct child, and a coalesce
-    * where no join needs one only cuts the codegen pipeline from a join
-    * to its aggregate. Broadcast hints are dropped and every join side
-    * is hinted `shuffle_hash`: both sides are in the one partition
-    * already. No block is written; the rewrite is idempotent. */
-  private[graft] def onePartition(df: DataFrame, held: Map[Int, Long]): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, LogicalPlan,
-      Repartition, ResolvedHint, SHUFFLE_HASH, UnaryNode, Union}
-    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-    import org.apache.spark.sql.execution.LogicalRDD
-    val s = df.sparkSession
-    def one(p: LogicalPlan) = Repartition(1, shuffle = false, p)
-    def joinSide(p: LogicalPlan): LogicalPlan = p match {
-      case j: Join => one(j)
-      case u: UnaryNode if !u.isInstanceOf[Repartition] =>
-        u.withNewChildren(Seq(joinSide(u.child)))
-      case other => other
-    }
-    def keyed(p: LogicalPlan) = ResolvedHint(joinSide(p), HintInfo(Some(SHUFFLE_HASH)))
-    Bridge.ofAnalyzed(s, df.queryExecution.analyzed.transformUp {
-      case l: LogicalRDD if l.outputPartitioning != SinglePartition =>
-        val single = l.rdd.getNumPartitions == 1
-        Bridge.rddRelation(s, l.output, if (single) l.rdd else l.rdd.coalesce(1),
-          SinglePartition, if (single) l.outputOrdering else Nil,
-          held.get(l.rdd.id).map(BigInt(_)).getOrElse(l.stats.sizeInBytes))
-      case f @ FileScan(_) => one(f)
-      case h: ResolvedHint => h.child
-      case j: Join => j.copy(left = keyed(j.left), right = keyed(j.right))
-      case u: Union => one(u)
-    })
   }
 
   /** Base DataFrames are cached per (session, dir, table): a DataFrame
@@ -309,6 +209,31 @@ object Tables {
       rawSchema.putIfAbsent((d, n), raw.schema)
       conform(n, raw)
     })
+  }
+
+  /** `spark.sql(text)` with each ``parquet.`<sfDir>/<table>.parquet` ``
+    * read in it bound to this session's cached [[t]] relation, through
+    * one temp view per (dir, table), bound before the first query that
+    * reads it. A SQL-text read lists its files and runs a footer-schema
+    * job every time it is analyzed; the view resolves to the plan [[t]]
+    * built once. */
+  def sql(spark: SparkSession, sfDir: String, text: String): DataFrame = {
+    val read = ("parquet\\.`" + java.util.regex.Pattern.quote(sfDir) +
+      "/(\\w+)\\.parquet`").r
+    spark.sql(read.replaceAllIn(text, m => view(spark, sfDir, m.group(1))))
+  }
+
+  private def view(spark: SparkSession, sfDir: String, name: String): String = {
+    val v = s"graft_${name}_" + sfDir.replaceAll("[^A-Za-z0-9_]", "_")
+    val m = perSessionMap(spark)
+    if (!m.containsKey((sfDir, "view:" + name))) {
+      // Bound before it is marked, so a concurrent query never reads
+      // the name unbound; a racing rebind binds the same plan.
+      val df = t(spark, sfDir, name)
+      df.createOrReplaceTempView(v)
+      m.put((sfDir, "view:" + name), df)
+    }
+    v
   }
 
   /** Memoized CHILD session per (parent, purpose). A child session

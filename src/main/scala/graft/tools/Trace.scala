@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.graftbridge.Bridge
 import graft.{EngineSession, Runner, SparkEntry}
-import graft.ops.{GraphOps, Tables}
+import graft.ops.Tables
+import graft.plans.SmallPlanRule
 
 /** Per-query trace under the engine posture Bench times: warms the
   * tables once (`Runner.warmTables`, as Bench does), then per rep of
@@ -17,10 +18,11 @@ import graft.ops.{GraphOps, Tables}
   * builds included.
   *
   * `--plan` prints each query's formatted plan, its join/exchange
-  * operator counts, and the path each size-gated site took
-  * (`GraphOps.gate`: one partition or distributed, with the file bytes
-  * of its parquet-scan inputs and the bytes its input checkpoints hold,
-  * against the broadcast threshold); `reps` = 0 prints plans only.
+  * operator counts, and one `RULE` line per plan the optimizer saw
+  * while building and planning it (`plans.SmallPlanRule`: fired, or
+  * unchanged with the reason, with the file bytes of its parquet scans
+  * and the bytes of its checkpoint and local leaves, against the
+  * broadcast threshold); `reps` = 0 prints plans only.
   * Confs are A/B'd through `-Dspark.*` system properties, which
   * `SparkConf` loads — `-Dspark.graft.explainNoCk=true` prints through
   * the memos' lazy checkpoint boundaries (see
@@ -50,7 +52,7 @@ object Trace {
     val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger()
     val blocks = new java.util.concurrent.atomic.AtomicInteger()
     val blockBytes = new java.util.concurrent.atomic.AtomicLong()
-    val gates = new java.util.concurrent.ConcurrentLinkedQueue[GraphOps.LoopGate]()
+    val decisions = new java.util.concurrent.ConcurrentLinkedQueue[SmallPlanRule.Decision]()
     sc.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         started.put(j.jobId, j.time)
@@ -68,7 +70,7 @@ object Trace {
         }
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case g: GraphOps.LoopGate => gates.add(g)
+        case d: SmallPlanRule.Decision => decisions.add(d)
         case _ =>
       }
     })
@@ -78,16 +80,16 @@ object Trace {
       if (plan) {
         Tables.resetDerived(spark)
         Bridge.drainListeners(sc)
-        gates.clear()
+        decisions.clear()
         val df = fn(spark, sfDir)
         println(s"=== $q ===")
         df.explain("formatted")
         Bridge.drainListeners(sc)
-        gates.forEach { g =>
-          println(s"GATE $q ${g.site}: " +
-            (if (g.onePartition) "one-partition" else "distributed") +
-            s", scan ${g.scanBytes} B + held ${g.heldBytes} B" +
-            s" vs threshold ${g.threshold} B")
+        decisions.forEach { d =>
+          println(s"RULE $q: " +
+            (if (d.fired) "fired" else s"unchanged (${d.reason})") +
+            s", scan ${d.scanBytes} B + held ${d.heldBytes} B" +
+            s" vs threshold ${d.threshold} B")
         }
         val p = df.queryExecution.executedPlan.toString
         def c(op: String) = op.r.findAllIn(p).length

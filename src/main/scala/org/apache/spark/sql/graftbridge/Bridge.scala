@@ -21,14 +21,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** [[ofRows]] for a rewrite of an analyzed plan that adds only
-    * resolved nodes: marked analyzed, the plan skips the analyzer,
-    * which would otherwise run all its rules over it again. */
-  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    plan.setAnalyzed()
-    ofRows(spark, plan)
-  }
-
   /** Where the session catalog would place managed table `table` —
     * needed to clear a STALE location left by a prior JVM sharing the
     * warehouse dir (the catalog is in-memory per session, the files
@@ -58,13 +50,21 @@ object Bridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       Some(Statistics(sizeInBytes)), None)
 
-  /** This session's `spark.sql.autoBroadcastJoinThreshold` in bytes
-    * (negative: broadcast disabled). `sessionState` is `private[sql]`. */
-  def broadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
+  /** The bytes the blocks of `rdd` hold, once every partition is
+    * written: read from the block manager master, so it runs no job and
+    * does not wait on the listener bus. `blockManager` is
+    * `private[spark]`. */
+  def heldBytes(rdd: RDD[_]): Option[Long] = {
+    import org.apache.spark.storage.RDDBlockId
+    val sizes = rdd.sparkContext.env.blockManager.master.getStorageStatus
+      .flatMap(_.rddBlocks.collect {
+        case (RDDBlockId(id, _), b) if id == rdd.id => b.memSize + b.diskSize
+      })
+    if (sizes.length >= rdd.getNumPartitions) Some(sizes.sum) else None
+  }
 
-  /** Posts `event` to every listener. `listenerBus` is `private[spark]`. */
-  def post(sc: org.apache.spark.SparkContext, event: SparkListenerEvent): Unit =
-    sc.listenerBus.post(event)
+  /** Posts `event` to every listener of the active context.
+    * `listenerBus` is `private[spark]`. */
+  def post(event: SparkListenerEvent): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.listenerBus.post(event))
 }

@@ -86,12 +86,22 @@ class AdaptiveSpec extends GraftSuite {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.shuffle.partitions" -> "64") {
       // A tiny aggregate over 64 shuffle partitions: almost all empty,
-      // AQE must fold them down instead of scheduling 64 tasks.
-      val agg = s.range(0, 1000).groupBy(($"id" % 5).as("g")).count()
-      agg.collect()
-      val p = agg.queryExecution.executedPlan.toString
-      assert(p.contains("AQEShuffleRead") && p.contains("coalesced"),
-        s"expected coalesced AQEShuffleRead:\n$p")
+      // AQE must fold them down instead of scheduling 64 tasks. The
+      // small-plan rule would run it in one partition with no shuffle
+      // at all (the pin below), so the distributed plan is pinned with
+      // the rule excluded.
+      def agg = s.range(0, 1000).groupBy(($"id" % 5).as("g")).count()
+      withConfs("spark.sql.optimizer.excludedRules" -> "graft.plans.SmallPlanRule") {
+        val dist = agg
+        dist.collect()
+        val p = dist.queryExecution.executedPlan.toString
+        assert(p.contains("AQEShuffleRead") && p.contains("coalesced"),
+          s"expected coalesced AQEShuffleRead:\n$p")
+      }
+      val one = agg
+      one.collect()
+      val p1 = one.queryExecution.executedPlan.toString
+      assert(!p1.contains("Exchange"), s"expected no exchange under the rule:\n$p1")
     }
   }
 }

@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import ops.{GraphOps, Tables}
-import SparkTestBase.sf0001
+import SparkTestBase.{sf0001, sf001}
 
-/** The size-gated graph plans (`GraphOps.gate`: the iterative loops,
-  * the shared memos and the motif rows) and the one-partition
-  * checkpoint they rest on (`Tables.ck`): under the broadcast threshold
-  * a gated plan plans no exchange and runs no job of its own, the
-  * checkpoints keep their real size, and the rows are the distributed
-  * plan's rows. */
+/** The graph plans under the small-plan rule (`plans.SmallPlanRule`:
+  * the iterative loops, the shared memos and the motif rows) and the
+  * one-partition checkpoint they rest on (`Tables.ck`): under the
+  * broadcast threshold a plan plans no exchange and runs no job of its
+  * own, the checkpoints keep a bounded size, and the rows are the
+  * distributed plan's rows. */
 class GateSpec extends GraftSuite {
-  private val sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
 
   /** The fixture graph q_graph_lpa labels (its edge set at sf0.001),
     * symmetrized over one written local checkpoint of the directed
@@ -27,23 +26,6 @@ class GateSpec extends GraftSuite {
           WHERE o_totalprice > 450000 AND l_quantity >= 47"""))
     e0.count()
     e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** The jobs `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
-      jobs.get
-    } finally sc.removeSparkListener(l)
   }
 
   private val motifRows = Seq("q_graph_jaccard", "q_graph_triangles",
@@ -61,9 +43,9 @@ class GateSpec extends GraftSuite {
   test("a one-partition LPA label table records its input's bytes, not the compounding estimate") {
     resetMemos()
     val edges = lpaGraph(spark)
-    val held = Tables.heldBytes(Seq(edges), Long.MaxValue).get.values.sum
     val (lbl, gates) = loopGates(GraphOps.lpaLabels(edges, 8))
-    assert(gates.map(_.onePartition) === Seq(true))
+    assert(gates.nonEmpty && gates.forall(_.fired), gates)
+    val held = gates.head.heldBytes
     val est = lbl.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(est <= held,
       s"8 rounds estimated at $est B over an input holding $held B")
@@ -74,28 +56,27 @@ class GateSpec extends GraftSuite {
     resetMemos()
     val s = spark
     import s.implicits._
-    val edges = lpaGraph(s)
-    val g = GraphOps.gate("lpaLabels", edges)
-    assert(g.onePartition)
-    val lbl = Tables.ck(g(edges.select($"src".as("node")).distinct()
-      .withColumn("lbl", $"node")))
-    val lpa = ranPlan(g(GraphOps.lpaStep(edges, lbl)))
-    assert(!lpa.contains("Exchange"), s"LPA round:\n$lpa")
+    val (_, gates) = loopGates {
+      val edges = lpaGraph(s)
+      val lbl = Tables.ck(edges.select($"src".as("node")).distinct()
+        .withColumn("lbl", $"node"))
+      val lpa = ranPlan(GraphOps.lpaStep(edges, lbl))
+      assert(!lpa.contains("Exchange"), s"LPA round:\n$lpa")
 
-    val edgesW = GraphOps.tradeEdgesW(s, sf0001)
-    val deg = GraphOps.tradeDeg(s, sf0001)
-    val g2 = GraphOps.gate("pagerank", edgesW, deg)
-    assert(g2.onePartition)
-    val r = Tables.ck(g2(deg.select($"src".as("node"), lit(0.01).as("r"))))
-    val pr = ranPlan(g2(GraphOps.rankStep(edgesW, r, 100L, broadcastRank = true)))
-    assert(!pr.contains("Exchange"), s"PageRank round:\n$pr")
-    assert(pr.contains("ShuffledHashJoin"), pr)
+      val edgesW = GraphOps.tradeEdgesW(s, sf0001)
+      val deg = GraphOps.tradeDeg(s, sf0001)
+      val r = Tables.ck(deg.select($"src".as("node"), lit(0.01).as("r")))
+      val pr = ranPlan(GraphOps.rankStep(edgesW, r, 100L, broadcastRank = true))
+      assert(!pr.contains("Exchange"), s"PageRank round:\n$pr")
+      assert(pr.contains("ShuffledHashJoin"), pr)
 
-    val seed = Tables.ck(g2(deg.orderBy($"d".desc, $"src").limit(1)
-      .select($"src".as("node"))))
-    val r0 = Tables.ck(g2(seed.select($"node", lit(1.0).as("r"))))
-    val ppr = ranPlan(g2(GraphOps.pprStep(edgesW, r0, seed)))
-    assert(!ppr.contains("Exchange"), s"PPR round:\n$ppr")
+      val seed = Tables.ck(deg.orderBy($"d".desc, $"src").limit(1)
+        .select($"src".as("node")))
+      val r0 = Tables.ck(seed.select($"node", lit(1.0).as("r")))
+      val ppr = ranPlan(GraphOps.pprStep(edgesW, r0, seed))
+      assert(!ppr.contains("Exchange"), s"PPR round:\n$ppr")
+    }
+    assert(gates.nonEmpty && gates.forall(_.fired), gates)
     resetMemos()
   }
 
@@ -134,16 +115,17 @@ class GateSpec extends GraftSuite {
     resetMemos()
     val s = spark
     import s.implicits._
-    val edges = GraphOps.tradeEdges(s, sf001)
-    val deg = GraphOps.tradeDeg(s, sf001)
-    val g = GraphOps.gate("bfsFrontiers", edges, deg)
-    assert(g.onePartition)
-    val seed = Tables.ck(g(deg.orderBy($"d".desc, $"src").limit(1)
-      .select($"src".as("node"))))
-    val hop1 = Tables.ck(g(GraphOps.bfsHop(edges, seed, seed, broadcastSets = true)))
-    val hop2 = ranPlan(g(GraphOps.bfsHop(edges, hop1, seed.unionByName(hop1),
-      broadcastSets = true)))
-    assert(!hop2.contains("Exchange"), s"BFS hop 2:\n$hop2")
+    val (_, gates) = loopGates {
+      val edges = GraphOps.tradeEdges(s, sf001)
+      val deg = GraphOps.tradeDeg(s, sf001)
+      val seed = Tables.ck(deg.orderBy($"d".desc, $"src").limit(1)
+        .select($"src".as("node")))
+      val hop1 = Tables.ck(GraphOps.bfsHop(edges, seed, seed, broadcastSets = true))
+      val hop2 = ranPlan(GraphOps.bfsHop(edges, hop1, seed.unionByName(hop1),
+        broadcastSets = true))
+      assert(!hop2.contains("Exchange"), s"BFS hop 2:\n$hop2")
+    }
+    assert(gates.nonEmpty && gates.forall(_.fired), gates)
     resetMemos()
   }
 
@@ -155,8 +137,8 @@ class GateSpec extends GraftSuite {
       val (one, gOne) = loopGates(rows(q(name, dir)))
       val (many, gMany) = loopGates(
         rows(SparkEntry.queries(name)(distributedLoops, dir)))
-      assert(gOne.nonEmpty && gOne.forall(_.onePartition), s"$dir $name: $gOne")
-      assert(gMany.nonEmpty && gMany.forall(!_.onePartition), s"$dir $name: $gMany")
+      assert(gOne.nonEmpty && gOne.forall(_.fired), s"$dir $name: $gOne")
+      assert(gMany.nonEmpty && gMany.forall(!_.fired), s"$dir $name: $gMany")
       assert(one.nonEmpty && one === many, s"$dir $name")
     }
     resetMemos()

@@ -44,7 +44,15 @@ class LayoutOpsSpec extends GraftSuite {
   }
 
   test("q_join_bucket plans a sort-merge join with NO exchange on either side") {
-    val plan = q("q_join_bucket", sf0001).queryExecution.executedPlan.toString
+    // Under the small-plan rule the row runs in one partition with no
+    // exchange at all; the bucketed sort-merge join is the distributed
+    // plan, pinned where the rule does not fire.
+    val one = q("q_join_bucket", sf0001)
+    one.collect()
+    val onePlan = one.queryExecution.executedPlan.toString
+    assert(!onePlan.contains("Exchange"), s"expected no exchange:\n$onePlan")
+    val plan = SparkEntry.queries("q_join_bucket")(distributedPlans, sf0001)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
     // Printed top-down: the final agg's exchange appears ABOVE the
     // join line; nothing at or below the join may shuffle — the

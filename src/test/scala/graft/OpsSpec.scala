@@ -905,10 +905,16 @@ class OpsSpec extends GraftSuite {
   }
 
   test("q_join_star broadcasts every dim and aggregates once") {
-    val df = q("q_join_star", sf0001)
-    val p = df.queryExecution.executedPlan.toString
+    // The distributed plan, where the small-plan rule does not fire.
+    val dist = SparkEntry.queries("q_join_star")(distributedPlans, sf0001)
+    val p = dist.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
       "region/nation, supplier, and the factored dims must broadcast")
+    // Under the rule the same row runs in one partition, no exchange.
+    val df = q("q_join_star", sf0001)
+    df.collect()
+    val p1 = df.queryExecution.executedPlan.toString
+    assert(!p1.contains("Exchange"), p1)
     val rows = df.collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(rows.nonEmpty && rows.length <= 10,
       "at most the 10 ASIA/EUROPE nations")
@@ -2228,23 +2234,21 @@ class OpsSpec extends GraftSuite {
   }
 
   test("capNeighbors: cap law at 1 and 2, identity above max degree, hash-deterministic") {
-    import spark.implicits._
-    // Customer 10 is a 4-supplier hub; the others are small.
-    val e = Seq((10L, 1L), (10L, 2L), (10L, 3L), (10L, 4L),
-        (20L, 1L), (20L, 5L), (30L, 9L))
-      .toDF("c", "sup")
     def lists(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       df.collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).map { case (c, v) => c -> v.map(_._2).toSet }
-    val full = lists(e)
-    // Both paths: the distributed plan, and one partition under the gate.
-    val e1 = ops.Tables.ck(e.coalesce(1))
-    val g = ops.GraphOps.gate("capNeighbors", e1)
-    assert(g.onePartition)
-    for ((in, path) <- Seq[(org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-        e -> identity, e1 -> (df => g(df)))) {
-      def capped(cap: Int) = lists(path(ops.GraphOps.capNeighbors(in, cap)))
+    // Both paths: one partition under the small-plan rule, and the
+    // distributed plan in a session where the rule does not fire.
+    for ((ss, fires) <- Seq(spark -> true, distributedLoops -> false)) {
+      import ss.implicits._
+      // Customer 10 is a 4-supplier hub; the others are small.
+      val in = ops.Tables.ck(Seq((10L, 1L), (10L, 2L), (10L, 3L), (10L, 4L),
+          (20L, 1L), (20L, 5L), (30L, 9L))
+        .toDF("c", "sup"))
+      val full = lists(in)
+      val (_, decided) = loopGates(ops.GraphOps.capNeighbors(in, 1).collect())
+      assert(decided.nonEmpty && decided.forall(_.fired == fires), decided)
+      def capped(cap: Int) = lists(ops.GraphOps.capNeighbors(in, cap))
       // cap=1: every list shrinks to one supplier → pairing yields none.
       val one = capped(1)
       assert(one.values.forall(_.size == 1) && one.keySet === full.keySet)

@@ -6,11 +6,34 @@ import SparkTestBase.sf0001
   * Catalyst produces the physical shapes the 100-TB design relies on —
   * broadcast for dim joins, pushed filters at the parquet scan, pruned
   * read schemas, partial+final hash aggregation, and sort+limit fusion.
+  *
+  * These are the distributed plans, so the spec runs in a session with
+  * the small-plan rule excluded; the last test pins the one-partition
+  * plan the rule gives the same rows in the engine session.
   */
 class PlanShapeSpec extends GraftSuite {
+  override lazy val spark: org.apache.spark.sql.SparkSession = distributedPlans
 
   private def plan(name: String): String =
     q(name, sf0001).queryExecution.executedPlan.toString
+
+  test("under the small-plan rule the pinned rows plan no exchange") {
+    val rows = Seq("q_agg_argmax", "q_agg_bitmap", "q_agg_corrmat",
+      "q_agg_group", "q_dedup_minhash", "q_filter_pred", "q_graph_triangles",
+      "q_join_asof_native", "q_join_broadcast", "q_join_inner",
+      "q_join_lateral", "q_join_pit", "q_join_range_native", "q_pipe_chunk",
+      "q_pipe_profile", "q_pipe_profile_approx", "q_scan_project",
+      "q_sim_ann_lsh", "q_sim_ann_pq", "q_sim_cosine_topk", "q_sim_knn_join",
+      "q_sort_multi", "q_topk_global", "q_win_anomaly",
+      "q_win_session_native", "q_win_topk_group", "q_text_bpe_serve")
+    val shuffled = rows.filter { name =>
+      val df = SparkEntry.queries(name)(SparkTestBase.spark, sf0001)
+      df.collect()
+      df.queryExecution.executedPlan.toString.contains("Exchange")
+    }
+    ops.Tables.resetDerived(SparkTestBase.spark)
+    assert(shuffled.isEmpty, s"planned an exchange under the rule: $shuffled")
+  }
 
   test("q_join_broadcast plans a BroadcastHashJoin (hint honored)") {
     assert(plan("q_join_broadcast").contains("BroadcastHashJoin"))

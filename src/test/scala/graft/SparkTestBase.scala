@@ -28,6 +28,9 @@ object SparkTestBase {
   /** Real driver fixture, smallest scale — for plan/invariant tests. */
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** The sf0.01 fixture next to it, where the job-count pins run. */
+  val sf001: String = new java.io.File(sf0001).getParent + "/sf0.01"
+
   private def ts(s: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s) // session TZ is UTC
 
@@ -124,27 +127,53 @@ abstract class GraftSuite extends AnyFunSuite {
   def q(name: String, dir: String): DataFrame =
     SparkEntry.queries(name)(spark, dir)
 
-  /** A child session whose size-gated loops (`GraphOps.gate`) always
-    * take their distributed plan: broadcast is disabled, so no input
-    * fits under the threshold. Its memos are local checkpoints too, so
-    * a test that uses it starts and ends with [[resetMemos]]. */
+  /** A child session where `plans.SmallPlanRule` never fires:
+    * broadcast is disabled, so no plan fits under the threshold, and
+    * every plan takes its distributed form. Its memos are local
+    * checkpoints too, so a test that uses it starts and ends with
+    * [[resetMemos]]. */
   lazy val distributedLoops: SparkSession = ops.Tables.childSession(
-    spark, "distributed-loops")("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    SparkTestBase.spark, "distributed-loops")("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  /** Forgets the memos of both sessions: `resetDerived` drops every
-    * block of the context, including the other session's. */
+  /** A child session with `plans.SmallPlanRule` excluded: every plan
+    * takes its distributed form, broadcasts included. A spec that pins
+    * a distributed plan runs it here. */
+  lazy val distributedPlans: SparkSession = ops.Tables.childSession(
+    SparkTestBase.spark, "distributed-plans")(
+    "spark.sql.optimizer.excludedRules" -> "graft.plans.SmallPlanRule")
+
+  /** Forgets the memos of all three sessions: `resetDerived` drops
+    * every block of the context, including the other sessions'. */
   def resetMemos(): Unit = {
     ops.Tables.resetDerived(distributedLoops)
+    ops.Tables.resetDerived(distributedPlans)
     ops.Tables.resetDerived(spark)
   }
 
-  /** `body`'s result and the loop gate decisions it posted. */
-  def loopGates[T](body: => T): (T, Seq[ops.GraphOps.LoopGate]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[ops.GraphOps.LoopGate]()
+  /** The jobs `body` runs. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** `body`'s result and the small-plan decisions it posted. */
+  def loopGates[T](body: => T): (T, Seq[plans.SmallPlanRule.Decision]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[plans.SmallPlanRule.Decision]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         e match {
-          case g: ops.GraphOps.LoopGate => seen.add(g)
+          case d: plans.SmallPlanRule.Decision => seen.add(d)
           case _ =>
         }
     }
@@ -153,7 +182,7 @@ abstract class GraftSuite extends AnyFunSuite {
     try {
       val r = body
       org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
-      (r, seen.toArray(Array.empty[ops.GraphOps.LoopGate]).toSeq)
+      (r, seen.toArray(Array.empty[plans.SmallPlanRule.Decision]).toSeq)
     } finally sc.removeSparkListener(l)
   }
 }

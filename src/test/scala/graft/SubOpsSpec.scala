@@ -9,8 +9,10 @@ import SparkTestBase.{microDir, sf0001}
   */
 class SubOpsSpec extends GraftSuite {
 
+  /** The distributed plan: the plan pins run where the small-plan rule
+    * does not fire (the last test pins the one-partition plan). */
   private def plan(name: String): String =
-    q(name, sf0001).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(distributedPlans, sf0001).queryExecution.executedPlan.toString
 
   test("q_sub_in rewrites IN to a broadcast LeftSemi join") {
     val p = plan("q_sub_in")
@@ -87,13 +89,13 @@ class SubOpsSpec extends GraftSuite {
   }
 
   test("q_text_heavy recounts candidates via a broadcast join, never a full re-group") {
-    val p = q("q_text_heavy", sf0001).queryExecution.executedPlan.toString
+    val p = plan("q_text_heavy")
     assert(p.contains("BroadcastHashJoin"),
       "verify pass must broadcast the <= k candidates")
   }
 
   test("q_stream_enrich broadcasts the static dim side") {
-    val p = q("q_stream_enrich", sf0001).queryExecution.executedPlan.toString
+    val p = plan("q_stream_enrich")
     assert(p.contains("BroadcastHashJoin"))
   }
 
@@ -103,5 +105,19 @@ class SubOpsSpec extends GraftSuite {
     val rows = q("q_sub_notin", microDir).collect()
     assert(rows.map(r => r.getString(0) -> r.getLong(1)).toMap ===
       Map("AUTOMOBILE" -> 2L, "BUILDING" -> 1L))
+  }
+
+  test("under the small-plan rule the plan-pinned rows plan no exchange") {
+    // q_sub_notin keeps its broadcast: Spark plans a null-aware anti
+    // join only as a broadcast hash join.
+    val rows = Seq("q_sub_in", "q_sub_exists", "q_sub_scalar", "q_sub_mincost",
+      "q_sub_scalaragg", "q_sub_avgfilter", "q_sub_decorr", "q_text_heavy",
+      "q_stream_enrich")
+    val shuffled = rows.filter { name =>
+      val df = q(name, sf0001)
+      df.collect()
+      df.queryExecution.executedPlan.toString.contains("Exchange")
+    }
+    assert(shuffled.isEmpty, s"planned an exchange under the rule: $shuffled")
   }
 }
