@@ -3,40 +3,47 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.NumericType
 
-/** Exact global rank without a single-partition window — the two-pass
+/** Exact global rank without a single-partition window — the
   * distributed rank that replaces `Window.orderBy(...)` (no
   * partitionBy) wherever an EXACT total order is required
-  * (`q_win_ntile`, `q_pipe_curriculum`).
+  * (`q_win_ntile`, `q_pipe_curriculum`, `q_sim_hybrid`).
   *
   * Why: a global window moves EVERY row through one task —
   * WindowExec's "No Partition Defined" warning, free at fixture scale
-  * and a hard single-task bottleneck at 100 TB. The two-pass form
-  * keeps exact semantics with only partition-parallel work:
+  * and a hard single-task bottleneck at 100 TB. This form keeps exact
+  * semantics with only partition-parallel work:
   *
-  *  1. range-partition on the sort key (`repartitionByRange`) — rows
-  *     in partition i all precede rows in partition i+1;
-  *  2. per-partition local rank — a KEYED window on the physical
-  *     partition id, embarrassingly parallel;
-  *  3. per-partition row counts → prefix-sum offsets, computed on
-  *     ≤ `partitions` rows via a broadcast triangular join (metadata
-  *     scale — never a window, so the plan audit's GlobalWindow
-  *     detector stays silent end to end);
+  *  1. range buckets on the leading sort key: a row's bucket is the
+  *     number of bounds it sorts after, the bounds spread evenly
+  *     between the key's exact min and max (one global aggregate,
+  *     broadcast as one row);
+  *  2. per-bucket local rank — a window KEYED on the bucket,
+  *     embarrassingly parallel;
+  *  3. per-bucket row counts → prefix-sum offsets, computed on
+  *     ≤ `partitions` + 1 rows via a broadcast triangular join
+  *     (metadata scale — never a window, so the plan audit's
+  *     GlobalWindow detector stays silent end to end);
   *  4. global rank = offset + local rank, attached with one broadcast
   *     hash join.
   *
-  * Both branches (local ranks, counts) read the SAME
-  * `repartitionByRange` exchange: Spark plans the two references as
-  * one reused shuffle stage (canonical-plan exchange reuse, on by
-  * default with and without AQE), so the pid seen by the window and
-  * the pid counted by the aggregate come from one materialization.
-  * The rank-is-a-permutation law and equality with the global-window
-  * form are pinned in DistRankSpec; the driver's DuckDB differential
-  * re-checks both rewritten queries end to end.
+  * The invariant: the bucket is a pure function of the row and the
+  * bounds, and it never decreases along the sort order (NULLs get a
+  * bucket of their own at the end their ordering puts them; NaN sorts
+  * after every bound, as it sorts after every number). Every bucket
+  * holds a contiguous run of the order and both branches compute the
+  * same bucket for a row, so the rank is exact at any fan-out and
+  * under any physical plan — no sampling, no partition ids. The
+  * bounds only spread the load: a non-numeric leading key gets one
+  * bucket, still exact. The laws are pinned in DistRankSpec at several
+  * fan-outs, in one partition and distributed; the driver's DuckDB
+  * differential re-checks the rewritten queries end to end.
   *
-  * The sort key must be a TOTAL order (include a unique tiebreak):
-  * ties that straddle a range boundary would otherwise rank by
-  * placement, and [[cumeDist]] below is only exact when tie-free.
+  * The sort key must be a TOTAL order (include a unique tiebreak), or
+  * tied rows rank in an arbitrary order, and [[cumeDist]] below is
+  * only exact when tie-free.
   */
 object DistRank {
 
@@ -47,31 +54,52 @@ object DistRank {
   val TotalCol = "_gtotal"
 
   /** Append [[RankCol]] and [[TotalCol]] under the total order
-    * `sort`. `partitions` bounds the range fan-out (any value ≥ 1 is
+    * `sort`. `partitions` bounds the bucket fan-out (any value ≥ 1 is
     * correct; size it like a shuffle partition count). */
   def withGlobalRank(df: DataFrame, partitions: Int, sort: Column*)
       : DataFrame = {
     require(sort.nonEmpty, "distributed rank needs at least one sort column")
-    // The pid project sits ABOVE the range exchange and is
-    // nondeterministic, so Catalyst cannot push it below the shuffle.
-    val ranged = df.repartitionByRange(partitions, sort: _*)
-      .withColumn("_gpid", spark_partition_id())
-    val counts = ranged.groupBy("_gpid").agg(count(lit(1)).as("_gcnt"))
+    require(partitions >= 1, s"bucket fan-out must be >= 1, got $partitions")
+    val (key, desc, nullsFirst, keyType) = Bridge.sortKey(df, sort.head)
+    val bounds = keyType match {
+      case _: NumericType => 1 until partitions
+      case _ => Nil
+    }
+    val k = key.cast("double")
+    // Bounds from the finite keys only (NaN and ±∞ would make every
+    // bound NaN or infinite: still exact, but one bucket).
+    val finite = when(k >= -Double.MaxValue && k <= Double.MaxValue, k)
+    val withBounds = if (bounds.isEmpty) df else df.crossJoin(broadcast(
+      df.agg(min(finite).as("_glo"), max(finite).as("_ghi"))
+        .select(bounds.map { i =>
+          val t = i.toDouble / partitions
+          (col("_glo") * (1 - t) + col("_ghi") * t).as(s"_gb$i")
+        }: _*)))
+    // A comparison with a NULL bound (no finite key) counts 0.
+    val after = bounds.map { i =>
+      val b = col(s"_gb$i")
+      when(if (desc) k < b else k > b, 1).otherwise(0)
+    }.foldLeft(lit(0))(_ + _)
+    val bucketed = withBounds
+      .withColumn("_gbkt", when(key.isNull, if (nullsFirst) -1 else partitions)
+        .otherwise(after))
+      .drop(bounds.map(i => s"_gb$i"): _*)
+    val counts = bucketed.groupBy("_gbkt").agg(count(lit(1)).as("_gcnt"))
     // Prefix-sum offsets WITHOUT a global window: a triangular
-    // broadcast join over ≤ partitions² pairs of metadata rows.
+    // broadcast join over ≤ (partitions + 1)² pairs of metadata rows.
     val offsets = counts
-      .join(broadcast(counts.select(col("_gpid").as("_bpid"),
-        col("_gcnt").as("_bcnt"))), col("_bpid") <= col("_gpid"))
-      .groupBy(col("_gpid"), col("_gcnt"))
+      .join(broadcast(counts.select(col("_gbkt").as("_bbkt"),
+        col("_gcnt").as("_bcnt"))), col("_bbkt") <= col("_gbkt"))
+      .groupBy(col("_gbkt"), col("_gcnt"))
       .agg(sum(col("_bcnt")).as("_gthru"))
-      .select(col("_gpid"), (col("_gthru") - col("_gcnt")).as("_goff"))
+      .select(col("_gbkt"), (col("_gthru") - col("_gcnt")).as("_goff"))
     val total = counts.agg(sum(col("_gcnt")).cast("long").as(TotalCol))
-    val local = ranged.withColumn("_glrank",
-      row_number().over(Window.partitionBy(col("_gpid")).orderBy(sort: _*)))
-    local.join(broadcast(offsets), "_gpid")
+    val local = bucketed.withColumn("_glrank",
+      row_number().over(Window.partitionBy(col("_gbkt")).orderBy(sort: _*)))
+    local.join(broadcast(offsets), "_gbkt")
       .crossJoin(broadcast(total))
       .withColumn(RankCol, (col("_goff") + col("_glrank")).cast("long"))
-      .drop("_gpid", "_glrank", "_goff")
+      .drop("_gbkt", "_glrank", "_goff")
   }
 
   /** Exact `NTILE(n)` from a global rank: with N rows the first

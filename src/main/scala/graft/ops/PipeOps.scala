@@ -1589,8 +1589,8 @@ object PipeOps {
     // the ordering pass of curriculum training. The frequency table
     // collapses to |vocab| rows and BROADCASTS; per-doc scoring is
     // map-side. The quartile cut is EXACT but never a global window:
-    // DistRank's two-pass distributed rank (range partition on
-    // (difficulty, doc_id), local rank, broadcast offsets) plus pure
+    // DistRank's distributed rank (range buckets on difficulty,
+    // local rank on (difficulty, doc_id), broadcast offsets) plus pure
     // ntile arithmetic — the same assignment the window function
     // makes, with every stage partition-parallel at 100 TB.
     "q_pipe_curriculum" -> ((s, d) => {

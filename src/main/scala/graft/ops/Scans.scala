@@ -184,7 +184,7 @@ object Scans {
       // is a GetArrayStructFields extraction the pruner DOES rewrite:
       // project the two leaf arrays, zip, then explode — ReadSchema
       // carries exactly the 3 touched leaves (pinned in SourcesSpec).
-      s.read.parquet(dir.toString)
+      Tables.written(s, dir.toString)
         .select($"cust.o_orderstatus".as("status"),
           arrays_zip($"items.l_quantity".as("q"),
             $"items.l_extendedprice".as("p")).as("slim"))

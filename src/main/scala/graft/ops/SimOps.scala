@@ -110,7 +110,7 @@ object SimOps {
     // per-doc sum (order-free BIGINT — the q_text_dsir move; a plain
     // double sum over ~30 query terms could flip a rank), cosine snaps
     // to the 1e-4 grid, and both rankings come from DistRank's
-    // distributed rank (range partition + broadcast offsets — never a
+    // distributed rank (range buckets + broadcast offsets — never a
     // single-task global window) with doc_id tie-breaks. At 100 TB
     // each leg is the corpus scan it always was (postings join /
     // broadcast-query dot scan); the fusion itself joins two ≤ k-row

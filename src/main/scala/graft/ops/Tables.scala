@@ -268,6 +268,13 @@ object Tables {
     })
   }
 
+  /** A parquet directory written once per JVM, read with its schema
+    * memoized in [[rawSchema]] (keyed by the directory and no table):
+    * only its first read runs the footer-inference job. */
+  def written(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(rawSchema.computeIfAbsent((dir, ""),
+      { case (d, _) => spark.read.parquet(d).schema })).parquet(dir)
+
   /** Raw (pre-conform) parquet schema per (dir, table): a `fresh`
     * read per query repeats driver-side file listing + footer schema
     * inference — pure fixed overhead, skipped by passing the schema
@@ -276,13 +283,6 @@ object Tables {
   private val rawSchema = new java.util.concurrent.ConcurrentHashMap[
     (String, String), org.apache.spark.sql.types.StructType]()
 
-  /** Like [[t]] but NEVER plan-cached: a fresh read with fresh
-    * attribute ids. The plan cache intentionally shares one DataFrame
-    * instance per (dir, table), which makes the two sides of a
-    * self-join carry IDENTICAL attribute ids — fine for the built-in
-    * join API (the analyzer deduplicates) but ill-formed for custom
-    * logical nodes built post-analysis (plans/AsofJoin.scala).
-    * Self-join callers read one side through this. */
   /** The shared read preamble of [[fresh]] and [[stream]]: any
     * reader-level legacy conf the fixture needs (events ships
     * TIMESTAMP(NANOS)), then the memoized raw schema — one place, so
@@ -295,6 +295,13 @@ object Tables {
       { case (d, n) => spark.read.parquet(s"$d/$n.parquet").schema })
   }
 
+  /** Like [[t]] but NEVER plan-cached: a fresh read with fresh
+    * attribute ids. The plan cache intentionally shares one DataFrame
+    * instance per (dir, table), which makes the two sides of a
+    * self-join carry IDENTICAL attribute ids — fine for the built-in
+    * join API (the analyzer deduplicates) but ill-formed for custom
+    * logical nodes built post-analysis (plans/AsofJoin.scala).
+    * Self-join callers read one side through this. */
   def fresh(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val schema = pinnedSchema(spark, sfDir, name)
     conform(name, spark.read.schema(schema).parquet(s"$sfDir/$name.parquet"))

@@ -13,8 +13,8 @@ import Tables.{Q, t}
   * the classic MR secondary sort with the sort pushed inside the
   * partition. The one TOTAL order (`q_win_ntile`) does not use a
   * global window at all: it computes its exact ranks with the
-  * two-pass distributed rank ([[DistRank]]) — range partition, local
-  * rank, broadcast prefix-sum offsets — so no query in this file
+  * distributed rank ([[DistRank]]) — range buckets, local rank,
+  * broadcast prefix-sum offsets — so no query in this file
   * funnels all rows through one task at any scale.
   */
 object Windows {
@@ -602,8 +602,8 @@ object Windows {
     // Global quartile/percentile assignment over ALL customers — the
     // percentile-normalization shape every "top X% by balance" cut
     // needs. NOT a global window (all rows in one task): the exact
-    // ranks come from DistRank's two-pass distributed form — range
-    // partition on (acctbal, custkey), per-partition local rank,
+    // ranks come from DistRank's distributed form — range buckets on
+    // acctbal, per-bucket local rank on (acctbal, custkey),
     // broadcast prefix-sum offsets — and ntile/percent_rank/cume_dist
     // are then pure rank arithmetic, bit-identical to the window
     // functions because the composite sort key is tie-free.

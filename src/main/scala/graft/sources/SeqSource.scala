@@ -32,6 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    pins it). Conservative contract: `pushFilters` returns ALL
   *    filters as post-scan residuals, so Spark re-evaluates them —
   *    pruning is an optimization, never a correctness dependency.
+  *  - `SupportsReportStatistics`: each scan reports the exact rows it
+  *    emits and their bytes, so the planner (and the small-plan rule)
+  *    sizes it like a file scan instead of as an unknown leaf.
   */
 class SeqSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -147,18 +150,36 @@ class SeqScanBuilder(n: Long, slices: Int, exactFilters: Boolean = false)
   }
 }
 
-case class SeqScan(n: Long, slices: Int, lo: Long, hi: Long,
-    required: StructType) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+/** The id slices of `[0, n)` a scan keeps inside `[lo, hi)`, and the
+  * exact size it reports: `rows` over those slices, each `width` bytes. */
+trait SeqSlices extends SupportsReportStatistics {
+  def n: Long
+  def slices: Int
+  def lo: Long
+  def hi: Long
 
-  private def ranges: Seq[(Long, Long)] = {
+  protected def ranges: Seq[(Long, Long)] = {
     val step = math.max(1L, (n + slices - 1) / slices)
     (0L until n by step).map(s => (s, math.min(n, s + step)))
   }
-  private def kept: Seq[(Long, Long)] =
+  protected def kept: Seq[(Long, Long)] =
     ranges.map { case (s, e) => (math.max(s, lo), math.min(e, hi)) }
       .filter { case (s, e) => s < e }
+
+  protected def rows: Long
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(rows * readSchema().defaultSize)
+  }
+}
+
+case class SeqScan(n: Long, slices: Int, lo: Long, hi: Long,
+    required: StructType) extends Scan with Batch with SeqSlices {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override protected def rows: Long = kept.map { case (s, e) => e - s }.sum
 
   override def description(): String =
     s"SeqScan(n=$n, partitions=${kept.size}/${ranges.size}, " +
@@ -181,7 +202,7 @@ case class SeqPartition(start: Long, end: Long) extends InputPartition
   * columns first, then the aggregate columns in pushed order — the
   * layout V2ScanRelationPushDown expects. */
 case class SeqAggScan(n: Long, slices: Int, lo: Long, hi: Long,
-    funcs: Seq[String], grouped: Boolean) extends Scan with Batch {
+    funcs: Seq[String], grouped: Boolean) extends Scan with Batch with SeqSlices {
   override def readSchema(): StructType = {
     val g = if (grouped)
       Seq(StructField("tag", StringType, nullable = false)) else Nil
@@ -192,14 +213,9 @@ case class SeqAggScan(n: Long, slices: Int, lo: Long, hi: Long,
     StructType(g ++ a)
   }
   override def toBatch: Batch = this
-
-  private def ranges: Seq[(Long, Long)] = {
-    val step = math.max(1L, (n + slices - 1) / slices)
-    (0L until n by step).map(s => (s, math.min(n, s + step)))
-  }
-  private def kept: Seq[(Long, Long)] =
-    ranges.map { case (s, e) => (math.max(s, lo), math.min(e, hi)) }
-      .filter { case (s, e) => s < e }
+  // One partial row per group present in each kept slice.
+  override protected def rows: Long =
+    kept.map { case (s, e) => math.min(e - s, if (grouped) 7L else 1L) }.sum
 
   override def description(): String =
     s"SeqAggScan(n=$n, partitions=${kept.size}/${ranges.size}, " +

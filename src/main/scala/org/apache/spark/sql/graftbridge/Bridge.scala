@@ -2,12 +2,13 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.SparkListenerEvent
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Descending, NullsFirst, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.DataType
 
 /** The one internal hand-shake a third-party operator library needs:
   * turning a custom [[LogicalPlan]] back into a user-facing
@@ -67,4 +68,15 @@ object Bridge {
     * `listenerBus` is `private[spark]`. */
   def post(event: SparkListenerEvent): Unit =
     org.apache.spark.SparkContext.getActive.foreach(_.listenerBus.post(event))
+
+  /** The sort key `order` names over `df`, resolved by analysis alone
+    * (no job): the key as a column, whether it sorts descending,
+    * whether its NULLs sort first, and its type. A column built from a
+    * resolved expression is `private[sql]`. */
+  def sortKey(df: DataFrame, order: Column): (Column, Boolean, Boolean, DataType) = {
+    val o = df.orderBy(order).queryExecution.analyzed
+      .collectFirst { case s: Sort => s.order.head }.get
+    (org.apache.spark.sql.classic.ExpressionUtils.column(o.child),
+      o.direction == Descending, o.nullOrdering == NullsFirst, o.child.dataType)
+  }
 }

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.DistRank
 
-/** Laws for the two-pass distributed rank that replaced the two
-  * single-partition windows (q_win_ntile, q_pipe_curriculum):
-  * rank is an exact permutation, the derived ntile/percent_rank/
-  * cume_dist equal the window functions bit for bit, and the shipped
-  * plans contain NO global (partition-less, ordered) window.
+/** Laws for the distributed rank that replaced the single-partition
+  * windows (q_win_ntile, q_pipe_curriculum, q_sim_hybrid): rank is an
+  * exact permutation equal to the window form at every fan-out, in one
+  * partition (the small-plan rule fires) and distributed (it is
+  * excluded); the derived ntile/percent_rank/cume_dist equal the
+  * window functions bit for bit; and the shipped plans contain NO
+  * global (partition-less, ordered) window.
   */
 class DistRankSpec extends GraftSuite {
   import SparkTestBase.sf0001
@@ -21,6 +24,52 @@ class DistRankSpec extends GraftSuite {
     // primaries — the composite (v, id) is the total order.
     spark.range(0, 1003, 1, 7)
       .select(col("id"), (col("id") % 97).as("v"))
+  }
+
+  /** `v` with NULLs, NaN and ±∞ among repeated finite values. */
+  private def nullsAndNaN(s: SparkSession): DataFrame =
+    s.range(0, 1003, 1, 7).select(col("id"),
+      when(col("id") % 11 === 0, lit(null).cast("double"))
+        .when(col("id") % 13 === 0, lit(Double.NaN))
+        .when(col("id") % 17 === 0, lit(Double.PositiveInfinity))
+        .when(col("id") % 19 === 0, lit(Double.NegativeInfinity))
+        .otherwise((col("id") % 37) * 0.5 - 4).as("v"))
+
+  /** The rank and total at fan-outs 1, 2, 3, 5 and 32, with the rule on
+    * (where it must fire: the plan is deterministic) and excluded, equal
+    * row_number() and count over the global window. */
+  private def rankLaw(input: SparkSession => DataFrame, sort: Column*): Unit =
+    for (s <- Seq(spark, distributedPlans); p <- Seq(1, 2, 3, 5, 32)) {
+      val df = input(s)
+      val expect = df.select(col("id"),
+        row_number().over(Window.orderBy(sort: _*)).cast("long"),
+        count(lit(1)).over())
+      val (got, ds) = loopGates(DistRank.withGlobalRank(df, p, sort: _*)
+        .select(col("id"), col(DistRank.RankCol), col(DistRank.TotalCol))
+        .orderBy("id").collect().toSeq)
+      val at = s"fan-out $p, rule ${if (s eq spark) "on" else "excluded"}"
+      assert(got === expect.orderBy("id").collect().toSeq, at)
+      if (s eq spark) assert(ds.nonEmpty && ds.forall(_.fired), s"$at: $ds")
+    }
+
+  test("rank equals the window form at every fan-out: heavy ties on the leading key") {
+    rankLaw(s => s.range(0, 1003, 1, 7).select(col("id"),
+      ((col("id") % 97) / 4).cast("decimal(10,2)").as("v")), col("v"), col("id"))
+  }
+
+  test("rank equals the window form at every fan-out: an all-equal leading key") {
+    rankLaw(s => s.range(0, 1003, 1, 7).select(col("id"), lit(7L).as("v")),
+      col("v"), col("id"))
+  }
+
+  test("rank equals the window form at every fan-out: NULL, NaN and infinite leading keys") {
+    rankLaw(nullsAndNaN, col("v"), col("id"))
+    rankLaw(nullsAndNaN, col("v").asc_nulls_last, col("id"))
+  }
+
+  test("rank equals the window form at every fan-out: a descending leading key") {
+    rankLaw(nullsAndNaN, col("v").desc, col("id"))
+    rankLaw(nullsAndNaN, col("v").desc_nulls_first, col("id").desc)
   }
 
   test("global rank is the exact permutation the sort order defines") {

@@ -92,6 +92,19 @@ class PlanShapeSpec extends GraftSuite {
     assert(agg === raw, "pushed-aggregate counts must equal the row scan's")
   }
 
+  test("under the small-plan rule the DSv2 rows keep their pruning and pushed aggregates in one partition") {
+    val one = Seq("q_scan_dsv2", "q_scan_dsv2_agg").map { name =>
+      val df = SparkEntry.queries(name)(SparkTestBase.spark, sf0001)
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    one.foreach { p =>
+      assert(p.contains("partitions=6/16") && p.contains("bounds=[12500,50000)"), p)
+      assert(!p.contains("Exchange"), s"planned an exchange under the rule:\n$p")
+    }
+    assert(one(1).contains("PushedAggregates=[count,min,max]"), one(1))
+  }
+
   test("q_sql_recursive plans a real UnionLoop (recursive CTE), not a hand-unroll") {
     val p = plan("q_sql_recursive")
     assert(p.contains("UnionLoop"),

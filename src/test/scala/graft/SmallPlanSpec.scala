@@ -87,13 +87,7 @@ class SmallPlanSpec extends GraftSuite {
   /** The short relational rows (perfbench's relational-short workload)
     * that run more than one job at sf0.01, with their bound and why. */
   private val multiJob: Map[String, (Int, String)] = Map(
-    "q_scan_dsv2" -> (3, "a DSv2 relation reports no size: an unknown leaf"),
-    "q_scan_nested" -> (2, "it reads back the directory it wrote through a " +
-      "fresh parquet read, whose schema inference is one job"),
-    "q_sub_avgfilter" -> (2, "its uncorrelated scalar subquery runs as its own job"),
-    "q_sub_notin" -> (2, "Spark plans a null-aware anti join only as a broadcast"),
-    "q_win_ntile" -> (10, "DistRank reads spark_partition_id, so the plan is " +
-      "nondeterministic and stays distributed"))
+    "q_sub_notin" -> (2, "Spark plans a null-aware anti join only as a broadcast"))
 
   private val relationalShort = Seq("q_agg_approx", "q_agg_chisq",
     "q_agg_cube", "q_agg_group", "q_agg_listagg", "q_agg_percentile_disc",
@@ -114,6 +108,35 @@ class SmallPlanSpec extends GraftSuite {
       if (jobs > bound) Some(s"$name ran $jobs jobs (bound $bound)") else None
     }
     assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("the rule fires on q_win_ntile: DistRank's plan is deterministic") {
+    val ds = decisions(q("q_win_ntile", sf0001))
+    assert(ds.nonEmpty && ds.forall(_.reason == "fired"), ds)
+  }
+
+  test("the rule sizes a DSv2 scan by the size it reports") {
+    val ds = decisions(q("q_scan_dsv2", sf0001))
+    // 37 500 rows of (id, val, tag): 8 + 8 + 20 bytes each.
+    assert(ds.nonEmpty && ds.forall(d => d.fired && d.scanBytes == 37500L * 36), ds)
+  }
+
+  test("the rule folds a scalar subquery over a global aggregate, and only that") {
+    orders().createOrReplaceTempView("small_plan_orders")
+    def scalar(sub: String) = spark.sql(
+      s"SELECT o_orderkey FROM small_plan_orders WHERE o_custkey > ($sub)")
+    val folded = scalar("SELECT avg(o_custkey) FROM small_plan_orders")
+    val expect = orders(distributedPlans).agg(avg(col("o_custkey"))).head().getDouble(0)
+    assert(folded.collect().map(_.getLong(0)).sorted.toSeq ===
+      orders().where(col("o_custkey") > expect).collect().map(_.getLong(0)).sorted.toSeq)
+    assert(!folded.queryExecution.executedPlan.toString.contains("Subquery subquery"))
+    // No row: NULL, so no row passes. More than one row: an error.
+    val empty = scalar("SELECT o_custkey FROM small_plan_orders WHERE o_orderkey < 0")
+    assert(empty.collect().isEmpty)
+    assert(empty.queryExecution.executedPlan.toString.contains("Subquery subquery"))
+    val many = intercept[Exception](
+      scalar("SELECT o_custkey FROM small_plan_orders").collect())
+    assert(many.getMessage.contains("SCALAR_SUBQUERY_TOO_MANY_ROWS"), many.getMessage)
   }
 
   test("every declared row returns the same rows with the rule on and excluded") {
