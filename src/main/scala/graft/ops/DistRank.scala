@@ -16,30 +16,31 @@ import org.apache.spark.sql.types.NumericType
   * and a hard single-task bottleneck at 100 TB. This form keeps exact
   * semantics with only partition-parallel work:
   *
-  *  1. range buckets on the leading sort key: a row's bucket is the
-  *     number of bounds it sorts after, the bounds spread evenly
-  *     between the key's exact min and max (one global aggregate,
-  *     broadcast as one row);
+  *  1. range buckets on the leading sort key: a row's bucket is
+  *     floor((key − min) / width), clamped to the fan-out, with the
+  *     key's exact finite min and width = (max − min) / fan-out (one
+  *     global aggregate, broadcast as one row);
   *  2. per-bucket local rank — a window KEYED on the bucket,
   *     embarrassingly parallel;
-  *  3. per-bucket row counts → prefix-sum offsets, computed on
-  *     ≤ `partitions` + 1 rows via a broadcast triangular join
-  *     (metadata scale — never a window, so the plan audit's
-  *     GlobalWindow detector stays silent end to end);
+  *  3. per-bucket row counts, gathered into one row → each bucket's
+  *     offset (the counts before it) and the total (metadata scale —
+  *     never a window, so the plan audit's GlobalWindow detector stays
+  *     silent end to end);
   *  4. global rank = offset + local rank, attached with one broadcast
   *     hash join.
   *
   * The invariant: the bucket is a pure function of the row and the
-  * bounds, and it never decreases along the sort order (NULLs get a
-  * bucket of their own at the end their ordering puts them; NaN sorts
-  * after every bound, as it sorts after every number). Every bucket
-  * holds a contiguous run of the order and both branches compute the
-  * same bucket for a row, so the rank is exact at any fan-out and
-  * under any physical plan — no sampling, no partition ids. The
-  * bounds only spread the load: a non-numeric leading key gets one
-  * bucket, still exact. The laws are pinned in DistRankSpec at several
-  * fan-outs, in one partition and distributed; the driver's DuckDB
-  * differential re-checks the rewritten queries end to end.
+  * global min and width, and it never decreases along the sort order
+  * (each step of the formula is monotone in the key; NULLs get a
+  * bucket of their own at the end their ordering puts them; NaN gets
+  * the last, as it sorts after every number). Every bucket holds a
+  * contiguous run of the order and both branches compute the same
+  * bucket for a row, so the rank is exact at any fan-out and under
+  * any physical plan — no sampling, no partition ids. The buckets only
+  * spread the load: a non-numeric leading key gets one bucket, still
+  * exact. The laws are pinned in DistRankSpec at several fan-outs, in
+  * one partition and distributed; the driver's DuckDB differential
+  * re-checks the rewritten queries end to end.
   *
   * The sort key must be a TOTAL order (include a unique tiebreak), or
   * tied rows rank in an arbitrary order, and [[cumeDist]] below is
@@ -61,43 +62,43 @@ object DistRank {
     require(sort.nonEmpty, "distributed rank needs at least one sort column")
     require(partitions >= 1, s"bucket fan-out must be >= 1, got $partitions")
     val (key, desc, nullsFirst, keyType) = Bridge.sortKey(df, sort.head)
-    val bounds = keyType match {
-      case _: NumericType => 1 until partitions
-      case _ => Nil
+    val nulls = if (nullsFirst) -1 else partitions
+    // Every step of the bucket formula is monotone in the key, so the
+    // bucket never decreases along the order; min and width come from
+    // the finite keys only, and NaN sorts after every number.
+    val bucketed = keyType match {
+      case _: NumericType if partitions > 1 =>
+        val k = key.cast("double")
+        val finite = when(k >= -Double.MaxValue && k <= Double.MaxValue, k)
+        val w = col("_gw")
+        val asc = when(k.isNaN, partitions - 1)
+          .when(w > 0, least(greatest(floor((k - col("_glo")) / w), lit(0L)),
+            lit(partitions - 1L)))
+          .otherwise(0)
+        df.crossJoin(broadcast(df.agg(min(finite).as("_glo"),
+            ((max(finite) - min(finite)) / partitions).as("_gw"))))
+          .withColumn("_gbkt", when(key.isNull, nulls)
+            .otherwise(if (desc) lit(partitions - 1) - asc else asc))
+          .drop("_glo", "_gw")
+      case _ => df.withColumn("_gbkt", when(key.isNull, nulls).otherwise(0))
     }
-    val k = key.cast("double")
-    // Bounds from the finite keys only (NaN and ±∞ would make every
-    // bound NaN or infinite: still exact, but one bucket).
-    val finite = when(k >= -Double.MaxValue && k <= Double.MaxValue, k)
-    val withBounds = if (bounds.isEmpty) df else df.crossJoin(broadcast(
-      df.agg(min(finite).as("_glo"), max(finite).as("_ghi"))
-        .select(bounds.map { i =>
-          val t = i.toDouble / partitions
-          (col("_glo") * (1 - t) + col("_ghi") * t).as(s"_gb$i")
-        }: _*)))
-    // A comparison with a NULL bound (no finite key) counts 0.
-    val after = bounds.map { i =>
-      val b = col(s"_gb$i")
-      when(if (desc) k < b else k > b, 1).otherwise(0)
-    }.foldLeft(lit(0))(_ + _)
-    val bucketed = withBounds
-      .withColumn("_gbkt", when(key.isNull, if (nullsFirst) -1 else partitions)
-        .otherwise(after))
-      .drop(bounds.map(i => s"_gb$i"): _*)
-    val counts = bucketed.groupBy("_gbkt").agg(count(lit(1)).as("_gcnt"))
-    // Prefix-sum offsets WITHOUT a global window: a triangular
-    // broadcast join over ≤ (partitions + 1)² pairs of metadata rows.
-    val offsets = counts
-      .join(broadcast(counts.select(col("_gbkt").as("_bbkt"),
-        col("_gcnt").as("_bcnt"))), col("_bbkt") <= col("_gbkt"))
-      .groupBy(col("_gbkt"), col("_gcnt"))
-      .agg(sum(col("_bcnt")).as("_gthru"))
-      .select(col("_gbkt"), (col("_gthru") - col("_gcnt")).as("_goff"))
-    val total = counts.agg(sum(col("_gcnt")).cast("long").as(TotalCol))
+    // Offsets and the total WITHOUT a global window: the ≤ partitions
+    // + 2 bucket counts gather into one row, which gives each bucket the
+    // sum of the counts before it and of all counts (metadata scale).
+    // One row also keeps Catalyst's size estimate small, where a join of
+    // the counts with themselves multiplies the input's estimate by
+    // itself and makes the planner shuffle a single-partition join.
+    val h = col("_gh")
+    val offsets = bucketed.groupBy("_gbkt").agg(count(lit(1)).as("_gcnt"))
+      .agg(collect_list(struct("_gbkt", "_gcnt")).as("_gh"))
+      .select(explode(transform(h, b => struct(b("_gbkt").as("_gbkt"),
+        aggregate(h, lit(0L), (n, c) =>
+          n + when(c("_gbkt") < b("_gbkt"), c("_gcnt")).otherwise(0L)).as("_goff"),
+        aggregate(h, lit(0L), (n, c) => n + c("_gcnt")).as(TotalCol)))).as("_go"))
+      .select("_go.*")
     val local = bucketed.withColumn("_glrank",
       row_number().over(Window.partitionBy(col("_gbkt")).orderBy(sort: _*)))
     local.join(broadcast(offsets), "_gbkt")
-      .crossJoin(broadcast(total))
       .withColumn(RankCol, (col("_goff") + col("_glrank")).cast("long"))
       .drop("_gbkt", "_glrank", "_goff")
   }

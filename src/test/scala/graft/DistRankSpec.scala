@@ -35,6 +35,14 @@ class DistRankSpec extends GraftSuite {
         .when(col("id") % 19 === 0, lit(Double.NegativeInfinity))
         .otherwise((col("id") % 37) * 0.5 - 4).as("v"))
 
+  /** `v` with ±Double.MaxValue among small values: max − min overflows
+    * to infinity. */
+  private def extremes(s: SparkSession): DataFrame =
+    s.range(0, 1003, 1, 7).select(col("id"),
+      when(col("id") % 23 === 0, lit(Double.MaxValue))
+        .when(col("id") % 29 === 0, lit(-Double.MaxValue))
+        .otherwise((col("id") % 37) * 0.5 - 4).as("v"))
+
   /** The rank and total at fan-outs 1, 2, 3, 5 and 32, with the rule on
     * (where it must fire: the plan is deterministic) and excluded, equal
     * row_number() and count over the global window. */
@@ -65,6 +73,11 @@ class DistRankSpec extends GraftSuite {
   test("rank equals the window form at every fan-out: NULL, NaN and infinite leading keys") {
     rankLaw(nullsAndNaN, col("v"), col("id"))
     rankLaw(nullsAndNaN, col("v").asc_nulls_last, col("id"))
+  }
+
+  test("rank equals the window form at every fan-out: a key range wider than a double") {
+    rankLaw(extremes, col("v"), col("id"))
+    rankLaw(extremes, col("v").desc, col("id"))
   }
 
   test("rank equals the window form at every fan-out: a descending leading key") {
