@@ -72,7 +72,7 @@ object ExtOps {
     * `q_pipe_groupsplit` (leakage-safe split key). Blocked components
     * are the shape LSH/blocked dedup pipelines produce at 100 TB
     * (bounded blocks — each fits one task); only an UNblocked graph
-    * needs iterative min-label propagation. Only vecs appearing in
+    * needs an iterative loop ([[GraphOps.ccStar]]). Only vecs appearing in
     * some pair are present; singleton callers coalesce to self. */
   private[graft] def clusterMembers(s: org.apache.spark.sql.SparkSession,
       d: String) = Tables.derived(s, d, "cluster_members") {
@@ -611,8 +611,8 @@ object ExtOps {
     // blocks: one shuffle keyed on label, exact union-find within
     // each block's (bounded) edge list. This is the blocked-CC shape
     // dedup pipelines use at 100 TB (LSH/blocking keys guarantee
-    // bounded blocks); only an UNblocked graph would need iterative
-    // min-label propagation. The DuckDB oracle computes the exact
+    // bounded blocks); only an UNblocked graph would need an
+    // iterative loop (GraphOps.ccStar). The DuckDB oracle computes the exact
     // transitive closure, so any containment error fails the
     // differential. Output: per-cluster canonical (min) id, size.
     "q_dedup_cluster" -> ((s, d) => {

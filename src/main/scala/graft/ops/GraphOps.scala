@@ -10,7 +10,7 @@ import Tables.{Q, t}
   * §0.3, §3.1); here each iteration is one keyed join + aggregate and
   * Catalyst fuses the per-iteration pipeline. The other graph operator
   * in the engine is `q_dedup_cluster` (ExtOps): connected components
-  * by min-label propagation.
+  * by union-find within each blocking-key block.
   *
   * Scale notes (100 TB): one iteration = one shuffle keyed on the
   * vertex id, partial-aggregable (rank contributions combine
@@ -127,12 +127,11 @@ object GraphOps {
     * `tol`. Each iteration ends in a lazy [[Tables.ck]] — the
     * lineage cut an iterative Spark job needs anyway — whose blocks
     * materialize inside the round's delta check, the round's only
-    * explicit action (the ccLabels batching discipline). The check
-    * itself is the union form: a signed per-node sum over the two
-    * |V|-sized checkpointed rank tables, one partial-aggregable
-    * keyed aggregate — no join. The delta read is a metadata-scale
-    * driver scalar (same class as the |V| count), not a data
-    * collect. */
+    * explicit action. The check itself is the union form: a signed
+    * per-node sum over the two |V|-sized checkpointed rank tables,
+    * one partial-aggregable keyed aggregate — no join. The delta
+    * read is a metadata-scale driver scalar (same class as the |V|
+    * count), not a data collect. */
   def pagerank(edgesW: org.apache.spark.sql.DataFrame,
                init: org.apache.spark.sql.DataFrame, n: Long,
                maxIters: Int, tol: Double,
@@ -164,118 +163,17 @@ object GraphOps {
     (r, it)
   }
 
-  /** Connected-component labels of a SYMMETRIC edge set (both
-    * directions present): iterative min-label propagation — each
-    * round every node takes the min of its own and its neighbors'
-    * labels (one keyed join + one partial-aggregable min, the
-    * PageRank iteration shape; the |V|-sized label table broadcasts
-    * like the rank table). It has no co-partitioned mode: past the
-    * broadcast regime [[ccStar]] also wins on round count (log |V| vs
-    * diameter); this variant is the law-tested baseline (OpsSpec:
-    * agreement with ccStar, doubling, a union-find). The loop stops when
-    * a round changes NOTHING: a fixpoint of the update IS the exact
-    * component labeling, so correctness never depends on the round
-    * count. The per-round changed count is a metadata-scale driver
-    * scalar (same class as pagerank's L1 delta), and the lazy
-    * checkpoint makes it the round's ONLY action — the next label
-    * table materializes inside it; two propagation steps run per
-    * action, since per-action latency (not data) dominates an
-    * iterative loop over a bounded label table.
-    *
-    * `doubling = false`: labels hop ONE edge per step → steps =
-    * graph diameter, edge set untouched (linear memory).
-    * `doubling = true`: after each step the edge set also unions its
-    * own 2-hop composition, so step k covers 2^k-hop reachability →
-    * log(diameter) steps. The trade is edge growth toward the
-    * per-component closure: on LONG-DIAMETER SPARSE structure
-    * (paths, trees, grids — where plain propagation is hopeless) the
-    * composition stays near-linear and doubling wins outright; on
-    * dense bounded components the composition degenerates toward
-    * Σ sᵢ³ intermediate tuples, so the declared query runs plain;
-    * [[ccStar]] gets log rounds without that blowup. Both variants'
-    * agreement and step counts are pinned in OpsSpec.
-    *
-    * Returns (labels `(node, lab)`, propagation steps run — batch
-    * granularity of 2, so the count overshoots the fixpoint by up to
-    * one batch). */
-  private[graft] def ccLabels(edges0: org.apache.spark.sql.DataFrame,
-      doubling: Boolean, maxRounds: Int = 100)
-      : (org.apache.spark.sql.DataFrame, Int) = {
-    var edges = edges0
-    // Self-loops fold "min with own label" INTO the neighbor
-    // aggregate: one broadcast join + one partial-aggregable min per
-    // step — a single shuffle — where joining the neighbor mins back
-    // against the label table would pay a second. In a loop whose
-    // wall clock is stage latency × step count, that halves the step.
-    val selfLoops = edges0.select(col("src")).distinct()
-      .select(col("src"), col("src").as("dst"))
-      .transform(Tables.ck)
-    var lab = edges0.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lab")).transform(Tables.ck)
-    // One min-label propagation step over the CURRENT edge set
-    // (symmetric ⇒ every node occurs on both sides, and the
-    // self-loops keep every node in its own aggregate).
-    def step(l: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      edges.unionByName(selfLoops)
-        .join(broadcast(l), col("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("lab")).as("lab"))
-        .select(col("src").as("node"), col("lab"))
-    def double(): Unit = if (doubling) {
-      val hop2 = edges.as("a").join(edges.as("b"),
-          col("a.dst") === col("b.src") && col("a.src") =!= col("b.dst"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-      edges = edges.unionByName(hop2).distinct()
-        .transform(Tables.ck)
-    }
-    var changed = 1L
-    var steps = 0
-    // TWO propagation steps per materialization: iterative jobs here
-    // are latency-bound, so the changed-count — the batch's ONLY
-    // explicit action, the lazy checkpoints piggyback on it — runs
-    // once per step PAIR. The fixpoint check stays exact: no change
-    // across a batch ⟹ no change in any step of it. Batching HARDER
-    // does not pay: each step's BROADCAST of the previous label table
-    // forces a driver materialization round regardless of the action
-    // schedule, so a larger batch saves only the tiny count-join jobs
-    // while adding lineage and planning depth (BUILD_NOTES.md).
-    val batch = 2
-    while (changed > 0 && steps < maxRounds) {
-      // Every intermediate table is ALSO lazily checkpointed: step(l)
-      // references l on both join sides, and Spark has no general
-      // plan CSE — un-checkpointed, each reference would replay the
-      // whole step (and the replay compounds per batch). The lazy
-      // checkpoint makes both references share one RDD, still
-      // materialized inside the batch's single count action.
-      var next = lab
-      for (_ <- 1 to batch) {
-        next = step(next).transform(Tables.ck)
-        double()
-      }
-      changed = next
-        .join(lab.select(col("node"), col("lab").as("old")), "node")
-        .where(col("lab") =!= col("old")).count()
-      lab = next
-      steps += batch
-    }
-    (lab, steps)
-  }
-
   /** Connected-component labels by alternating LARGE-STAR / SMALL-STAR
     * rounds (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC 2014 — a published algorithm, re-expressed on
-    * DataFrames) — the GENERAL-CASE unbounded-graph CC scheme
-    * [[ccLabels]]'s scaladoc points to: O(log |V|) rounds like path
-    * doubling, but the edge set stays LINEAR (each phase rewrites
-    * edges toward per-star minima instead of composing 2-hop paths),
-    * and no phase REQUIRES a broadcast — each is one keyed aggregate
-    * plus one join ON THE SAME KEY, so the grouped side arrives
-    * already hash-partitioned and the plan stays valid unchanged when
-    * the min-table outgrows every executor (AQE is free to pick
-    * broadcast while it still fits, as at fixture scale). That is the
-    * shape that survives a graph whose label table itself exceeds
-    * executor memory, where both [[ccLabels]] variants die (broadcast
-    * label table / cubic edge growth respectively).
+    * DataFrames): O(log |V|) rounds with the edge set kept LINEAR
+    * (each phase rewrites edges toward per-star minima instead of
+    * composing 2-hop paths), and no phase REQUIRES a broadcast — each
+    * is one keyed aggregate plus one join ON THE SAME KEY, so the
+    * grouped side arrives already hash-partitioned and the plan stays
+    * valid unchanged when the min-table outgrows every executor (AQE
+    * is free to pick broadcast while it still fits, as at fixture
+    * scale).
     *
     * Phases over undirected edges held as ordered pairs:
     *  - large-star(u): m = min(N(u) ∪ {u}); every STRICTLY LARGER
@@ -288,14 +186,10 @@ object GraphOps {
     * keeps at least one incident edge, and the fixpoint is a star
     * forest whose centers are the component minima — so the CONVERGED
     * labels equal the transitive-closure oracle regardless of round
-    * count, the same converged-fixpoint contract as [[ccLabels]].
-    * Convergence = the canonicalized edge set is unchanged over a
-    * round (checked with one anti-join count per round — edge-scale
+    * count. Convergence = the canonicalized edge set is unchanged over
+    * a round (checked with one anti-join count per round — edge-scale
     * but linear and keyed; the lazy checkpoints materialize inside
-    * it). Measured in tools/CCScale: 8.4× over plain propagation on
-    * diameter-128 chains at 1M nodes (8 rounds vs 130 steps), and
-    * never slower in any measured regime — including short-diameter
-    * ring components and the sf0.1 fixture graph.
+    * it). Timed at 1M nodes by tools/CCScale.
     *
     * Final labeling: labels need the min over N(u) ∪ {u}, so every
     * node of the original graph appears — a final self-paired union
@@ -317,8 +211,8 @@ object GraphOps {
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       // min over N(u) ∪ {u}: least(v, u) folds the self term into the
-      // same partial-aggregable min, exactly the ccLabels self-loop
-      // move. The join key equals the grouping key, so the aggregate
+      // same partial-aggregable min, so no self-loop rows are needed.
+      // The join key equals the grouping key, so the aggregate
       // output is already partitioned for it — no |V| broadcast.
       val m = sym.groupBy(col("u"))
         .agg(min(least(col("v"), col("u"))).as("m"))
@@ -344,13 +238,12 @@ object GraphOps {
     var edges = canon(edges0).transform(Tables.ck)
     var rounds = 0
     var changed = 1L
-    // TWO rounds per convergence check — the ccLabels batch=2
-    // adjudication applied here: the converged loop is latency-bound
-    // on the per-check driver action, and checking every other round
-    // halves those actions while the extra round in the final batch is
-    // a no-op fixpoint pass. The check stays EXACT: one alternation
-    // round strictly decreases the Kiveris et al. potential unless the
-    // edge set is already the star-forest fixpoint, so a 2-cycle
+    // TWO rounds per convergence check: the converged loop is
+    // latency-bound on the per-check driver action, and checking every
+    // other round halves those actions while the extra round in the
+    // final batch is a no-op fixpoint pass. The check stays EXACT: one
+    // alternation round strictly decreases the Kiveris et al. potential
+    // unless the edge set is already the star-forest fixpoint, so a 2-cycle
     // (f(f(e)) = e with f(e) ≠ e) is impossible — batch-equality ⟹
     // fixpoint. A batch of 3 measured slower (BUILD_NOTES.md).
     val batch = 2
@@ -745,29 +638,19 @@ object GraphOps {
     * fixture. Probed peel depths on the [[ccEdges]] graph (k=2):
     * 2 / 6 / 11 rounds at sf0.001 / 0.01 / 0.1.
     *
-    * `broadcastKeep` is the [[bfsFrontiers]] regime split: the
-    * surviving-node set is |V|-bounded, so it BROADCASTS and each
-    * restriction join is a map-side hash probe — measured 4× over the
+    * The surviving-node set is |V|-bounded, so it BROADCASTS and each
+    * restriction join is a map-side hash probe — measured 4× over a
     * keyed form at fixture scale (1.5 s vs 6.5 s at sf0.1, where 24
-    * sequential keyed-join shuffle stages are pure latency); past the
-    * broadcast regime the keyed variant SHUFFLE_HASH-hints both
-    * restriction joins (hint survives AQE) and checkpoints the keep
-    * set (referenced twice — unchecked, each reference replays the
-    * degree agg). Strategy agreement is pinned in OpsSpec. */
+    * sequential keyed-join shuffle stages are pure latency). */
   private[graft] def kcoreEdges(edges0: org.apache.spark.sql.DataFrame,
-      k: Int, rounds: Int, broadcastKeep: Boolean)
-      : org.apache.spark.sql.DataFrame = {
+      k: Int, rounds: Int): org.apache.spark.sql.DataFrame = {
     var edges = edges0.transform(Tables.ck)
     for (_ <- 1 to rounds) {
-      val keep0 = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
+      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .where(col("dg") >= k).select(col("src").as("node"))
-      val keep =
-        if (broadcastKeep) keep0 else keep0.transform(Tables.ck)
-      def side(df: org.apache.spark.sql.DataFrame) =
-        if (broadcastKeep) broadcast(df) else df.hint("shuffle_hash")
       edges = edges
-        .join(side(keep.select(col("node").as("src"))), "src")
-        .join(side(keep.select(col("node").as("dst"))), "dst")
+        .join(broadcast(keep.select(col("node").as("src"))), "src")
+        .join(broadcast(keep.select(col("node").as("dst"))), "dst")
         .select(col("src"), col("dst"))
         .transform(Tables.ck)
     }
@@ -974,25 +857,17 @@ object GraphOps {
   /** Frontier sizes for hops 1..`hops` of a BFS over `edges` from
     * `seed`. Each hop is ONE keyed join (frontier⋈edges) + one anti
     * join against the visited set — the standard BFS-on-MapReduce
-    * shape with the frontier as the moving side.
-    *
-    * `broadcastSets` is the same regime split as [[rankStep]]:
-    * frontier and visited are |V|-bounded, so they BROADCAST while
-    * ranks would (up to a few hundred million vertices — without the
-    * visited broadcast each hop pays a full shuffle of both anti-join
-    * sides); past that, the keyed variant SHUFFLE_HASH-hints both
-    * set joins — the hint survives AQE re-planning, the visited side
-    * builds the anti-join hash map per partition, and pairing with
-    * src-bucketed edges ([[tradeEdgesBkt]]) keeps the |E| side
-    * exchange-free exactly as in the co-partitioned PageRank.
-    * Strategy agreement is pinned in OpsSpec. */
+    * shape with the frontier as the moving side. Frontier and visited
+    * are |V|-bounded, so they BROADCAST, as the rank table does in
+    * [[rankStep]]: without the visited broadcast each hop pays a full
+    * shuffle of both anti-join sides. */
   private[graft] def bfsFrontiers(edges: org.apache.spark.sql.DataFrame,
-      seed: org.apache.spark.sql.DataFrame, hops: Int,
-      broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
+      seed: org.apache.spark.sql.DataFrame, hops: Int)
+      : org.apache.spark.sql.DataFrame = {
     var visited = seed
     var frontier = seed
     val sizes = (1 to hops).map { hop =>
-      frontier = Tables.ck(bfsHop(edges, frontier, visited, broadcastSets))
+      frontier = Tables.ck(bfsHop(edges, frontier, visited))
       visited = visited.unionByName(frontier)
       frontier.agg(count(lit(1)).as("frontier"))
         .select(lit(hop).as("hop"), col("frontier"))
@@ -1004,14 +879,11 @@ object GraphOps {
     * that are not in `visited` — extracted so GateSpec can pin the
     * round plan the per-round checkpoint hides. */
   private[graft] def bfsHop(edges: org.apache.spark.sql.DataFrame,
-      frontier: org.apache.spark.sql.DataFrame, visited: org.apache.spark.sql.DataFrame,
-      broadcastSets: Boolean): org.apache.spark.sql.DataFrame = {
-    def side(df: org.apache.spark.sql.DataFrame) =
-      if (broadcastSets) broadcast(df) else df.hint("shuffle_hash")
-    edges.join(side(frontier), col("src") === col("node"))
+      frontier: org.apache.spark.sql.DataFrame,
+      visited: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    edges.join(broadcast(frontier), col("src") === col("node"))
       .select(col("dst").as("node")).distinct()
-      .join(side(visited), Seq("node"), "left_anti")
-  }
+      .join(broadcast(visited), Seq("node"), "left_anti")
 
   /** [[tradeEdgesW]] written ONCE per (session, dir) as a table
     * BUCKETED on `src` — the static side of the CO-PARTITIONED rank
@@ -1106,18 +978,10 @@ object GraphOps {
     * sums of integer weights — no float anywhere, both engines agree
     * bit-for-bit. */
   private[graft] def ssspDist(edges: org.apache.spark.sql.DataFrame,
-      seed: org.apache.spark.sql.DataFrame, rounds: Int,
-      broadcastDist: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // The bfsFrontiers regime split, mechanically present (not just
-    // documented): the frontier-bounded distance table BROADCASTS
-    // while it fits an executor; past that the keyed variant
-    // SHUFFLE_HASH-hints the relax and frontier joins (the hint
-    // survives AQE re-planning) and pairs with src-bucketed edges so
-    // the |E| side stays exchange-free — the co-partitioned PageRank
-    // shape. Strategy agreement is pinned in OpsSpec.
-    // Broadcast vs keyed A/B at sf0.1 (tied): BUILD_NOTES.md.
-    def side(df: org.apache.spark.sql.DataFrame) =
-      if (broadcastDist) broadcast(df) else df.hint("shuffle_hash")
+      seed: org.apache.spark.sql.DataFrame, rounds: Int)
+      : org.apache.spark.sql.DataFrame = {
+    // The frontier-bounded distance table BROADCASTS, as bfsFrontiers'
+    // sets do; a keyed form tied with it at sf0.1 (BUILD_NOTES.md).
     // State = (node, dist, prev): prev is the node's distance BEFORE
     // the round (null when the round first reached it), derived FOR
     // FREE inside the round's one keyed aggregate — carried rows
@@ -1134,7 +998,7 @@ object GraphOps {
         .where(col("prev").isNull || col("dist") < col("prev"))
         .select(col("node"), col("dist"))
       state = edges
-        .join(side(frontier.select(col("node").as("src"), col("dist"))),
+        .join(broadcast(frontier.select(col("node").as("src"), col("dist"))),
           Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
           lit(null).cast("long").as("old"))
@@ -1453,16 +1317,15 @@ object GraphOps {
     // Bounded-hop BFS from the highest-degree node: frontier sizes
     // for hops 1..3 over the symmetrized trade graph — the iterative
     // frontier-expansion kernel (reachability, blast-radius, feature
-    // neighborhoods), via [[bfsFrontiers]] in its broadcast regime
-    // when the plan is distributed (frontier and visited sets
-    // are |V|-bounded). Hop count fixed at 3 so the plan is finite and the
-    // oracle unrollable.
+    // neighborhoods), via [[bfsFrontiers]], whose frontier and visited
+    // sets broadcast when the plan is distributed. Hop count fixed at
+    // 3 so the plan is finite and the oracle unrollable.
     "q_graph_bfs" -> ((s, d) => {
       import s.implicits._
       val edges = tradeEdges(s, d)
       val seed = tradeDeg(s, d).select($"src".as("node"), $"d".as("dg"))
         .orderBy($"dg".desc, $"node").limit(1).select($"node")
-      bfsFrontiers(edges, seed, 3, broadcastSets = true)
+      bfsFrontiers(edges, seed, 3)
     }),
 
     // HARMONIC CLOSENESS centrality (radius-3) for the top-4 hub
@@ -1475,11 +1338,9 @@ object GraphOps {
     // Harmonic form Σ 1/dist (Boldi–Vigna's axiom-clean variant) is
     // the bounded-radius-safe choice: classic closeness needs every
     // node reached. Frontier/visited are (k·|V|)-bounded: one
-    // partition under the small-plan rule, else broadcast (the
-    // bfsFrontiers regime split applies verbatim
-    // past a few hundred million rows: SHUFFLE_HASH + bucketed
-    // edges). Exactness of the 1e-4 floor: dist ∈ {1,2,3}, so the
-    // true harmonic sum is a multiple of 1/6 and sum·1e4 + 0.5 never
+    // partition under the small-plan rule, else broadcast, as in
+    // [[bfsFrontiers]]. Exactness of the 1e-4 floor: dist ∈ {1,2,3}, so
+    // the true harmonic sum is a multiple of 1/6 and sum·1e4 + 0.5 never
     // sits closer than 1/6·10⁴ᐨ¹ to a floor boundary.
     "q_graph_closeness" -> ((s, d) => {
       import s.implicits._
@@ -1576,21 +1437,14 @@ object GraphOps {
     // Connected-component census — the UNblocked-CC path that
     // q_dedup_cluster's block-local union-find explicitly cannot take
     // (no blocking key bounds a component there; here components span
-    // the whole graph). The declared engine is the LARGE-STAR /
-    // SMALL-STAR scheme ([[ccStar]]): O(log |V|) rounds at LINEAR
-    // edges with no broadcast required — tools/CCScale measured it
-    // faster or tied in EVERY regime, including this fixture (8.4× on
-    // diameter-128 chains), so it carries the flagship name. Plain
-    // min-label propagation ([[ccLabels]]) remains the LAW-TESTED
-    // variant: OpsSpec pins its agreement with ccStar and with a
-    // driver-side union-find, and the exact-closure oracle here is
-    // byte-identical to the one the plain engine passed in rounds
-    // 0–8 — the engine swap is therefore differentially proven
-    // semantics-free (the pagerank/pagerank_part pattern, applied to
-    // algorithms). A fixpoint of either update IS the exact component
-    // labeling, so correctness never depends on round count. Graph:
-    // the shared [[ccEdges]] fixture; labels via the memoized
-    // [[ccStarLabels]] so the census and the size-distribution row
+    // the whole graph). The engine is the LARGE-STAR / SMALL-STAR
+    // scheme ([[ccStar]]): O(log |V|) rounds at LINEAR edges with no
+    // broadcast required. Its references are independent of it: the
+    // exact-closure oracle here, and OpsSpec's driver-side union-find
+    // and known-answer path. A fixpoint of the update IS the exact
+    // component labeling, so correctness never depends on round
+    // count. Graph: the shared [[ccEdges]] fixture; labels via the
+    // memoized [[ccStarLabels]] so the census and the size-distribution row
     // below share ONE converged loop.
     "q_graph_cc" -> ((s, d) => {
       import s.implicits._
@@ -1863,7 +1717,7 @@ object GraphOps {
       val e0 = ccEdges(s, d)
       val sym = e0.unionByName(
         e0.select($"dst".as("src"), $"src".as("dst")))
-      kcoreEdges(sym, k = 2, rounds = 12, broadcastKeep = true)
+      kcoreEdges(sym, k = 2, rounds = 12)
         .groupBy($"src").agg(count(lit(1)).as("dg"))
         .select($"src".as("node"), $"dg")
         .orderBy($"node")

@@ -160,13 +160,9 @@ object Streamy {
     // is one double per user.
     // transformWithState requires the RocksDB state store provider
     // (the HDFS-backed default can't serve the new API — batch runs
-    // fail CANNOT_LOAD_STATE_STORE) → child session, the
-    // q_stream_rocksdb isolation pattern.
+    // fail CANNOT_LOAD_STATE_STORE) → the [[rocksdb]] child session.
     "q_stream_tws" -> ((s0, d) => {
-      val s = Tables.childSession(s0, "tws")(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state" +
-            ".RocksDBStateStoreProvider"))
+      val s = rocksdb(s0)
       import s.implicits._
       val evs = t(s, d, "events")
         .select($"user_id", $"event_id", $"ts", $"value")
@@ -186,10 +182,7 @@ object Streamy {
     // and pinned cross-batch in StreamySpec. Same RocksDB child
     // session as q_stream_tws. One shuffle keyed on user_id.
     "q_stream_tws_list" -> ((s0, d) => {
-      val s = Tables.childSession(s0, "twslist")(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state" +
-            ".RocksDBStateStoreProvider"))
+      val s = rocksdb(s0)
       import s.implicits._
       val evs = t(s, d, "events")
         .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
@@ -362,19 +355,25 @@ object Streamy {
     // (100 TB streams: state is bounded by |keys|, but |keys| can be
     // billions — RocksDB spills to local disk and checkpoints
     // incrementally instead of snapshotting the full map). Declared in
-    // a CHILD session (shared context, own conf) so the provider
-    // choice can't leak into other queries; the oracle equality proves
+    // the [[rocksdb]] child session so the provider choice can't leak
+    // into other queries; the oracle equality proves
     // the provider swap is semantics-free. The provider actually being
     // RocksDB for this conf is asserted via query progress in
     // StreamySpec.
-    "q_stream_rocksdb" -> ((s0, d) => {
-      val s = Tables.childSession(s0, "rocksdb")(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state" +
-            ".RocksDBStateStoreProvider"))
-      sinkRun(s, d)
-    }),
+    "q_stream_rocksdb" -> ((s0, d) => sinkRun(rocksdb(s0), d)),
   )
+
+  /** The one child session (shared context, own conf) of the rows
+    * that run on the RocksDB state store provider: q_stream_tws,
+    * q_stream_tws_list and q_stream_rocksdb. None of them sets a
+    * query name or a temp view, and q_stream_rocksdb's checkpoint
+    * directory is fresh per call, so they share it safely. */
+  private def rocksdb(s0: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    Tables.childSession(s0, "rocksdb")(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state" +
+          ".RocksDBStateStoreProvider"))
 
   /** The q_stream_sink pipeline (real AvailableNow run: file source →
     * update-mode keyed count → foreachBatch overwrite-by-batchId →

@@ -120,9 +120,8 @@ class GateSpec extends GraftSuite {
       val deg = GraphOps.tradeDeg(s, sf001)
       val seed = Tables.ck(deg.orderBy($"d".desc, $"src").limit(1)
         .select($"src".as("node")))
-      val hop1 = Tables.ck(GraphOps.bfsHop(edges, seed, seed, broadcastSets = true))
-      val hop2 = ranPlan(GraphOps.bfsHop(edges, hop1, seed.unionByName(hop1),
-        broadcastSets = true))
+      val hop1 = Tables.ck(GraphOps.bfsHop(edges, seed, seed))
+      val hop2 = ranPlan(GraphOps.bfsHop(edges, hop1, seed.unionByName(hop1)))
       assert(!hop2.contains("Exchange"), s"BFS hop 2:\n$hop2")
     }
     assert(gates.nonEmpty && gates.forall(_.fired), gates)

@@ -1180,17 +1180,11 @@ class OpsSpec extends GraftSuite {
         .distinct()
       val sym = big.unionByName(
         big.select(col("dst").as("src"), col("src").as("dst")))
-      def core(r: Int, bcast: Boolean): Set[(String, String)] =
-        ops.GraphOps.kcoreEdges(sym, 2, r, broadcastKeep = bcast).collect()
+      def core(r: Int): Set[(String, String)] =
+        ops.GraphOps.kcoreEdges(sym, 2, r).collect()
           .map(x => (x.getString(0), x.getString(1))).toSet
-      val c12 = core(12, bcast = true)
-      assert(c12 === core(13, bcast = true),
+      assert(core(12) === core(13),
         "12 peel rounds must reach the sf0.1 fixpoint")
-      // Strategy agreement (the bfsFrontiers pattern): the keyed
-      // SHUFFLE_HASH variant — the past-broadcast-regime path — must
-      // land the identical core.
-      assert(c12 === core(12, bcast = false),
-        "broadcast and keyed peel strategies must agree")
     }
   }
 
@@ -1951,40 +1945,19 @@ class OpsSpec extends GraftSuite {
     assert(rr > rb, s"refined recall@3 ($rr) must beat cell-pass ($rb)")
   }
 
-  test("ccLabels: plain walks the diameter, doubling takes log rounds, labels agree") {
-    // A 12-node path has diameter 11: the min label must walk the
-    // whole chain under plain propagation (~11 rounds — one round of
-    // min-with-neighbors would stop far short), while path doubling
-    // covers 2^k hops by round k and must land the SAME labels in
-    // ~log2(11) rounds.
+  test("ccStar labels a 12-node path n00 in log rounds") {
+    // A 12-node path has diameter 11, where one-hop label propagation
+    // needs ~11 rounds; the star scheme must contract it to its
+    // minimum in O(log) rounds. Known answer: one component, label
+    // n00 on all 12 nodes. ccStar takes the directed edge half (it
+    // canonicalizes internally).
     import spark.implicits._
-    val e0 = (0 until 11).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
-      .toDF("src", "dst")
-    val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
-    def labelsOf(doubling: Boolean): (Seq[(String, String)], Int) = {
-      val (lab, rounds) = ops.GraphOps.ccLabels(edges, doubling)
-      (lab.collect().map(r => (r.getString(0), r.getString(1)))
-        .sorted.toSeq, rounds)
-    }
-    val (plain, plainSteps) = labelsOf(doubling = false)
-    val (doubled, doubledSteps) = labelsOf(doubling = true)
-    assert(plain.forall(_._2 == "n00"), s"all labels must reach n00: $plain")
-    assert(plain === doubled, "variants must produce identical labels")
-    // Steps are counted at batch-of-2 granularity (up to one batch of
-    // overshoot past the fixpoint): the 11-hop walk lands at 12-16.
-    assert(plainSteps >= 11 && plainSteps <= 16,
-      s"plain must walk a diameter-11 path (~11 steps), took $plainSteps")
-    assert(doubledSteps <= 8,
-      s"doubling must converge in ~log2(11) steps, took $doubledSteps")
-    // The star scheme must land the SAME labels in log-ish rounds —
-    // on a path, plain propagation's worst case — WITHOUT the
-    // doubling variant's edge composition. ccStar takes the directed
-    // edge half (it canonicalizes internally).
-    val (starLab, starRounds) =
-      ops.GraphOps.ccStar(e0.select($"src".as("u"), $"dst".as("v")))
+    val (starLab, starRounds) = ops.GraphOps.ccStar(
+      (0 until 11).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("u", "v"))
     val star = starLab.collect().map(r => (r.getString(0), r.getString(1)))
       .sorted.toSeq
-    assert(star === plain, "star labels must equal propagation labels")
+    assert(star === (0 until 12).map(i => (f"n$i%02d", "n00")),
+      s"all labels must reach n00: $star")
     assert(starRounds <= 8,
       s"large/small-star must converge in O(log) rounds, took $starRounds")
   }
@@ -2264,7 +2237,7 @@ class OpsSpec extends GraftSuite {
     }
   }
 
-  test("bfsFrontiers keyed (shuffle_hash) strategy agrees with broadcast, and plans no broadcast") {
+  test("bfsFrontiers counts the hop frontiers of a star-plus-chain graph") {
     import spark.implicits._
     // Star-plus-chain: hop 1 = the 4 spokes, hop 2 = {x2} (the chain
     // continues, a/b/c dead-end back into visited h), hop 3 = {x3} —
@@ -2275,23 +2248,9 @@ class OpsSpec extends GraftSuite {
     val edges = edges0.unionByName(
       edges0.select($"dst".as("src"), $"src".as("dst")))
     val seed = Seq("h").toDF("node")
-    def run(b: Boolean) = ops.GraphOps.bfsFrontiers(edges, seed, 3, b)
-    val bc = run(true).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val ky = run(false).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(bc === Seq((1, 4L), (2, 1L), (3, 1L)))
-    assert(bc === ky, "set-join strategy must be semantics-free")
-    // The keyed variant must not silently re-broadcast: one hop's
-    // frontier expansion plans ShuffledHashJoin on both set joins.
-    val probe = edges.join(seed.hint("shuffle_hash"),
-        $"src" === $"node")
-      .select($"dst".as("node")).distinct()
-      .join(seed.hint("shuffle_hash"), Seq("node"), "left_anti")
-    probe.collect()
-    val p = probe.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(!p.contains("BroadcastExchange"),
-      s"hinted set joins must stay keyed:\n$p")
-    assert("ShuffledHashJoin".r.findAllIn(p).size >= 2, p)
+    val got = ops.GraphOps.bfsFrontiers(edges, seed, 3).collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(got === Seq((1, 4L), (2, 1L), (3, 1L)))
   }
 
   test("q_win_anomaly scores against a frame that excludes the current row") {
@@ -3190,13 +3149,6 @@ class OpsSpec extends GraftSuite {
     val r1 = ops.GraphOps.ssspDist(edf, seedDf, ops.GraphOps.SsspRounds + 1)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(r0 === r1, s"${ops.GraphOps.SsspRounds} rounds must reach the fixpoint")
-    // Regime-split agreement (the kcore/bfsFrontiers discipline): the
-    // keyed SHUFFLE_HASH variant — the shape that survives a distance
-    // table too big to broadcast — must compute the identical result.
-    val keyed = ops.GraphOps
-      .ssspDist(edf, seedDf, ops.GraphOps.SsspRounds, broadcastDist = false)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(keyed === r0, "broadcast and keyed relaxation must agree")
   }
 
   test("q_graph_louvain: micro-graph move recount + Q non-decreasing " +

@@ -495,7 +495,7 @@ class PropertySpec extends GraftSuite {
         val lpa = ops.GraphOps.lpaLabels(edges, 4)
           .collect().map(_.toString).sorted.toSeq
         val seed = ops.Tables.ck(Seq(sym.head._1).toDF("node"))
-        val bfs = ops.GraphOps.bfsFrontiers(edges, seed, 3, broadcastSets = true)
+        val bfs = ops.GraphOps.bfsFrontiers(edges, seed, 3)
           .collect().map(_.toString).toSeq
         val deg = ops.Tables.ck(edges.groupBy($"src").agg(count(lit(1)).as("d")))
         val n = deg.count()
